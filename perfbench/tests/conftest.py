@@ -1,0 +1,7 @@
+import os
+import sys
+
+# the repository root, so `perfbench` and `honas_spark` import as packages
+sys.path.insert(
+    0, os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+)
