@@ -98,21 +98,6 @@ def tokens(col: Column) -> Column:
     return F.filter(F.split(col, r"\s+"), lambda t: t != "")
 
 
-def token_count(col: Column) -> Column:
-    return F.size(tokens(col))
-
-
-def bpe_ish_piece_count(col: Column) -> Column:
-    """Token-count proxy: split on word/number/punct boundaries (a
-    BPE-style pre-tokenizer regex), counting the non-empty pieces."""
-    return F.size(
-        F.filter(
-            F.split(col, r"(?=[^a-zA-Z0-9])|(?<=[^a-zA-Z0-9])"),
-            lambda t: (t != "") & (t != " "),
-        )
-    )
-
-
 def _whole_token_pattern(words) -> str:
     """Regex that matches exactly the tokens() elements equal to one of
     `words`: the width-1 lookarounds (?<!\\S)/(?!\\S) pin the match to

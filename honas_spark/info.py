@@ -42,21 +42,6 @@ def sizing_advice(n_uniques: int, headroom: float = 1.10) -> list[dict]:
     return out
 
 
-def advice_for_sketch_table(
-    sketch_df: DataFrame, spec: SketchSpec, group_cols: Sequence[str]
-) -> list[dict]:
-    """Per-window sizing advice from the HLL uniques estimate (the
-    gather dry-run re-expressed over the sketch table)."""
-    stats = finalize_stats(sketch_df, spec, group_cols).collect()
-    out = []
-    for r in stats:
-        for adv in sizing_advice(r["est_items"]):
-            adv = dict(adv)
-            adv["group"] = tuple(r[c] for c in group_cols)
-            out.append(adv)
-    return out
-
-
 def _optimal_k_ref(n: int, m: int) -> int:
     """The reference's optimal_k (src/advice.c:37-45) — NOTE `m / n` is C
     INTEGER division (both args int), which is why the README example

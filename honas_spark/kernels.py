@@ -165,12 +165,6 @@ def hashes_to_limbs(hashes, hash_len: int = 32) -> np.ndarray:
     return arr.reshape(-1, hash_len // 4).copy()
 
 
-def u64_to_limbs(vals: np.ndarray) -> np.ndarray:
-    """(N,) uint64 -> (N, 2) uint32 little-endian limbs."""
-    vals = np.ascontiguousarray(vals, dtype="<u8")
-    return vals.view("<u4").reshape(-1, 2).copy()
-
-
 # ---------------------------------------------------------------------------
 # Per-filter hash transform (honas_state.c:231-244): for filter_index i > 0,
 # multiply each 64-bit lane of the hash by (2i+1), wrapping mod 2^64, so each

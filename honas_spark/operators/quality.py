@@ -48,13 +48,6 @@ def _ngrams_from_toks(toks_col, n: int = 2):
     ).otherwise(F.array().cast("array<string>"))
 
 
-def ngrams(col, n: int = 2):
-    """Word n-grams of a text column WITH multiplicity (unlike
-    dedup.shingles, which deduplicates) — repetition counting needs the
-    duplicates.  Empty array for docs with < n tokens."""
-    return _ngrams_from_toks(tokens(col), n)
-
-
 def _gram_bloom_build(bgrams: DataFrame, fpr: float):
     """Distributed Bloom build over an eval-gram hash column ``x``
     (int64): per-partition partial bitsets (sparse-packed with the
@@ -629,15 +622,18 @@ def gopher_rules(
     # dominated this operator's runtime:
     #   n_words   = count of \S+ runs
     #   sum_len   = chars left after deleting every \s run
-    #   n_alpha   = runs containing [a-zA-Z]: the regex scanner emits
-    #               exactly one non-overlapping \S*[a-zA-Z]\S* match
-    #               per such run (greedy \S* consumes the whole run;
-    #               \S cannot cross whitespace)
+    #   n_alpha   = n_words minus the runs with no [a-zA-Z]: the
+    #               lookarounds pin [^a-zA-Z\s]+ to whole runs, so each
+    #               alpha-free run matches once and is scanned once (a
+    #               direct \S*[a-zA-Z]\S* count backtracks
+    #               quadratically on long alpha-free runs)
     #   n_stop    = whole-token stopword matches, delimited by the
     #               width-1 lookarounds (?<!\S) / (?!\S)
     n_words = F.regexp_count(c, F.lit(r"\S+"))
     sum_len = F.length(F.regexp_replace(c, r"\s+", ""))
-    n_alpha = F.regexp_count(c, F.lit(r"\S*[a-zA-Z]\S*"))
+    n_alpha = n_words - F.regexp_count(
+        c, F.lit(r"(?<!\S)[^a-zA-Z\s]+(?!\S)")
+    )
     # non-overlapping occurrence counts via replace-shrinkage — both
     # engines replace greedily left-to-right, so the counts agree
     n_symbols = (

@@ -312,9 +312,11 @@ def build_sketches(
             # grouped scatter: ONE hll/cms kernel call covers every
             # buffered group (bit-identical — register max / counter
             # add commute), instead of paying the numpy fixed call
-            # cost 3x per group.  Fresh states adopt the matrix row
-            # as a view; a state that already absorbed an earlier
-            # bulk flush folds its row in with the same merge algebra.
+            # cost 3x per group.  Fresh states adopt a copy of their
+            # matrix row (a view would pin the whole scratch matrix
+            # for the rest of the partition); a state that already
+            # absorbed an earlier bulk flush folds its row in with the
+            # same merge algebra.
             # Guarded by a byte cap so a pathological group count
             # cannot allocate an oversized scratch matrix.
             hll_mats = cms_mat = None
@@ -353,8 +355,8 @@ def build_sketches(
                         K.hll_add(st.hll_items, item_h64[s:e])
                         K.hll_add(st.hll_clients, ch[s:e])
                     elif fresh:
-                        st.hll_items = hll_mats[0, gi]
-                        st.hll_clients = hll_mats[1, gi]
+                        st.hll_items = hll_mats[0, gi].copy()
+                        st.hll_clients = hll_mats[1, gi].copy()
                     else:
                         np.maximum(
                             st.hll_items, hll_mats[0, gi],
@@ -368,7 +370,7 @@ def build_sketches(
                     if cms_mat is None:
                         K.cms_add(st.cms, item_h64[s:e])
                     elif fresh:
-                        st.cms = cms_mat[gi]
+                        st.cms = cms_mat[gi].copy()
                     else:
                         st.cms += cms_mat[gi]
                 if vals is not None:

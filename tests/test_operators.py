@@ -1818,6 +1818,42 @@ def test_gopher_rules_integer_verdicts(spark):
     assert got[5][4] is False and got[5][0] is False   # mean length
 
 
+def test_gopher_alpha_count_linear_on_long_alpha_free_tokens(spark):
+    """n_alpha_words counts whitespace tokens holding an ASCII letter,
+    exactly, and stays linear on a long alpha-free token (a hex or
+    base64 blob in a code corpus) where a direct \\S*[a-zA-Z]\\S* count
+    backtracks quadratically (16.9 s for one 40k-char token)."""
+    import re
+    import time
+
+    from honas_spark.operators.quality import gopher_rules
+
+    texts = [
+        "the quick brown fox",
+        "0x1f 42 a1 1a 1a1 -- ... #",
+        "\tmixed\nwhite  space\r\n 123\x0b456 z",
+        "caf\u00e9 \u00e9t\u00e9 \u00a0 na\u00efve 99",
+        "",
+        "   ",
+        "0" * 40_000 + " abc " + "f00d" * 10_000 + " 12 x",
+    ]
+    docs = spark.createDataFrame(
+        list(enumerate(texts)), "doc_id long, text string"
+    )
+    gopher_rules(docs.limit(2), "doc_id", "text").collect()  # warm-up
+    t0 = time.perf_counter()
+    got = {
+        r["doc_id"]: (r["n_words"], r["n_alpha_words"])
+        for r in gopher_rules(docs, "doc_id", "text").collect()
+    }
+    assert time.perf_counter() - t0 < 10
+    # Java's \s is ASCII whitespace, the same set re.ASCII uses
+    for i, t in enumerate(texts):
+        toks = re.findall(r"\S+", t, re.ASCII)
+        want = sum(bool(re.search("[a-zA-Z]", w)) for w in toks)
+        assert got[i] == (len(toks), want), (i, got[i])
+
+
 def test_pq_roundtrip_recall_and_compression(spark):
     """PQ codes: encode is deterministic, ADC top-k recovers the exact
     neighbors on well-separated clusters, and the code width is m."""

@@ -391,3 +391,70 @@ def test_grouped_scatter_and_u8_fastpath_bit_identical():
     # and the pack round-trips through the unchanged decoder
     sp = K.hll_pack(mats[0])
     assert np.array_equal(K.hll_unpack(sp), mats[0])
+
+
+def test_multi_flush_states_own_their_arrays(spark, monkeypatch):
+    """States created by a bulk flush's grouped scatter own their HLL and
+    CMS arrays (a view would pin the flush's whole scratch matrix), and
+    a build over several flushes stays bit-identical to per-group
+    SketchState.update."""
+    import numpy as np
+    import pandas as pd
+
+    from honas_spark import SketchSpec, SketchState
+    from honas_spark.operators import sketch_agg as sa
+
+    spec = SketchSpec(m_bits=1 << 14, k=4, num_filters=2,
+                      filters_per_user=1, cms_width=256)
+    schema = "g int, key_sha binary, ch long"
+    tiny = spark.createDataFrame([(0, b"\0" * 32, 0)], schema)
+    fns = []
+    orig_map = type(tiny).mapInPandas
+
+    def spy(self, fn, *a, **kw):
+        fns.append(fn)
+        return orig_map(self, fn, *a, **kw)
+
+    monkeypatch.setattr(type(tiny), "mapInPandas", spy)
+    seen = []
+    orig_pdf = sa._states_to_pdf
+    monkeypatch.setattr(
+        sa, "_states_to_pdf",
+        lambda states, gc: seen.append(states) or orig_pdf(states, gc),
+    )
+    sa.build_sketches(tiny, spec, ["g"], client_hash_col="ch")
+    build_partials = fns[0]
+
+    # 400k rows in 50k-row batches: bulk flushes at 150k, 300k and the
+    # end; groups 30-39 first appear in the second flush
+    rng = np.random.default_rng(5)
+    n = 400_000
+    g = np.where(
+        np.arange(n) < 200_000,
+        rng.integers(0, 30, n), rng.integers(0, 40, n),
+    ).astype(np.int32)
+    raw = rng.bytes(32 * n)
+    keys = [raw[i:i + 32] for i in range(0, 32 * n, 32)]
+    ch = rng.integers(0, 1 << 62, 50)[rng.integers(0, 50, n)]
+    pdf = pd.DataFrame({"g": g, "key_sha": keys, "ch": ch})
+    batches = [pdf.iloc[i:i + 50_000] for i in range(0, n, 50_000)]
+    out = pd.concat(list(build_partials(iter(batches))), ignore_index=True)
+
+    (states,) = seen
+    assert len(states) == 40
+    for st in states.values():
+        for arr in (st.hll_items, st.hll_clients, st.cms, st.filters):
+            assert arr.base is None
+
+    assert len(out) == 40
+    for row in out.itertuples(index=False):
+        sel = g == row.g
+        ref = SketchState(spec)
+        ref.update(
+            [k for k, s in zip(keys, sel) if s],
+            client_hashes=ch[sel].view(np.uint64),
+        )
+        want = ref.to_fields()
+        for c in ("filters", "hll_items", "hll_clients", "cms"):
+            assert bytes(getattr(row, c)) == want[c], (row.g, c)
+        assert row.n_rows == want["n_rows"]
