@@ -1946,10 +1946,9 @@ def _q_entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_hampel_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hampel rolling-median/MAD spike detection
     (operators/robust.py): per-user event series, centered 5-row
-    frames via explode(sequence(rn-2, rn+2)) + two grouped medians —
-    no per-key sort-and-collect, so a hot key never serializes one
-    task.  Medians are order statistics: exact cross-engine including
-    the strict z*MAD flag."""
+    frames collected by one window pass, median and MAD as in-array
+    order statistics.  Medians are order statistics: exact
+    cross-engine including the strict z*MAD flag."""
     from honas_spark.operators.robust import hampel_filter
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")

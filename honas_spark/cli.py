@@ -154,9 +154,7 @@ def _load_sketch_table(args, spark):
         import datetime as _dt
 
         from .sources.hsfile import import_hs_state
-        from .operators.sketch_agg import (
-            SKETCH_VALUE_FIELDS, _states_row_pdf,
-        )
+        from .operators.sketch_agg import SKETCH_VALUE_FIELDS, _states_to_pdf
 
         spec, st, h = import_hs_state(args.state)
         # Fresh/empty states have first_request=0 -> first_ts is None;
@@ -167,7 +165,7 @@ def _load_sketch_table(args, spark):
             ws = _dt.datetime.utcfromtimestamp(
                 int(h.get("period_begin", 0) or 0)
             )
-        pdf = _states_row_pdf({"window_start": [ws]}, st)
+        pdf = _states_to_pdf({(ws,): st}, ["window_start"])
         schema = f"window_start timestamp, {SKETCH_VALUE_FIELDS}"
         return spec, spark.createDataFrame(pdf, schema=schema), [
             "window_start"

@@ -31,6 +31,10 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .common import duckdb_round
 
+# largest accepted hampel_filter half_window: every row carries its own
+# (2k+1)-value frame, so k bounds per-row memory
+_MAX_HALF_WINDOW = 1_000
+
 
 def mad_outliers(
     df: DataFrame,
@@ -100,27 +104,26 @@ def hampel_filter(
     4dp, is_outlier int).  Exact cross-engine: medians are order
     statistics and every other op is per-row.
 
-    Scale shape: NO per-key sort-and-collect.  A row_number per key
-    (one shuffle, same as any sessionization) places each row, then
-    explode(sequence(rn-k, rn+k)) fans every row out to the 2k+1 frames
-    it participates in — two grouped aggregations over (key, center)
-    compute frame medians and frame MADs, and one final join tags the
-    center rows.  Cost is (2k+1)x rows through hash aggregations,
-    independent of key skew (a million-row key is fine: frames are
-    size-bounded, nothing sorts the whole key in one task)."""
+    Scale shape: one window pass.  Rows shuffle once on key_cols and
+    sort within the key by order_cols; `collect_list` over the centered
+    rows-frame then gives each row its own frame, and the median and MAD
+    are in-array order statistics on it — no explode, no grouped
+    aggregation, no join.  Each row holds 2*(2k+1) doubles (the frame
+    and its absolute deviations), so memory per row is bounded by
+    half_window, which must lie in [0, 1000] (ValueError otherwise).
+    A hot key still sorts in one task, like any row_number."""
     g = list(key_cols)
     o = list(order_cols)
     k = int(half_window)
+    if not 0 <= k <= _MAX_HALF_WINDOW:
+        raise ValueError(
+            f"half_window must be in [0, {_MAX_HALF_WINDOW}], got {k}"
+        )
 
-    # ONE window pass: collect_list over the CENTERED rows-frame gives
-    # each row its own 2k+1 (edge-truncated) frame directly — no
-    # (2k+1)x explode fan-out, no grouped median aggregations, no
-    # joins.  The frame is tiny (2k+1 values), so the median and MAD
-    # are in-array order statistics; the expressions below reproduce
-    # Spark's Percentile(0.5) interpolation bit-for-bit (odd n: the
-    # middle pick; even n: lower*0.5 + upper*0.5 — the exact double
-    # tree Percentile evaluates), so results are identical to the
-    # former F.median-based plan.
+    # the expressions below reproduce Spark's Percentile(0.5)
+    # interpolation bit-for-bit (odd n: the middle pick; even n:
+    # lower*0.5 + upper*0.5 — the exact double tree Percentile
+    # evaluates), so results equal an F.median-based plan.
     w = (
         Window.partitionBy(*g)
         .orderBy(*o)

@@ -13,16 +13,14 @@ as a two-phase Spark aggregation designed for 100 TB inputs:
       (This is the explicit two-phase partial aggregation the survey calls
       for — pandas GROUPED_AGG UDAFs cannot spill or tree-merge partials.)
 
-  Phase 2 (tree merge):
-      .groupBy(group_cols).applyInPandas(merge_partials) — reduces the few
-      partial rows per group with the CRDT algebra (bitwise OR / register
+  Phase 2 (merge):
+      .repartition(group_cols).mapInPandas(_merge_by_group) — hash
+      partitioning brings every partial row of a group into one task,
+      which reduces them with the CRDT algebra (bitwise OR / register
       max / counter add; reference merge src/honas_state.c:568-611).
       Associativity (property-tested) makes the merge order irrelevant.
-
-An optional `salt_partitions` pre-repartition spreads *input* rows evenly
-before phase 1 when the source partitioning itself is pathological (e.g.
-one parquet file holding one giant repo) — correctness is unaffected
-because the algebra is idempotent/commutative.
+      mode="shuffle_keys" without salt skips this phase: its
+      pre-repartition already leaves exactly one partial per group.
 
 Window rotation (honas gather.c:899-920, 1302-1351) is expressed as
 epoch-aligned tumbling windows: `F.window(ts, spec.window)` — identical
@@ -33,7 +31,6 @@ re-aggregation of the sketch table itself via `rollup_sketches`.
 
 from __future__ import annotations
 
-import math
 from typing import Iterator, Optional, Sequence
 
 import numpy as np
@@ -49,6 +46,12 @@ SKETCH_VALUE_FIELDS = (
     "filters binary, hll_clients binary, hll_items binary, cms binary,"
     " kll binary, n_rows long, first_ts timestamp, last_ts timestamp"
 )
+
+# cap on the build's grouped-scatter scratch (HLL + CMS matrices of one
+# chunk of groups): a flush scatters its groups in chunks under this many
+# bytes, so a pathological group count never allocates an unbounded
+# (groups x registers) buffer
+_SCATTER_MAX_BYTES = 256 * 1024 * 1024
 
 STATS_FIELDS = (
     "total_bits_set long, est_items long, est_clients long,"
@@ -124,11 +127,9 @@ def build_sketches(
     client_col: Optional[str] = None,
     ts_col: Optional[str] = None,
     value_col: Optional[str] = None,
-    salt_partitions: Optional[int] = None,
     mode: str = "map_combine",
     salt: Optional[int] = None,
     client_hash_col: Optional[str] = None,
-    distinct_keys: bool = False,
     components: Optional[frozenset] = None,
 ) -> DataFrame:
     """Aggregate keyed rows into one sketch row per group.
@@ -161,28 +162,15 @@ def build_sketches(
     CMS-only or HLL-only aggregation skips the per-key Bloom offset
     derivation entirely (see SketchState.update); unused components
     merge as zeros.
-
-    distinct_keys: drop duplicate (group, client, key) rows before the
-    build — the Spark-native form of the reference's proposed LRU front
-    cache (README.md:856-878).  Bloom bitsets, both HLLs and the
-    timestamp/n_rows counters are EXACTLY unchanged (set-idempotent
-    inserts; ts stats aggregate the raw df) while shuffle volume and
-    Python-side work shrink by the duplication factor.  Only the CMS
-    shifts meaning from occurrence-frequency to document-frequency (and
-    KLL sees distinct rows) — leave False when those are in use.
     """
     group_cols = list(group_cols)
     group_ddl = _group_fields_ddl(df, group_cols)
     out_schema = f"{group_ddl}, {SKETCH_VALUE_FIELDS}"
+    comp = SketchState.ALL_COMPONENTS if components is None else components
 
-    # timestamp stats (P11: first/last request + request count): with
-    # distinct_keys=False the slim Arrow pass already visits every raw
-    # row, so the ts column rides along (+8 bytes/row) and the stats
-    # fold per group inside the SAME pass — one scan of the input, not
-    # two.  With distinct_keys=True the stats must aggregate the RAW
-    # df while the build sees deduped rows, so they stay a separate
-    # JVM hash aggregate stitched back with a broadcast join.
-    inline_ts = bool(ts_col) and not distinct_keys
+    # timestamp stats (P11: first/last request + request count) fold per
+    # group inside the same Arrow pass that builds the sketches: the ts
+    # column rides along (+8 bytes/row), so the input is scanned once
     cols = group_cols + [key_sha_col]
     if client_hash_col:
         cols.append(client_hash_col)
@@ -190,12 +178,9 @@ def build_sketches(
         cols.append(client_col)
     if value_col:
         cols.append(value_col)
-    if inline_ts and ts_col not in cols:
+    if ts_col and ts_col not in cols:
         cols.append(ts_col)
     slim = df.select(*cols)
-    if distinct_keys:
-        dd_cols = [c for c in cols if c != value_col]
-        slim = slim.drop_duplicates(dd_cols)
     if mode == "shuffle_keys":
         if salt:
             slim = slim.withColumn(
@@ -203,10 +188,6 @@ def build_sketches(
             ).repartition(*group_cols, "_salt").drop("_salt")
         else:
             slim = slim.repartition(*group_cols)
-    elif salt_partitions:
-        # spread pathological input partitioning; idempotent algebra makes
-        # any row placement correct
-        slim = slim.repartition(salt_partitions)
 
     # total buffered-row cap between bulk flushes: bounds worker
     # memory by TOTAL rows (the previous per-GROUP cap bounded no
@@ -217,10 +198,12 @@ def build_sketches(
     # every ~128k rows, while partitions at or below the cap behave
     # identically (single end-of-stream flush)
     bulk_flush_rows = 131_072
-    # cap on the grouped-scatter scratch matrices (per component):
-    # above it the bulk flush falls back to per-group adds rather
-    # than allocate an unbounded (groups x registers) buffer
-    _SCATTER_MAX_BYTES = 256 * 1024 * 1024
+    # groups per grouped-scatter chunk: their HLL + CMS scratch
+    # matrices stay under _SCATTER_MAX_BYTES
+    group_scratch = (2 * K.HLL_REGISTERS if "hll" in comp else 0) + (
+        spec.cms_bytes if "cms" in comp else 0
+    )
+    scatter_groups = max(1, _SCATTER_MAX_BYTES // max(1, group_scratch))
 
     def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # buffer WHOLE Arrow batches and group once per bulk flush:
@@ -243,8 +226,9 @@ def build_sketches(
             codes + stable argsort), the hash limbs, the filter-subset
             selectors and ONE bloom_offsets call per filter cover all
             groups at once (rows are independent, so per-row results
-            are bit-identical), and only the cheap per-group scatters
-            (bitset OR, HLL/CMS/KLL adds on contiguous segments)
+            are bit-identical); HLL/CMS scatter in a few chunks of
+            groups, and only the cheap per-group folds (bitset OR,
+            register max, counter add, KLL adds on contiguous segments)
             remain per group.  The stable sort keeps within-group row
             order — and therefore KLL ingestion order — at arrival
             order, exactly what a per-group fold would see."""
@@ -258,11 +242,6 @@ def build_sketches(
             )
             pending = []
             pending_rows = 0
-            comp = (
-                SketchState.ALL_COMPONENTS
-                if components is None
-                else components
-            )
             gb = big.groupby(group_cols, sort=False, dropna=False)
             gnum = gb.ngroup().to_numpy()
             G = int(gnum.max()) + 1
@@ -270,13 +249,15 @@ def build_sketches(
             codes = gnum[order]
             seg = np.searchsorted(codes, np.arange(G + 1))
             gcol_arrays = {c: big[c].to_numpy() for c in group_cols}
-            groups = [
-                na_safe_key(tuple(
+            sts = []
+            for g in range(G):
+                gk = na_safe_key(tuple(
                     gcol_arrays[c][order[seg[g]]] for c in group_cols
                 ))
-                for g in range(G)
-            ]
-            n_all = len(big)
+                st = states.get(gk)
+                if st is None:
+                    st = states[gk] = SketchState(spec)
+                sts.append(st)
             limbs = item_h64 = None
             if comp & {"bloom", "hll", "cms"}:
                 limbs = K.hashes_to_limbs(
@@ -293,14 +274,14 @@ def build_sketches(
                     big[client_col].to_numpy()[order]
                 )
             else:
-                ch = np.zeros(n_all, dtype=np.uint64)
+                ch = np.zeros(len(big), dtype=np.uint64)
             vals = (
                 big[value_col].to_numpy(dtype=np.float64)[order]
                 if value_col and "kll" in comp
                 else None
             )
             firsts = lasts = None
-            if inline_ts:
+            if ts_col:
                 # one vectorized skipna min/max per flush (agg row
                 # order == ngroup numbering under sort=False, the
                 # merge-phase alignment guarantee)
@@ -309,37 +290,8 @@ def build_sketches(
                 )
                 firsts = tstats["_f"].to_numpy()
                 lasts = tstats["_l"].to_numpy()
-            # grouped scatter: ONE hll/cms kernel call covers every
-            # buffered group (bit-identical — register max / counter
-            # add commute), instead of paying the numpy fixed call
-            # cost 3x per group.  Fresh states adopt a copy of their
-            # matrix row (a view would pin the whole scratch matrix
-            # for the rest of the partition); a state that already
-            # absorbed an earlier bulk flush folds its row in with the
-            # same merge algebra.
-            # Guarded by a byte cap so a pathological group count
-            # cannot allocate an oversized scratch matrix.
-            hll_mats = cms_mat = None
-            if "hll" in comp and G * 2 * K.HLL_REGISTERS <= _SCATTER_MAX_BYTES:
-                hll_mats = np.zeros((2, G, K.HLL_REGISTERS), dtype=np.uint8)
-                K.hll_add_grouped(hll_mats[0], codes, item_h64)
-                K.hll_add_grouped(hll_mats[1], codes, ch)
-            if (
-                "cms" in comp
-                and G * spec.cms_depth * spec.cms_width * 8
-                <= _SCATTER_MAX_BYTES
-            ):
-                cms_mat = np.zeros(
-                    (G, spec.cms_depth, spec.cms_width), dtype=np.int64
-                )
-                K.cms_add_grouped(cms_mat, codes, item_h64)
-            for gi, gk in enumerate(groups):
-                s, e = int(seg[gi]), int(seg[gi + 1])
-                st = states.get(gk)
-                fresh = st is None
-                if fresh:
-                    st = states[gk] = SketchState(spec)
-                st.n_rows += e - s
+            for gi, st in enumerate(sts):
+                st.n_rows += int(seg[gi + 1] - seg[gi])
                 if firsts is not None:
                     f, l = firsts[gi], lasts[gi]
                     if not pd.isna(f) and (
@@ -350,31 +302,39 @@ def build_sketches(
                         st.last_ts is None or l > st.last_ts
                     ):
                         st.last_ts = l
-                if "hll" in comp:
-                    if hll_mats is None:
-                        K.hll_add(st.hll_items, item_h64[s:e])
-                        K.hll_add(st.hll_clients, ch[s:e])
-                    elif fresh:
-                        st.hll_items = hll_mats[0, gi].copy()
-                        st.hll_clients = hll_mats[1, gi].copy()
-                    else:
-                        np.maximum(
-                            st.hll_items, hll_mats[0, gi],
-                            out=st.hll_items,
-                        )
-                        np.maximum(
-                            st.hll_clients, hll_mats[1, gi],
-                            out=st.hll_clients,
-                        )
-                if "cms" in comp:
-                    if cms_mat is None:
-                        K.cms_add(st.cms, item_h64[s:e])
-                    elif fresh:
-                        st.cms = cms_mat[gi].copy()
-                    else:
-                        st.cms += cms_mat[gi]
                 if vals is not None:
-                    st.kll.add(vals[s:e])
+                    st.kll.add(vals[seg[gi]: seg[gi + 1]])
+            # grouped scatter: ONE hll/cms kernel call covers a whole
+            # chunk of groups (bit-identical — register max / counter
+            # add commute) instead of paying the numpy fixed call cost
+            # 3x per group.  Codes are sorted, so chunk [g0, g1) is
+            # exactly rows seg[g0]:seg[g1]; chunks keep the scratch
+            # matrices under _SCATTER_MAX_BYTES whatever the group
+            # count.  Every state folds its row into its own arrays
+            # (never a view: that would pin the scratch matrix).
+            for g0 in range(0, G, scatter_groups):
+                g1 = min(g0 + scatter_groups, G)
+                s, e = seg[g0], seg[g1]
+                sub = codes[s:e] - g0
+                if "hll" in comp:
+                    hll = np.zeros(
+                        (2, g1 - g0, K.HLL_REGISTERS), dtype=np.uint8
+                    )
+                    K.hll_add_grouped(hll[0], sub, item_h64[s:e])
+                    K.hll_add_grouped(hll[1], sub, ch[s:e])
+                    for gi, st in enumerate(sts[g0:g1]):
+                        np.maximum(st.hll_items, hll[0, gi],
+                                   out=st.hll_items)
+                        np.maximum(st.hll_clients, hll[1, gi],
+                                   out=st.hll_clients)
+                if "cms" in comp:
+                    cms = np.zeros(
+                        (g1 - g0, spec.cms_depth, spec.cms_width),
+                        dtype=np.int64,
+                    )
+                    K.cms_add_grouped(cms, sub, item_h64[s:e])
+                    for gi, st in enumerate(sts[g0:g1]):
+                        st.cms += cms[gi]
             if "bloom" in comp:
                 subsets = K.filter_indexes_for_clients(
                     ch, spec.num_filters, spec.filters_per_user
@@ -386,17 +346,12 @@ def build_sketches(
                     tl = K.transform_limbs(limbs[mask], fi)
                     offs = K.bloom_offsets(tl, spec.m_bits, spec.k)
                     mcodes = codes[mask]
-                    lows = np.searchsorted(
-                        mcodes, np.arange(len(groups)), "left"
-                    )
-                    highs = np.searchsorted(
-                        mcodes, np.arange(len(groups)), "right"
-                    )
-                    for gi, gk in enumerate(groups):
+                    lows = np.searchsorted(mcodes, np.arange(G), "left")
+                    highs = np.searchsorted(mcodes, np.arange(G), "right")
+                    for gi, st in enumerate(sts):
                         if highs[gi] > lows[gi]:
                             K.bloom_build(
-                                states[gk].filters[fi],
-                                offs[lows[gi]: highs[gi]],
+                                st.filters[fi], offs[lows[gi]: highs[gi]]
                             )
 
         for pdf in batches:
@@ -417,48 +372,10 @@ def build_sketches(
         # one partition, so build_partials emits exactly ONE row per
         # group — the merge phase would only unpack and repack every
         # sketch row through one more exchange
-        result = partials
-    else:
-        result = partials.repartition(*group_cols).mapInPandas(
-            _merge_by_group(spec, group_cols), schema=out_schema
-        )
-    if ts_col and not inline_ts:
-        stats = df.groupBy(*group_cols).agg(
-            F.min(ts_col).alias("_first_ts"),
-            F.max(ts_col).alias("_last_ts"),
-            F.count(F.lit(1)).alias("_n_rows"),
-        )
-        value_names = [
-            f.split()[0].strip() for f in SKETCH_VALUE_FIELDS.split(",")
-        ]
-        # NULL-SAFE stitch: a plain equality join on the group cols
-        # silently drops the stats of any group with a NULL key (NULL
-        # = NULL is not TRUE), leaving n_rows/first_ts/last_ts NULL
-        # for e.g. a real NULL event_type — <=> matches them.
-        import functools
-        import operator
-
-        base = result.drop("first_ts", "last_ts", "n_rows")
-        st = stats.withColumnsRenamed(
-            {c: f"_st_{c}" for c in group_cols}
-        )
-        cond = functools.reduce(
-            operator.and_,
-            [
-                F.col(c).eqNullSafe(F.col(f"_st_{c}"))
-                for c in group_cols
-            ],
-        )
-        result = (
-            base.join(F.broadcast(st), cond, "left")
-            .drop(*[f"_st_{c}" for c in group_cols])
-            .withColumnsRenamed(
-                {"_first_ts": "first_ts", "_last_ts": "last_ts",
-                 "_n_rows": "n_rows"}
-            )
-            .select(*group_cols, *value_names)
-        )
-    return result
+        return partials
+    return partials.repartition(*group_cols).mapInPandas(
+        _merge_by_group(spec, group_cols), schema=out_schema
+    )
 
 
 def rollup_sketches(
@@ -644,13 +561,6 @@ def _states_to_pdf(states: dict, group_cols: list) -> pd.DataFrame:
             vals[k2].append(v)
     cols.update(vals)
     return pd.DataFrame(cols)
-
-
-def _states_row_pdf(gvals: dict, state: SketchState) -> pd.DataFrame:
-    out = dict(gvals)
-    for k2, v in state.to_fields().items():
-        out[k2] = [v]
-    return pd.DataFrame(out)
 
 
 def rollup_hierarchy(

@@ -172,23 +172,6 @@ class SketchState:
         out.kll = acc
         return out
 
-    @classmethod
-    def merge_many(cls, spec: SketchSpec, sub) -> "SketchState":
-        """merge_packed over a pandas sub-frame's value columns, plus
-        the counter/ts stats from the same frame."""
-        import pandas as pd
-
-        out = cls.merge_packed(
-            spec, sub["filters"], sub["hll_clients"], sub["hll_items"],
-            sub["cms"], sub["kll"],
-        )
-        out.n_rows = int(sub["n_rows"].sum())
-        first = sub["first_ts"].min()
-        last = sub["last_ts"].max()
-        out.first_ts = None if pd.isna(first) else first
-        out.last_ts = None if pd.isna(last) else last
-        return out
-
     # ------------------------------------------------------------------ #
     # probe — honas_state_check_host_name_lookups (honas_state.c:456-474):#
     # each key is checked against EVERY filter (with its per-filter       #

@@ -189,38 +189,6 @@ def test_checkpoint_stale_fingerprint_rebuilds(spark, tmp_path):
     assert len(calls) == 2
 
 
-def test_distinct_keys_invariance(spark):
-    """The LRU-front-cache analog: deduping (group, client, key) rows
-    before the build must leave bloom bitsets, HLLs and counters exactly
-    unchanged (set idempotence + JVM-side ts/count stats)."""
-    from honas_spark.operators import build_sketches, sha256_key, with_window
-
-    corpus = generate_corpus(spark, 1500, n_hours=2, dup_fraction=0.5)
-    keyed = sha256_key(
-        with_window(corpus, "commit_ts", SPEC.window), "content"
-    )
-    kw = dict(
-        group_cols=["window_start"], client_col="repo", ts_col="commit_ts"
-    )
-    plain = {
-        str(r["window_start"]): r
-        for r in build_sketches(keyed, SPEC, **kw).collect()
-    }
-    dedup = {
-        str(r["window_start"]): r
-        for r in build_sketches(
-            keyed, SPEC, distinct_keys=True, **kw
-        ).collect()
-    }
-    assert plain.keys() == dedup.keys()
-    for k in plain:
-        assert plain[k]["filters"] == dedup[k]["filters"]
-        assert plain[k]["hll_items"] == dedup[k]["hll_items"]
-        assert plain[k]["hll_clients"] == dedup[k]["hll_clients"]
-        assert plain[k]["n_rows"] == dedup[k]["n_rows"]
-        assert plain[k]["first_ts"] == dedup[k]["first_ts"]
-
-
 def test_flatten_semantics(spark):
     """D1: sketches whose client estimate is below the threshold clamp
     hit counts to 0/1."""

@@ -349,9 +349,8 @@ def test_fuzzy_pairs_broadcasts_block_keeplist(spark):
 
 
 def test_hampel_no_full_key_sort_beyond_row_number(spark):
-    """Frame medians come from grouped aggregations over the fan-out,
-    not per-key sorted windows: exactly one windowed row_number (the
-    placement), every other step a hash aggregation or join."""
+    """Frame medians come from ONE window pass (collect_list over the
+    centered rows-frame): no second window operator in the plan."""
     import __spark_entry__ as E
 
     df = E.queries()["hampel_filter"](spark, SF)

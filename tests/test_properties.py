@@ -138,19 +138,32 @@ def test_merge_rejects_spec_mismatch():
     clients_strategy,
 )
 def test_merge_many_equals_sequential_fold(key_lists, clients):
-    """The vectorized merge_many reduce must be bit-identical to folding
-    the same partials with pairwise merge()."""
+    """The merge phase's vectorized reduce (_merge_by_group over one
+    group's partial rows) must be bit-identical to folding the same
+    partials with pairwise merge(), counters and ts stats included."""
+    from honas_spark.operators.sketch_agg import _merge_by_group
+
     states = [_build(ks, clients) for ks in key_lists]
+    for i, s in enumerate(states):
+        if s.n_rows:
+            s.first_ts = pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=i)
+            s.last_ts = s.first_ts + pd.Timedelta(seconds=len(key_lists))
     seq = states[0]
     for s in states[1:]:
         seq = seq.merge(s)
     sub = pd.DataFrame([s.to_fields() for s in states])
-    vec = SketchState.merge_many(SPEC, sub)
+    for c in ("first_ts", "last_ts"):  # typed as Arrow hands them over
+        sub[c] = pd.to_datetime(sub[c])
+    sub.insert(0, "g", 0)
+    (out,) = _merge_by_group(SPEC, ["g"])(iter([sub]))
+    assert len(out) == 1
+    row = out.iloc[0]
+    vec = SketchState.from_fields(SPEC, row)
     assert _exact_eq(seq, vec)
     assert np.array_equal(seq.cms, vec.cms)
-    assert seq.first_ts == vec.first_ts or (
-        seq.first_ts is None and vec.first_ts is None
-    )
+    for got, want in ((row["first_ts"], seq.first_ts),
+                      (row["last_ts"], seq.last_ts)):
+        assert got == want or (want is None and pd.isna(got))
 
 
 def test_pareto_coverage_property(spark):
@@ -295,7 +308,7 @@ def test_bloom_cms_sparse_pack_roundtrip():
 
 
 def test_hll_sparse_through_merge_many(spark):
-    """merge_many over a mix of sparse- and dense-serialized partials
+    """merge_packed over a mix of sparse- and dense-serialized partials
     equals the object-level merge — the shuffle encoding is invisible
     to the algebra."""
     import numpy as np
@@ -317,10 +330,11 @@ def test_hll_sparse_through_merge_many(spark):
             ),
         )
         states.append(st)
-    import pandas as pd
-
-    sub = pd.DataFrame([st.to_fields() for st in states])
-    merged = SketchState.merge_many(spec, sub)
+    fields = [st.to_fields() for st in states]
+    merged = SketchState.merge_packed(
+        spec, *([f[c] for f in fields]
+                for c in ("filters", "hll_clients", "hll_items", "cms", "kll"))
+    )
     want = states[0].merge(states[1]).merge(states[2])
     assert np.array_equal(merged.hll_items, want.hll_items)
     assert np.array_equal(merged.hll_clients, want.hll_clients)

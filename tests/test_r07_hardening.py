@@ -147,6 +147,24 @@ def test_hampel_filter_even_frame_interpolation(spark):
         assert r["is_outlier"] == (1 if abs(v - med) > 3.0 * mad else 0)
 
 
+def test_hampel_filter_half_window_bounded(spark):
+    """half_window bounds every row's frame (2k+1 values): a negative or
+    oversized window raises before any plan is built; both ends of the
+    accepted range still run."""
+    from honas_spark.operators import robust
+
+    df = spark.createDataFrame(
+        [("k", i, float(i)) for i in range(5)],
+        "k string, t int, v double",
+    )
+    for bad in (-1, robust._MAX_HALF_WINDOW + 1):
+        with pytest.raises(ValueError, match="half_window"):
+            robust.hampel_filter(df, ["k"], ["t"], "v", half_window=bad)
+    for k, want in ((0, [1] * 5), (robust._MAX_HALF_WINDOW, [5] * 5)):
+        out = robust.hampel_filter(df, ["k"], ["t"], "v", half_window=k)
+        assert [r["n_frame"] for r in out.orderBy("t").collect()] == want
+
+
 def test_triangle_count_bitset_equals_fallback(spark):
     """The small-integer bitset path and the wedge-join fallback must
     agree exactly; the fallback is forced by shifting ids past the
@@ -393,19 +411,33 @@ def test_grouped_scatter_and_u8_fastpath_bit_identical():
     assert np.array_equal(K.hll_unpack(sp), mats[0])
 
 
-def test_multi_flush_states_own_their_arrays(spark, monkeypatch):
+@pytest.mark.parametrize("cap_groups", [None, 3])
+def test_multi_flush_states_own_their_arrays(spark, monkeypatch, cap_groups):
     """States created by a bulk flush's grouped scatter own their HLL and
     CMS arrays (a view would pin the flush's whole scratch matrix), and
     a build over several flushes stays bit-identical to per-group
-    SketchState.update."""
+    SketchState.update — also when the scatter cap splits every flush
+    into chunks of `cap_groups` groups."""
     import numpy as np
     import pandas as pd
 
     from honas_spark import SketchSpec, SketchState
+    from honas_spark import kernels as K
     from honas_spark.operators import sketch_agg as sa
 
     spec = SketchSpec(m_bits=1 << 14, k=4, num_filters=2,
                       filters_per_user=1, cms_width=256)
+    if cap_groups:
+        monkeypatch.setattr(
+            sa, "_SCATTER_MAX_BYTES",
+            cap_groups * (2 * K.HLL_REGISTERS + spec.cms_bytes),
+        )
+    chunks = []
+    orig_cms = K.cms_add_grouped
+    monkeypatch.setattr(
+        K, "cms_add_grouped",
+        lambda mats, *a: chunks.append(len(mats)) or orig_cms(mats, *a),
+    )
     schema = "g int, key_sha binary, ch long"
     tiny = spark.createDataFrame([(0, b"\0" * 32, 0)], schema)
     fns = []
@@ -440,6 +472,11 @@ def test_multi_flush_states_own_their_arrays(spark, monkeypatch):
     batches = [pdf.iloc[i:i + 50_000] for i in range(0, n, 50_000)]
     out = pd.concat(list(build_partials(iter(batches))), ignore_index=True)
 
+    # flush groups: 30 (groups 0-29), then 40, then 40
+    if cap_groups:
+        assert chunks == [3] * 10 + ([3] * 13 + [1]) * 2
+    else:
+        assert chunks == [30, 40, 40]
     (states,) = seen
     assert len(states) == 40
     for st in states.values():
