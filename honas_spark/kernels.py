@@ -26,7 +26,6 @@ Kernels:
 from __future__ import annotations
 
 import math
-import os
 import struct
 
 import numpy as np
@@ -451,14 +450,6 @@ def hll_merge(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 
 _HLL_SPARSE_MAGIC = 0x01
 
-# Escape hatch / A-B measurement knob: False forces dense serialization
-# everywhere (decoders still accept both formats, so flipping it never
-# corrupts existing checkpoints).  Env-driven because the pack runs in
-# executor Python workers — set HONAS_SPARSE=0 BEFORE the session
-# starts (a driver-side module mutation never reaches the workers).
-SPARSE_SERIALIZATION = os.environ.get("HONAS_SPARSE", "1") != "0"
-
-
 def _pack_nonzero(
     flat: np.ndarray, idx_dtype: str, val_dtype: str
 ) -> "bytes | None":
@@ -478,8 +469,6 @@ def _pack_nonzero(
     its few nonzero words.  Indices and bytes are identical to the
     plain flatnonzero path (pinned by
     tests/test_r07_hardening.py::test_grouped_scatter_and_u8_fastpath_bit_identical)."""
-    if not SPARSE_SERIALIZATION:
-        return None
     pair = np.dtype(idx_dtype).itemsize + np.dtype(val_dtype).itemsize
     dense_bytes = flat.size * flat.itemsize
     # exact nnz via ONE SIMD count reduction (no index materialization):

@@ -9,11 +9,13 @@ its closest notion is the dry-run advice counters; this sibling is what
 a 100 TB corpus needs to eyeball "which distinct user ids / tokens does
 this slice actually contain" without a full distinct shuffle.
 
-Same protocol as Bloom/HLL/CMS/KLL/t-digest/MG/theta: values hash
-JVM-side (whole-stage codegen), one partial bottom-k per (partition,
-group) via mapInPandas — only P x k (hash, value) pairs per group ever
-shuffle, never the raw rows — then an associative per-group merge
-(union, unique by hash, keep k smallest).  Merging any split of the
+Same protocol as Bloom/HLL/CMS/KLL/t-digest/MG/theta, on the shared
+two-phase plan (`common.two_phase_agg`): values hash JVM-side
+(whole-stage codegen), one partial bottom-k per (partition, group) via
+mapInPandas, packed as JSON `[hashes, values]` — only P x k (hash,
+value) pairs per group ever shuffle, never the raw rows — then one
+mapInPandas merge per hash partition of the groups with an associative
+merge (union, unique by hash, keep k smallest).  Merging any split of the
 data yields the identical sample: the k globally-smallest hashes win
 regardless of partitioning, which also makes the sample itself
 deterministic and cross-engine verifiable under the portable md5
@@ -26,14 +28,13 @@ exact below k distinct).
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+import json
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .common import na_safe_key
-from .sketch_agg import _group_fields_ddl
+from .common import two_phase_agg
 
 _MD5_PREFIX_RANGE = 16 ** 15  # 60-bit prefix, always positive in int64
 
@@ -55,6 +56,15 @@ def _bottomk(hs: np.ndarray, vs: np.ndarray, k: int):
     return hs[idx], vs[idx]
 
 
+def _pack(st) -> bytes:
+    return json.dumps([st[0].tolist(), st[1].tolist()]).encode()
+
+
+def _unpack(buf: bytes):
+    hs, vs = json.loads(buf)
+    return np.asarray(hs, dtype=np.int64), np.asarray(vs, dtype=object)
+
+
 def bottomk_sample_agg(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -72,70 +82,34 @@ def bottomk_sample_agg(
     original type matters downstream."""
     if k < 2:
         raise ValueError(f"k must be >= 2: {k}")
-    group_cols = list(group_cols)
-    group_ddl = _group_fields_ddl(df, group_cols)
-    mid_schema = f"{group_ddl}, hs array<long>, vs array<string>"
     hash_range = _MD5_PREFIX_RANGE if hash_fn == "md5" else 2 ** 64
-    hashed = df.select(
-        *group_cols,
-        _hash_col(value_col, hash_fn).alias("_h"),
-        F.col(value_col).cast("string").alias("_v"),
-    )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, tuple[np.ndarray, np.ndarray]] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for gkey, sub in pdf.groupby(
-                group_cols, sort=False, dropna=False
-            ):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = na_safe_key(gkey)
-                hs = sub["_h"].to_numpy(dtype=np.int64)
-                vs = sub["_v"].to_numpy(dtype=object)
-                if gkey in states:
-                    ph, pv = states[gkey]
-                    hs = np.concatenate([ph, hs])
-                    vs = np.concatenate([pv, vs])
-                states[gkey] = _bottomk(hs, vs, k)
-        if states:
-            rows: dict = {c: [] for c in group_cols}
-            rows["hs"] = []
-            rows["vs"] = []
-            for gkey, (hs, vs) in states.items():
-                for c, v in zip(group_cols, gkey):
-                    rows[c].append(v)
-                rows["hs"].append(hs.tolist())
-                rows["vs"].append(list(vs))
-            yield pd.DataFrame(rows)
-
-    partials = hashed.mapInPandas(build, schema=mid_schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        hs = np.concatenate(
-            [np.asarray(x, dtype=np.int64) for x in pdf["hs"]]
+    def add(st, hs: np.ndarray, vs: np.ndarray):
+        return _bottomk(
+            np.concatenate([st[0], np.asarray(hs, dtype=np.int64)]),
+            np.concatenate([st[1], vs]),
+            k,
         )
-        vs = np.concatenate(
-            [np.asarray(list(x), dtype=object) for x in pdf["vs"]]
-        )
-        hs, vs = _bottomk(hs, vs, k)
+
+    def finish(st) -> dict:
+        hs, vs = st
         if hs.size >= k:
             kth = int(hs.view(np.uint64)[-1])
             est = int(round((k - 1) * float(hash_range) / float(max(kth, 1))))
         else:
             est = int(hs.size)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["sample"] = [list(vs)]
-        out["n_sample"] = [int(hs.size)]
-        out["est_distinct"] = [est]
-        return pd.DataFrame(out)
+        return {
+            "sample": list(vs), "n_sample": int(hs.size), "est_distinct": est
+        }
 
-    return partials.groupBy(*group_cols).applyInPandas(
-        merge,
-        schema=(
-            f"{group_ddl}, sample array<string>,"
-            " n_sample int, est_distinct long"
-        ),
+    return two_phase_agg(
+        df, group_cols,
+        [_hash_col(value_col, hash_fn), F.col(value_col).cast("string")],
+        "sample array<string>, n_sample int, est_distinct long",
+        new=lambda: (np.empty(0, dtype=np.int64), np.empty(0, dtype=object)),
+        add=add,
+        merge=lambda a, b: add(a, *b),
+        pack=_pack,
+        unpack=_unpack,
+        finish=finish,
     )

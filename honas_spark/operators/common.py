@@ -2,7 +2,12 @@
 
 from __future__ import annotations
 
+from typing import Callable, Iterator, Sequence
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DoubleType, FloatType
 
 
 def duckdb_round(col, scale: int = 0) -> Column:
@@ -72,14 +77,124 @@ def resplit_small(df: DataFrame) -> DataFrame:
     return df
 
 
-def na_safe_key(gkey: tuple) -> tuple:
-    """Canonicalize a pandas groupby key tuple for use as a dict key
-    across batches: NA scalars (float NaN, non-interned NaT forms)
-    are not singletons, so NaN != NaN would split one group's state
-    across dict entries whenever a partition spans multiple Arrow
-    batches.  None IS a singleton and round-trips back to NULL."""
-    import pandas as pd
+def group_fields_ddl(df: DataFrame, group_cols: Sequence[str]) -> str:
+    """DDL of `group_cols` for a grouped operator's output schema.
 
-    return tuple(
-        None if (k is not None and pd.isna(k)) else k for k in gkey
+    Float/double group columns are rejected: pandas workers receive
+    NULL as NaN, so NULL and NaN rows would fold into one group, and the
+    pandas -> Arrow output writes a NaN key back as NULL (Spark's
+    groupBy keeps NaN, NULL and every value apart)."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    for c in group_cols:
+        if isinstance(types[c], (FloatType, DoubleType)):
+            raise ValueError(
+                f"group column {c!r} is {types[c].simpleString()}: float"
+                " keys cannot keep NULL and NaN apart in pandas workers"
+            )
+    return ", ".join(f"{c} {types[c].simpleString()}" for c in group_cols)
+
+
+def group_segments(pdf: pd.DataFrame, group_cols: Sequence[str]):
+    """Split a pandas batch into its groups by position.
+
+    -> (gb, keys, order, seg): group g is rows order[seg[g]:seg[g+1]]
+    of pdf, in arrival order (stable sort), with key tuple keys[g].
+    Groups are numbered in first-appearance order, which is also the
+    row order of `gb.agg(...)` (gb groups with sort=False,
+    dropna=False), so row g of one vectorized per-group aggregate
+    belongs to group g.  NA key scalars (NaN, NaT) become None: they
+    are not singletons, and NaN != NaN would split one group's state
+    across dict entries when a partition spans several Arrow batches.
+
+    Positional segments instead of pandas sub-frames: groupby
+    iteration, per-group frame slicing and per-group Series reductions
+    cost ~50-150 us per group, which dominates at thousands of groups.
+    Needs at least one group column."""
+    gb = pdf.groupby(list(group_cols), sort=False, dropna=False)
+    gnum = gb.ngroup().to_numpy()
+    order = np.argsort(gnum, kind="stable")
+    seg = np.searchsorted(gnum[order], np.arange(gb.ngroups + 1))
+    heads = order[seg[:-1]]
+    keys = list(zip(*(
+        [None if pd.isna(v) else v for v in pdf[c].to_numpy()[heads]]
+        for c in group_cols
+    )))
+    return gb, keys, order, seg
+
+
+def two_phase_agg(
+    df: DataFrame,
+    group_cols: Sequence[str],
+    values: Sequence[Column],
+    out_ddl: str,
+    new: Callable[[], object],
+    add: Callable[..., object],
+    merge: Callable[[object, object], object],
+    pack: Callable[[object], bytes],
+    unpack: Callable[[bytes], object],
+    finish: Callable[[object], dict],
+) -> DataFrame:
+    """One mergeable sketch per group: the plan of every grouped sketch
+    sibling (the zero/update/merge/finalize protocol as callables).
+
+    Phase 1, mapInPandas: each partition folds its rows into one state
+    per group, `add(state, *slices) -> state` with the group's rows of
+    each `values` column as numpy slices in arrival order, and emits
+    `(group_cols..., sketch binary)` partials through `pack`.  Raw rows
+    never shuffle, only P x G partials do.
+
+    Phase 2, repartition(group_cols) + mapInPandas: one Python call per
+    partition `unpack`s and `merge`s every partial of its groups (a
+    group arrives whole but may span Arrow batches) and emits one row
+    per group: the group columns plus `finish(state)`, a dict over the
+    `out_ddl` fields.  Partials arrive in shuffle order, so `merge`
+    must be associative and commutative."""
+    group_cols = list(group_cols)
+    group_ddl = group_fields_ddl(df, group_cols)
+    names = [f"_v{i}" for i in range(len(values))]
+    slim = df.select(
+        *group_cols, *(v.alias(n) for v, n in zip(values, names))
+    )
+
+    def frame(states: dict, fields: Callable[[object], dict]) -> pd.DataFrame:
+        return pd.DataFrame([
+            {**dict(zip(group_cols, key)), **fields(st)}
+            for key, st in states.items()
+        ])
+
+    def fold_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        states: dict = {}
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            _, keys, order, seg = group_segments(pdf, group_cols)
+            cols = [pdf[n].to_numpy()[order] for n in names]
+            for g, key in enumerate(keys):
+                st = states.get(key)
+                states[key] = add(
+                    new() if st is None else st,
+                    *(c[seg[g]: seg[g + 1]] for c in cols),
+                )
+        if states:  # empty partitions yield nothing (Arrow needs typed cols)
+            yield frame(states, lambda st: {"sketch": pack(st)})
+
+    def fold_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        states: dict = {}
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            _, keys, order, seg = group_segments(pdf, group_cols)
+            blobs = pdf["sketch"].to_numpy()[order]
+            for g, key in enumerate(keys):
+                for blob in blobs[seg[g]: seg[g + 1]]:
+                    st, prev = unpack(blob), states.get(key)
+                    states[key] = st if prev is None else merge(prev, st)
+        if states:
+            yield frame(states, finish)
+
+    partials = slim.mapInPandas(
+        fold_rows, schema=f"{group_ddl}, sketch binary"
+    )
+    return partials.repartition(*group_cols).mapInPandas(
+        fold_partials, schema=f"{group_ddl}, {out_ddl}"
     )

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 
 from .. import kernels as K
 from ..spec import SketchSpec
-from ..state import SketchState
+from .common import group_fields_ddl
 
 
 def probe_sketches(
@@ -45,9 +45,7 @@ def probe_sketches(
     keys = [q[1] for q in qlist]
     shas = [q[2] for q in qlist]
 
-    from .sketch_agg import _group_fields_ddl
-
-    group_ddl = _group_fields_ddl(sketch_df, group_cols)
+    group_ddl = group_fields_ddl(sketch_df, group_cols)
     out_schema = (
         f"{group_ddl}, group_id long, key string, hits long,"
         " filters_hit long, n_rows long, est_clients long, est_items long,"

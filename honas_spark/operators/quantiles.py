@@ -1,22 +1,22 @@
-"""Generic distributed quantile-sketch aggregation — KLL or t-digest per
-group over a numeric column, with the same two-phase map-combine plan as
-the main sketch build (one partial per (partition, group), tree merge).
+"""Generic distributed quantile-sketch aggregation — KLL, t-digest or
+DDSketch per group over a numeric column.
 
-This is the standalone face of the shared `zero/update/merge/finalize`
-protocol the north rule asks for: the same operator shape serves every
-sketch family."""
+Both operators run on the shared two-phase plan
+(`common.two_phase_agg`): one partial sketch per (partition, group)
+from a mapInPandas fold, then one mapInPandas merge per hash partition
+of the groups.  Only serialized sketches shuffle, never raw values —
+the same zero/update/merge/finalize protocol as every grouped sketch
+sibling."""
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Sequence
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 from .. import kernels as K
-from .common import na_safe_key
-from .sketch_agg import _group_fields_ddl
+from .common import two_phase_agg
 
 _FAMILIES = {
     "kll": (lambda p: K.KLL(p), K.KLL.from_bytes),
@@ -24,6 +24,12 @@ _FAMILIES = {
     # param is 1/alpha: param=100 -> 1% relative-error guarantee
     "ddsketch": (lambda p: K.DDSketch(1.0 / p), K.DDSketch.from_bytes),
 }
+
+
+def _added(st, values: np.ndarray):
+    """Fold one group's value slice into a KLL/t-digest/DDSketch."""
+    st.add(np.asarray(values, dtype=np.float64))
+    return st
 
 
 def quantile_sketch_agg(
@@ -34,58 +40,22 @@ def quantile_sketch_agg(
     param: int = 100,
     quantiles: Sequence[float] = (0.25, 0.5, 0.75, 0.99),
 ) -> DataFrame:
-    """-> one row per group: the serialized sketch + requested quantile
-    estimates (q_25, q_50, ... columns, rounded to 6dp)."""
-    group_cols = list(group_cols)
+    """-> one row per group: `n` and the requested quantile estimates
+    (q_25, q_50, ... columns, rounded to 6dp)."""
     make, from_bytes = _FAMILIES[sketch]
-    group_ddl = _group_fields_ddl(df, group_cols)
     qcols = [f"q_{int(q * 100)}" for q in quantiles]
-    mid_schema = f"{group_ddl}, sketch binary, n long"
-    out_schema = (
-        f"{group_ddl}, n long, "
-        + ", ".join(f"{c} double" for c in qcols)
-    )
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, object] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = na_safe_key(gkey)
-                st = states.get(gkey)
-                if st is None:
-                    st = states[gkey] = make(param)
-                st.add(sub[value_col].to_numpy(dtype=np.float64))
-        if states:
-            rows = {c: [] for c in group_cols}
-            rows.update(sketch=[], n=[])
-            for gkey, st in states.items():
-                for c, v in zip(group_cols, gkey):
-                    rows[c].append(v)
-                rows["sketch"].append(st.to_bytes())
-                rows["n"].append(st.n)
-            yield pd.DataFrame(rows)
-
-    partials = df.select(*group_cols, value_col).mapInPandas(
-        build, schema=mid_schema
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for blob in pdf["sketch"]:
-            st = from_bytes(blob)
-            merged = st if merged is None else merged.merge(st)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["n"] = [merged.n]
-        for q, c in zip(quantiles, qcols):
-            out[c] = [round(merged.quantile(q), 6)]
-        return pd.DataFrame(out)
-
-    return partials.groupBy(*group_cols).applyInPandas(
-        merge, schema=out_schema
+    return two_phase_agg(
+        df, group_cols, [F.col(value_col)],
+        "n long, " + ", ".join(f"{c} double" for c in qcols),
+        new=lambda: make(param),
+        add=_added,
+        merge=lambda a, b: a.merge(b),
+        pack=lambda st: st.to_bytes(),
+        unpack=from_bytes,
+        finish=lambda st: {
+            "n": st.n,
+            **{c: round(st.quantile(q), 6) for q, c in zip(quantiles, qcols)},
+        },
     )
 
 
@@ -105,61 +75,28 @@ def ddsketch_agg(
     and the canonical value estimate `q_XX` = 2*gamma^j/(gamma+1)
     rounded to 4dp.
 
-    Plan shape: same two-phase map-combine as every other sketch family
-    (one partial per (partition, group), counter-add tree merge) — raw
-    values never shuffle, only (bucket, count) pairs do, at most
-    max_buckets longs per partial.
+    Plan shape: the shared two-phase plan (`common.two_phase_agg`) —
+    raw values never shuffle, only (bucket, count) pairs do, at most
+    max_buckets longs per partial, merged by counter add.
     """
-    group_cols = list(group_cols)
-    group_ddl = _group_fields_ddl(df, group_cols)
     bcols = [f"b_{int(q * 100)}" for q in quantiles]
     qcols = [f"q_{int(q * 100)}" for q in quantiles]
-    mid_schema = f"{group_ddl}, sketch binary, n long"
-    out_schema = (
-        f"{group_ddl}, n long, "
-        + ", ".join(f"{b} long, {q} double" for b, q in zip(bcols, qcols))
-    )
 
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, K.DDSketch] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for gkey, sub in pdf.groupby(group_cols, sort=False, dropna=False):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = na_safe_key(gkey)
-                st = states.get(gkey)
-                if st is None:
-                    st = states[gkey] = K.DDSketch(alpha, max_buckets)
-                st.add(sub[value_col].to_numpy(dtype=np.float64))
-        if states:
-            rows = {c: [] for c in group_cols}
-            rows.update(sketch=[], n=[])
-            for gkey, st in states.items():
-                for c, v in zip(group_cols, gkey):
-                    rows[c].append(v)
-                rows["sketch"].append(st.to_bytes())
-                rows["n"].append(st.n)
-            yield pd.DataFrame(rows)
-
-    partials = df.select(*group_cols, value_col).mapInPandas(
-        build, schema=mid_schema
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        merged = None
-        for blob in pdf["sketch"]:
-            st = K.DDSketch.from_bytes(blob)
-            merged = st if merged is None else merged.merge(st)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["n"] = [merged.n]
+    def finish(st: K.DDSketch) -> dict:
+        out = {"n": st.n}
         for q, b, c in zip(quantiles, bcols, qcols):
-            j = merged.quantile_bucket(q)
-            out[b] = [j]
-            out[c] = [round(merged.quantile(q), 4)]
-        return pd.DataFrame(out)
+            out[b] = st.quantile_bucket(q)
+            out[c] = round(st.quantile(q), 4)
+        return out
 
-    return partials.groupBy(*group_cols).applyInPandas(
-        merge, schema=out_schema
+    return two_phase_agg(
+        df, group_cols, [F.col(value_col)],
+        "n long, "
+        + ", ".join(f"{b} long, {q} double" for b, q in zip(bcols, qcols)),
+        new=lambda: K.DDSketch(alpha, max_buckets),
+        add=_added,
+        merge=lambda a, b: a.merge(b),
+        pack=lambda st: st.to_bytes(),
+        unpack=K.DDSketch.from_bytes,
+        finish=finish,
     )

@@ -38,7 +38,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import kernels as K
-from .common import na_safe_key
+from .common import group_fields_ddl, group_segments
 from ..spec import SketchSpec
 from ..state import SketchState
 
@@ -57,11 +57,6 @@ STATS_FIELDS = (
     "total_bits_set long, est_items long, est_clients long,"
     " est_items_per_filter long, fill_rate double, actual_fpr double"
 )
-
-
-def _group_fields_ddl(df: DataFrame, group_cols: Sequence[str]) -> str:
-    schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    return ", ".join(f"{c} {schema[c]}" for c in group_cols)
 
 
 def with_window(df: DataFrame, ts_col: str, period: str,
@@ -164,7 +159,7 @@ def build_sketches(
     merge as zeros.
     """
     group_cols = list(group_cols)
-    group_ddl = _group_fields_ddl(df, group_cols)
+    group_ddl = group_fields_ddl(df, group_cols)
     out_schema = f"{group_ddl}, {SKETCH_VALUE_FIELDS}"
     comp = SketchState.ALL_COMPONENTS if components is None else components
 
@@ -210,8 +205,8 @@ def build_sketches(
         # the per-batch pandas groupby chop paid a per-group
         # frame-slice cost that scaled with rows x batches (it was
         # the largest worker-profile item at the 5M-row build shape),
-        # where one ngroup + stable-argsort pass over the buffered
-        # rows is a few vectorized calls total.
+        # where one group_segments pass over the buffered rows is a
+        # few vectorized calls total.
         states: dict[tuple, SketchState] = {}
         pending: list[pd.DataFrame] = []
         pending_rows = 0
@@ -222,16 +217,16 @@ def build_sketches(
             kernel's fixed per-call cost (~0.5 ms of k x n_limbs
             numpy-loop setup) once per (group, filter) — ruinous when
             a partition holds tens of thousands of tiny groups (the
-            high-group-cardinality shape).  Here the grouping (ngroup
-            codes + stable argsort), the hash limbs, the filter-subset
+            high-group-cardinality shape).  Here the grouping
+            (group_segments), the hash limbs, the filter-subset
             selectors and ONE bloom_offsets call per filter cover all
             groups at once (rows are independent, so per-row results
             are bit-identical); HLL/CMS scatter in a few chunks of
             groups, and only the cheap per-group folds (bitset OR,
             register max, counter add, KLL adds on contiguous segments)
-            remain per group.  The stable sort keeps within-group row
-            order — and therefore KLL ingestion order — at arrival
-            order, exactly what a per-group fold would see."""
+            remain per group.  Segments keep within-group row order —
+            and therefore KLL ingestion order — at arrival order,
+            exactly what a per-group fold would see."""
             nonlocal pending, pending_rows
             if not pending:
                 return
@@ -242,18 +237,11 @@ def build_sketches(
             )
             pending = []
             pending_rows = 0
-            gb = big.groupby(group_cols, sort=False, dropna=False)
-            gnum = gb.ngroup().to_numpy()
-            G = int(gnum.max()) + 1
-            order = np.argsort(gnum, kind="stable")
-            codes = gnum[order]
-            seg = np.searchsorted(codes, np.arange(G + 1))
-            gcol_arrays = {c: big[c].to_numpy() for c in group_cols}
+            gb, keys, order, seg = group_segments(big, group_cols)
+            G = len(keys)
+            codes = np.repeat(np.arange(G), np.diff(seg))
             sts = []
-            for g in range(G):
-                gk = na_safe_key(tuple(
-                    gcol_arrays[c][order[seg[g]]] for c in group_cols
-                ))
+            for gk in keys:
                 st = states.get(gk)
                 if st is None:
                     st = states[gk] = SketchState(spec)
@@ -282,9 +270,8 @@ def build_sketches(
             )
             firsts = lasts = None
             if ts_col:
-                # one vectorized skipna min/max per flush (agg row
-                # order == ngroup numbering under sort=False, the
-                # merge-phase alignment guarantee)
+                # one vectorized skipna min/max per flush (agg row g
+                # is group g, see group_segments)
                 tstats = gb.agg(
                     _f=(ts_col, "min"), _l=(ts_col, "max")
                 )
@@ -392,7 +379,7 @@ def rollup_sketches(
     df = sketch_df.withColumn(
         window_col, F.window(F.col(window_col), rollup_period)["start"]
     )
-    group_ddl = _group_fields_ddl(df, [window_col] + group_cols)
+    group_ddl = group_fields_ddl(df, [window_col] + group_cols)
     out_schema = f"{group_ddl}, {SKETCH_VALUE_FIELDS}"
     return df.repartition(window_col, *group_cols).mapInPandas(
         _merge_by_group(spec, [window_col] + group_cols),
@@ -406,7 +393,7 @@ def finalize_stats(
     """Attach diagnostic stats (D2/D5: fill rate, actual FPR fill^k,
     HLL estimates, Bloom approx-count) to every sketch row."""
     group_cols = list(group_cols)
-    group_ddl = _group_fields_ddl(sketch_df, group_cols)
+    group_ddl = group_fields_ddl(sketch_df, group_cols)
     out_schema = (
         f"{group_ddl}, n_rows long, first_ts timestamp, last_ts timestamp,"
         f" {STATS_FIELDS}"
@@ -451,7 +438,7 @@ def per_filter_stats(
     `finalize_stats` averages these across filters; this emits the array
     the reference actually prints."""
     group_cols = list(group_cols)
-    group_ddl = _group_fields_ddl(sketch_df, group_cols)
+    group_ddl = group_fields_ddl(sketch_df, group_cols)
     out_schema = (
         f"{group_ddl}, filter_index int, number_of_bits_set long,"
         " estimated_number_of_host_names long,"
@@ -501,36 +488,22 @@ def _merge_by_group(spec: SketchSpec, group_cols: list):
         for pdf in batches:
             if pdf.empty:
                 continue
-            # positional group split + ONE vectorized stats aggregation:
-            # materializing a pandas sub-frame per group paid the
-            # block-slice, per-group column access and per-group Series
-            # min/max/sum costs ~100 us x groups (the dominant merge-
-            # phase overhead at thousands of tiny rollup cells).  With
-            # sort=False both ngroup() numbering and the agg row order
-            # are first-appearance order, so stats row g belongs to
-            # group code g by construction.
-            gb = pdf.groupby(group_cols, sort=False, dropna=False)
+            # positional group split + ONE vectorized stats
+            # aggregation (the dominant merge-phase overhead at
+            # thousands of tiny rollup cells was per-group pandas
+            # work); stats row g belongs to group g
+            gb, keys, order, seg = group_segments(pdf, group_cols)
             stats = gb.agg(
                 _first=("first_ts", "min"),
                 _last=("last_ts", "max"),
                 _n=("n_rows", "sum"),
             )
-            gnum = gb.ngroup().to_numpy()
-            n_groups = len(stats)
-            order = np.argsort(gnum, kind="stable")
-            seg = np.searchsorted(
-                gnum[order], np.arange(n_groups + 1)
-            )
             cols = {c: pdf[c].to_numpy() for c in value_cols}
-            gcols = {c: pdf[c].to_numpy() for c in group_cols}
             firsts = stats["_first"].to_numpy()
             lasts = stats["_last"].to_numpy()
             ns = stats["_n"].to_numpy()
-            for g in range(n_groups):
+            for g, gkey in enumerate(keys):
                 idx = order[seg[g]: seg[g + 1]]
-                gkey = na_safe_key(
-                    tuple(gcols[c][idx[0]] for c in group_cols)
-                )
                 # vectorized reduce over the group's rows (one numpy
                 # reduction per component, not one merge per row)
                 st = SketchState.merge_packed(
@@ -642,7 +615,7 @@ def rollup_hierarchy(
             ],
             *value_names,
         )
-        group_ddl = _group_fields_ddl(masked, ["gid"] + dims)
+        group_ddl = group_fields_ddl(masked, ["gid"] + dims)
         schema = f"{group_ddl}, {SKETCH_VALUE_FIELDS}"
         # two-level merge: a map-side pre-merge caps every coarse
         # cell's partial count at the PARTITION count — without it the

@@ -8,15 +8,16 @@ the same zero/update/merge/finalize protocol as the Bloom/HLL/CMS/KLL
 /t-digest/MG families (kernels.kmv_*).
 
 Plan shape: values hash JVM-side (xxhash64, whole-stage codegen) so the
-Python path only folds already-hashed longs; one partial sketch per
-(partition, group) via mapInPandas; tree merge per group.  A sketch row
-is <= 8k bytes, so the pairwise set-operation stage joins the
-G-row sketch table against itself broadcast — never the raw data.
+Python path only folds already-hashed longs, on the shared two-phase
+plan (`common.two_phase_agg`): one partial sketch per (partition, group)
+via mapInPandas, then one mapInPandas merge per hash partition of the
+groups.  A sketch row is <= k * 8 bytes, so the pairwise set-operation
+stage joins the G-row sketch table against itself broadcast — never the
+raw data.
 """
 
 from __future__ import annotations
 
-from itertools import combinations
 from typing import Iterator, Sequence
 
 import numpy as np
@@ -24,8 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import kernels as K
-from .common import na_safe_key
-from .sketch_agg import _group_fields_ddl
+from .common import two_phase_agg
 
 
 def theta_sketch_agg(
@@ -37,50 +37,18 @@ def theta_sketch_agg(
     """-> one row per group: `sketch` (serialized KMV state) and
     `est_distinct` (long; exact while the group has < k distinct
     values, ~1/sqrt(k) relative error beyond)."""
-    group_cols = list(group_cols)
-    group_ddl = _group_fields_ddl(df, group_cols)
-    mid_schema = f"{group_ddl}, sketch binary"
-    hashed = df.select(
-        *group_cols, F.xxhash64(F.col(value_col)).alias("_h")
-    )
-
-    def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        states: dict[tuple, np.ndarray] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            for gkey, sub in pdf.groupby(
-                group_cols, sort=False, dropna=False
-            ):
-                if not isinstance(gkey, tuple):
-                    gkey = (gkey,)
-                gkey = na_safe_key(gkey)
-                h = sub["_h"].to_numpy(dtype=np.int64).view(np.uint64)
-                states[gkey] = K.kmv_update(
-                    states.get(gkey, K.kmv_zero()), h, k
-                )
-        if states:
-            rows: dict = {c: [] for c in group_cols}
-            rows["sketch"] = []
-            for gkey, st in states.items():
-                for c, v in zip(group_cols, gkey):
-                    rows[c].append(v)
-                rows["sketch"].append(K.kmv_pack(st))
-            yield pd.DataFrame(rows)
-
-    partials = hashed.mapInPandas(build, schema=mid_schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = K.kmv_zero()
-        for blob in pdf["sketch"]:
-            m = K.kmv_merge(m, K.kmv_unpack(blob), k)
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["sketch"] = [K.kmv_pack(m)]
-        out["est_distinct"] = [int(round(K.kmv_estimate(m, k)))]
-        return pd.DataFrame(out)
-
-    return partials.groupBy(*group_cols).applyInPandas(
-        merge, schema=f"{group_ddl}, sketch binary, est_distinct long"
+    return two_phase_agg(
+        df, group_cols, [F.xxhash64(F.col(value_col))],
+        "sketch binary, est_distinct long",
+        new=K.kmv_zero,
+        add=lambda st, h: K.kmv_update(st, h.view(np.uint64), k),
+        merge=lambda a, b: K.kmv_merge(a, b, k),
+        pack=K.kmv_pack,
+        unpack=K.kmv_unpack,
+        finish=lambda st: {
+            "sketch": K.kmv_pack(st),
+            "est_distinct": int(round(K.kmv_estimate(st, k))),
+        },
     )
 
 

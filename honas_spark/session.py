@@ -35,7 +35,9 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = cpus or int(
+        os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1
+    )
     shuffle_partitions = shuffle_partitions or cpus
     b = (
         SparkSession.builder.master(f"local[{cpus}]")

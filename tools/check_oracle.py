@@ -55,7 +55,7 @@ def main():
     import __spark_entry__ as E
     from honas_spark.session import get_spark
 
-    spark = get_spark(app="oracle_check", cpus=8)
+    spark = get_spark(app="oracle_check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -196,10 +196,11 @@ NOTES = {
     "theta_intersect": (
         "Theta/KMV set operations: values hash JVM-side (xxhash64 in "
         "the codegen scan projection), partial sketches per split fold "
-        "only already-hashed longs, one small merge exchange of <=8k-"
-        "byte sketch rows per group.  The pairwise stage self-joins "
-        "the G-row SKETCH table with the right side broadcast — the "
-        "raw data never re-enters the plan."
+        "only already-hashed longs, one small merge exchange of "
+        "<= k*8-byte sketch rows per group (repartition + one "
+        "mapInPandas merge per partition).  The pairwise stage "
+        "self-joins the G-row SKETCH table with the right side "
+        "broadcast — the raw data never re-enters the plan."
     ),
 }
 
@@ -211,7 +212,7 @@ def main():
     import __spark_entry__ as E
     from honas_spark.session import get_spark
 
-    spark = get_spark(app="dump_plans", cpus=8)
+    spark = get_spark(app="dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
     qs = E.queries()
     out = [
