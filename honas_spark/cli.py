@@ -639,7 +639,8 @@ def main(argv=None) -> int:
     g.add_argument("--client-col", default="")
     g.add_argument("--ts-col", default="commit_ts")
     g.add_argument("--sep", default="/")
-    g.add_argument("--mode", default="map_combine")
+    g.add_argument("--mode", default="map_combine",
+                   choices=["map_combine", "shuffle_keys"])
     g.add_argument("--salt", type=int, default=None)
     g.add_argument("--run-id", default="cli")
     g.add_argument("--dry-run", action="store_true",

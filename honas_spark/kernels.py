@@ -500,30 +500,45 @@ def _pack_nonzero(
     )
 
 
-def _unpack_nonzero(
-    buf: bytes, n: int, idx_dtype: str, val_dtype: str, out_dtype
+def _fold_packed(
+    out: np.ndarray, buf: bytes, ufunc, idx_dtype: str
 ) -> np.ndarray:
-    """Inverse of _pack_nonzero into a fresh dense array of n items."""
+    """Fold one serialized buffer into `out` in place with `ufunc`
+    (np.bitwise_or / np.maximum / np.add; None copies the values in,
+    the decode of a zero `out`) and return `out`.  A dense buffer
+    combines as a read-only view of its bytes, a sparse
+    (_pack_nonzero) one only at its listed indexes, so no dense
+    temporary is built.  `out` is C-contiguous (every sketch component
+    is), so its flat reshape is a view."""
+    flat = out.reshape(-1)
+    val_dtype = flat.dtype.newbyteorder("<")
+    if len(buf) == flat.nbytes:
+        val = np.frombuffer(buf, dtype=val_dtype)
+        if ufunc is None:
+            flat[:] = val
+        else:
+            ufunc(flat, val, out=flat)
+        return out
     if not buf or buf[0] != _HLL_SPARSE_MAGIC:
         raise ValueError(f"not a sparse buffer (len={len(buf)})")
     (nnz,) = np.frombuffer(buf[1:5], dtype="<u4")
     nnz = int(nnz)
     iw = np.dtype(idx_dtype).itemsize
-    if len(buf) != 5 + (iw + np.dtype(val_dtype).itemsize) * nnz:
+    if len(buf) != 5 + (iw + val_dtype.itemsize) * nnz:
         raise ValueError(
             f"corrupt sparse buffer: nnz={nnz}, len={len(buf)}"
         )
     idx = np.frombuffer(buf[5:5 + iw * nnz], dtype=idx_dtype)
     val = np.frombuffer(buf[5 + iw * nnz:], dtype=val_dtype)
     idx = idx.astype(np.int64)
-    if idx.size and int(idx.max()) >= n:
+    if idx.size and int(idx.max()) >= flat.size:
         # a clean error for damaged checkpoints, not an IndexError
         # from deep inside a scatter
         raise ValueError(
-            f"corrupt sparse buffer: index {int(idx.max())} >= {n}"
+            f"corrupt sparse buffer: index {int(idx.max())} >= {flat.size}"
         )
-    out = np.zeros(n, dtype=out_dtype)
-    out[idx] = val
+    # indexes are unique, so the gather/scatter pair is exact
+    flat[idx] = val if ufunc is None else ufunc(flat[idx], val)
     return out
 
 
@@ -540,19 +555,18 @@ def bloom_pack(filters: np.ndarray) -> bytes:
     return sp if sp is not None else flat.tobytes()
 
 
+def bloom_fold(filters: np.ndarray, buf: bytes) -> None:
+    """OR one bloom_pack buffer into `filters` in place."""
+    _fold_packed(filters, buf, np.bitwise_or, "<u4")
+
+
 def bloom_unpack(
     buf: bytes, num_filters: int, filter_bytes: int
 ) -> np.ndarray:
     """-> fresh (num_filters, filter_bytes) uint8 matrix."""
-    n = num_filters * filter_bytes
-    if len(buf) == n:
-        return (
-            np.frombuffer(buf, dtype=np.uint8)
-            .reshape(num_filters, filter_bytes)
-            .copy()
-        )
-    return _unpack_nonzero(buf, n, "<u4", "u1", np.uint8).reshape(
-        num_filters, filter_bytes
+    return _fold_packed(
+        np.zeros((num_filters, filter_bytes), dtype=np.uint8), buf, None,
+        "<u4",
     )
 
 
@@ -565,17 +579,15 @@ def cms_pack(cms: np.ndarray) -> bytes:
     return sp if sp is not None else flat.tobytes()
 
 
+def cms_fold(cms: np.ndarray, buf: bytes) -> None:
+    """Add one cms_pack buffer into `cms` in place."""
+    _fold_packed(cms, buf, np.add, "<u4")
+
+
 def cms_unpack(buf: bytes, depth: int, width: int) -> np.ndarray:
     """-> fresh (depth, width) int64 matrix."""
-    n = depth * width
-    if len(buf) == n * 8:
-        return (
-            np.frombuffer(buf, dtype="<i8")
-            .reshape(depth, width)
-            .astype(np.int64)
-        )
-    return _unpack_nonzero(buf, n, "<u4", "<i8", np.int64).reshape(
-        depth, width
+    return _fold_packed(
+        np.zeros((depth, width), dtype=np.int64), buf, None, "<u4"
     )
 
 
@@ -589,12 +601,15 @@ def hll_pack(regs: np.ndarray) -> bytes:
     ).tobytes()
 
 
+def hll_fold(regs: np.ndarray, buf: bytes) -> None:
+    """Register-max one hll_pack buffer into `regs` in place."""
+    _fold_packed(regs, buf, np.maximum, "<u2")
+
+
 def hll_unpack(buf: bytes) -> np.ndarray:
     """Inverse of hll_pack — returns a dense uint8[16384] array (a
     fresh writable array either way)."""
-    if len(buf) == HLL_REGISTERS:
-        return np.frombuffer(buf, dtype=np.uint8).copy()
-    return _unpack_nonzero(buf, HLL_REGISTERS, "<u2", "u1", np.uint8)
+    return _fold_packed(hll_zero(), buf, None, "<u2")
 
 
 _HLL_PE = 2.0 ** -np.arange(64)

@@ -122,6 +122,21 @@ def group_segments(pdf: pd.DataFrame, group_cols: Sequence[str]):
     return gb, keys, order, seg
 
 
+def states_frame(
+    states: dict, group_cols: Sequence[str], fields: Callable[[object], dict]
+) -> pd.DataFrame:
+    """One row per state of a `key tuple -> state` dict: the key spread
+    over `group_cols`, then the `fields(state)` dict (the same keys for
+    every state)."""
+    cols: dict[str, list] = {c: [] for c in group_cols}
+    for key, st in states.items():
+        for c, v in zip(group_cols, key):
+            cols[c].append(v)
+        for f, v in fields(st).items():
+            cols.setdefault(f, []).append(v)
+    return pd.DataFrame(cols)
+
+
 def two_phase_agg(
     df: DataFrame,
     group_cols: Sequence[str],
@@ -156,12 +171,6 @@ def two_phase_agg(
         *group_cols, *(v.alias(n) for v, n in zip(values, names))
     )
 
-    def frame(states: dict, fields: Callable[[object], dict]) -> pd.DataFrame:
-        return pd.DataFrame([
-            {**dict(zip(group_cols, key)), **fields(st)}
-            for key, st in states.items()
-        ])
-
     def fold_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         states: dict = {}
         for pdf in batches:
@@ -176,7 +185,9 @@ def two_phase_agg(
                     *(c[seg[g]: seg[g + 1]] for c in cols),
                 )
         if states:  # empty partitions yield nothing (Arrow needs typed cols)
-            yield frame(states, lambda st: {"sketch": pack(st)})
+            yield states_frame(
+                states, group_cols, lambda st: {"sketch": pack(st)}
+            )
 
     def fold_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         states: dict = {}
@@ -190,7 +201,7 @@ def two_phase_agg(
                     st, prev = unpack(blob), states.get(key)
                     states[key] = st if prev is None else merge(prev, st)
         if states:
-            yield frame(states, finish)
+            yield states_frame(states, group_cols, finish)
 
     partials = slim.mapInPandas(
         fold_rows, schema=f"{group_ddl}, sketch binary"

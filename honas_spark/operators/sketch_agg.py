@@ -13,14 +13,19 @@ as a two-phase Spark aggregation designed for 100 TB inputs:
       (This is the explicit two-phase partial aggregation the survey calls
       for — pandas GROUPED_AGG UDAFs cannot spill or tree-merge partials.)
 
-  Phase 2 (merge):
+  Phase 2 (merge, `_merge_phase`):
       .repartition(group_cols).mapInPandas(_merge_by_group) — hash
       partitioning brings every partial row of a group into one task,
-      which reduces them with the CRDT algebra (bitwise OR / register
-      max / counter add; reference merge src/honas_state.c:568-611).
-      Associativity (property-tested) makes the merge order irrelevant.
+      which keeps ONE state per group and folds every packed row of
+      every Arrow batch into it in place with the CRDT algebra (bitwise
+      OR / register max / counter add straight into the group's arrays;
+      reference merge src/honas_state.c:568-611).  Memory is one state
+      per group, whatever the number of rows merged.  Associativity
+      (property-tested) makes the merge order irrelevant.
       mode="shuffle_keys" without salt skips this phase: its
       pre-repartition already leaves exactly one partial per group.
+      `rollup_sketches` and `rollup_hierarchy` merge through the same
+      phase.
 
 Window rotation (honas gather.c:899-920, 1302-1351) is expressed as
 epoch-aligned tumbling windows: `F.window(ts, spec.window)` — identical
@@ -38,13 +43,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .. import kernels as K
-from .common import group_fields_ddl, group_segments
+from .common import group_fields_ddl, group_segments, states_frame
 from ..spec import SketchSpec
 from ..state import SketchState
 
 SKETCH_VALUE_FIELDS = (
     "filters binary, hll_clients binary, hll_items binary, cms binary,"
     " kll binary, n_rows long, first_ts timestamp, last_ts timestamp"
+)
+SKETCH_VALUE_COLS = tuple(
+    f.split()[0] for f in SKETCH_VALUE_FIELDS.split(",")
 )
 
 # cap on the build's grouped-scatter scratch (HLL + CMS matrices of one
@@ -158,6 +166,14 @@ def build_sketches(
     derivation entirely (see SketchState.update); unused components
     merge as zeros.
     """
+    if mode not in ("map_combine", "shuffle_keys"):
+        raise ValueError(
+            f"mode must be 'map_combine' or 'shuffle_keys', not {mode!r}"
+        )
+    if salt is not None and mode != "shuffle_keys":
+        raise ValueError("salt needs mode='shuffle_keys'")
+    if salt is not None and salt < 1:
+        raise ValueError(f"salt must be >= 1, not {salt}")
     group_cols = list(group_cols)
     group_ddl = group_fields_ddl(df, group_cols)
     out_schema = f"{group_ddl}, {SKETCH_VALUE_FIELDS}"
@@ -177,7 +193,7 @@ def build_sketches(
         cols.append(ts_col)
     slim = df.select(*cols)
     if mode == "shuffle_keys":
-        if salt:
+        if salt is not None:
             slim = slim.withColumn(
                 "_salt", F.pmod(F.xxhash64(F.col(key_sha_col)), F.lit(salt))
             ).repartition(*group_cols, "_salt").drop("_salt")
@@ -278,17 +294,11 @@ def build_sketches(
                 firsts = tstats["_f"].to_numpy()
                 lasts = tstats["_l"].to_numpy()
             for gi, st in enumerate(sts):
-                st.n_rows += int(seg[gi + 1] - seg[gi])
-                if firsts is not None:
-                    f, l = firsts[gi], lasts[gi]
-                    if not pd.isna(f) and (
-                        st.first_ts is None or f < st.first_ts
-                    ):
-                        st.first_ts = f
-                    if not pd.isna(l) and (
-                        st.last_ts is None or l > st.last_ts
-                    ):
-                        st.last_ts = l
+                st.fold_counters(
+                    seg[gi + 1] - seg[gi],
+                    None if firsts is None else firsts[gi],
+                    None if lasts is None else lasts[gi],
+                )
                 if vals is not None:
                     st.kll.add(vals[seg[gi]: seg[gi + 1]])
             # grouped scatter: ONE hll/cms kernel call covers a whole
@@ -354,14 +364,26 @@ def build_sketches(
 
     partials = slim.mapInPandas(build_partials, schema=out_schema)
 
-    if mode == "shuffle_keys" and not salt:
+    if mode == "shuffle_keys" and salt is None:
         # the pre-repartition guarantees each group lives in exactly
         # one partition, so build_partials emits exactly ONE row per
         # group — the merge phase would only unpack and repack every
         # sketch row through one more exchange
         return partials
-    return partials.repartition(*group_cols).mapInPandas(
-        _merge_by_group(spec, group_cols), schema=out_schema
+    return _merge_phase(partials, spec, group_cols)
+
+
+def _merge_phase(
+    sketch_df: DataFrame, spec: SketchSpec, group_cols: Sequence[str]
+) -> DataFrame:
+    """Phase 2: merge sketch rows into one row per group — hash
+    partitioning on `group_cols` brings every row of a group into one
+    task, whose `_merge_by_group` folds them in place."""
+    group_cols = list(group_cols)
+    group_ddl = group_fields_ddl(sketch_df, group_cols)
+    return sketch_df.repartition(*group_cols).mapInPandas(
+        _merge_by_group(spec, group_cols),
+        schema=f"{group_ddl}, {SKETCH_VALUE_FIELDS}",
     )
 
 
@@ -375,16 +397,10 @@ def rollup_sketches(
     """W2: re-aggregate an hourly sketch table into coarser windows (e.g.
     '1 day').  Exact by merge associativity — no recomputation from raw
     data, which is the point of the mergeable-state algebra."""
-    group_cols = list(group_cols)
     df = sketch_df.withColumn(
         window_col, F.window(F.col(window_col), rollup_period)["start"]
     )
-    group_ddl = group_fields_ddl(df, [window_col] + group_cols)
-    out_schema = f"{group_ddl}, {SKETCH_VALUE_FIELDS}"
-    return df.repartition(window_col, *group_cols).mapInPandas(
-        _merge_by_group(spec, [window_col] + group_cols),
-        schema=out_schema,
-    )
+    return _merge_phase(df, spec, [window_col, *group_cols])
 
 
 def finalize_stats(
@@ -478,10 +494,12 @@ def per_filter_stats(
 def _merge_by_group(spec: SketchSpec, group_cols: list):
     """Merge-phase kernel: one Python invocation per PARTITION (not per
     group — applyInPandas pays its overhead per group, which hurts at
-    hundreds of tiny windows); hash partitioning guarantees each group
-    arrives whole, pandas groupby splits it locally."""
+    hundreds of tiny windows).  Each group keeps ONE state for the whole
+    partition and every packed row of every batch folds into it in
+    place (SketchState.fold_packed), so memory is bounded by the
+    partition's groups, never by its rows."""
 
-    value_cols = ("filters", "hll_clients", "hll_items", "cms", "kll")
+    value_cols = SKETCH_VALUE_COLS[:5]  # the packed sketch buffers
 
     def merge_all(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         states: dict[tuple, SketchState] = {}
@@ -498,24 +516,18 @@ def _merge_by_group(spec: SketchSpec, group_cols: list):
                 _last=("last_ts", "max"),
                 _n=("n_rows", "sum"),
             )
-            cols = {c: pdf[c].to_numpy() for c in value_cols}
+            cols = [pdf[c].to_numpy()[order] for c in value_cols]
             firsts = stats["_first"].to_numpy()
             lasts = stats["_last"].to_numpy()
             ns = stats["_n"].to_numpy()
             for g, gkey in enumerate(keys):
-                idx = order[seg[g]: seg[g + 1]]
-                # vectorized reduce over the group's rows (one numpy
-                # reduction per component, not one merge per row)
-                st = SketchState.merge_packed(
-                    spec, *(cols[c][idx] for c in value_cols)
-                )
-                st.n_rows = int(ns[g])
-                st.first_ts = (
-                    None if pd.isna(firsts[g]) else firsts[g]
-                )
-                st.last_ts = None if pd.isna(lasts[g]) else lasts[g]
-                merged = states.get(gkey)
-                states[gkey] = st if merged is None else merged.merge(st)
+                rows = [c[seg[g]: seg[g + 1]] for c in cols]
+                st = states.get(gkey)
+                if st is None:
+                    st = states[gkey] = SketchState.merge_packed(spec, *rows)
+                else:
+                    st.fold_packed(*rows)
+                st.fold_counters(ns[g], firsts[g], lasts[g])
         if states:
             yield _states_to_pdf(states, group_cols)
 
@@ -523,17 +535,7 @@ def _merge_by_group(spec: SketchSpec, group_cols: list):
 
 
 def _states_to_pdf(states: dict, group_cols: list) -> pd.DataFrame:
-    cols: dict[str, list] = {c: [] for c in group_cols}
-    vals: dict[str, list] = {
-        f.split()[0].strip(): [] for f in SKETCH_VALUE_FIELDS.split(",")
-    }
-    for gkey, st in states.items():
-        for c, v in zip(group_cols, gkey):
-            cols[c].append(v)
-        for k2, v in st.to_fields().items():
-            vals[k2].append(v)
-    cols.update(vals)
-    return pd.DataFrame(cols)
+    return states_frame(states, group_cols, SketchState.to_fields)
 
 
 def rollup_hierarchy(
@@ -578,9 +580,6 @@ def rollup_hierarchy(
     if len(set(gids)) != len(gids):
         raise ValueError(f"duplicate grouping sets: {sets}")
 
-    value_names = [
-        f.split()[0].strip() for f in SKETCH_VALUE_FIELDS.split(",")
-    ]
     # the FULL grouping set (gid 0) is the leaf table itself — its
     # rows pass through untouched instead of paying an explode +
     # shuffle + unpack/repack "merge" of singleton groups
@@ -593,7 +592,7 @@ def rollup_hierarchy(
     if 0 in gids:
         parts.append(
             sketch_df.select(
-                F.lit(0).cast("int").alias("gid"), *dims, *value_names
+                F.lit(0).cast("int").alias("gid"), *dims, *SKETCH_VALUE_COLS
             )
         )
     if merge_gids:
@@ -613,23 +612,17 @@ def rollup_hierarchy(
                 ).alias(d)
                 for i, d in enumerate(dims)
             ],
-            *value_names,
+            *SKETCH_VALUE_COLS,
         )
-        group_ddl = group_fields_ddl(masked, ["gid"] + dims)
-        schema = f"{group_ddl}, {SKETCH_VALUE_FIELDS}"
+        keys = ["gid", *dims]
+        schema = f"{group_fields_ddl(masked, keys)}, {SKETCH_VALUE_FIELDS}"
         # two-level merge: a map-side pre-merge caps every coarse
         # cell's partial count at the PARTITION count — without it the
         # global () cell funnels every leaf row into one task's serial
         # merge (the classic last-reducer skew, here with sketch
         # unpack costs per row)
-        pre = masked.mapInPandas(
-            _merge_by_group(spec, ["gid"] + dims), schema=schema
-        )
-        parts.append(
-            pre.repartition("gid", *dims).mapInPandas(
-                _merge_by_group(spec, ["gid"] + dims), schema=schema
-            )
-        )
+        pre = masked.mapInPandas(_merge_by_group(spec, keys), schema=schema)
+        parts.append(_merge_phase(pre, spec, keys))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -3,9 +3,11 @@
 The reference persists each period's state as an atomically-published
 binary file (O_TMPFILE + linkat, src/honas_state.c:476-543) and resumes by
 re-opening the active state (honas_gather.c:984-1010).  Here a checkpoint
-is a directory of per-window Parquet partitions, each published atomically
-(write to tmp dir + rename) together with a JSON manifest carrying lineage
+is a directory of per-window Parquet partitions, each published crash-safely
+(write to tmp dir, then `publish`'s rename-aside swap, which `recover`
+completes or rolls back) together with a JSON manifest carrying lineage
 (spec, input fingerprint, run id) and metrics (rows, bits set, estimates).
+The streaming store (streaming/stream.py) publishes through the same swap.
 
 Resume = enumerate manifests, skip windows already done (the anti-join the
 north rule asks for), build only the missing ones.  The same layout works
@@ -27,23 +29,67 @@ from ..spec import SketchSpec
 _MANIFEST = "manifest.json"
 
 
-def _part_dir(root: str, window_key: str) -> str:
-    return os.path.join(root, f"window={window_key}")
+def _part_dir(root: str, key: str) -> str:
+    return os.path.join(root, f"window={key}")
 
 
-def _window_key(value) -> str:
-    s = str(value)
-    return s.replace(" ", "T").replace(":", "-")
+def window_key(value) -> str:
+    """Directory-safe key of a window value (`window=KEY/`)."""
+    return str(value).replace(" ", "T").replace(":", "-")
+
+
+def window_dirs(root: str) -> list[str]:
+    """Sorted names of the published `window=` dirs under `root` — a
+    swap's `.old` copy and unpublished `.tmp-` dirs are not windows."""
+    if not os.path.isdir(root):
+        return []
+    return sorted(
+        n for n in os.listdir(root)
+        if n.startswith("window=") and not n.endswith(".old")
+        and ".tmp-" not in n
+    )
+
+
+def publish(tmp: str, final: str) -> None:
+    """Crash-safe swap of a fully written `tmp` dir into `final`: the
+    previous version is renamed aside before the new one lands, so no
+    crash point loses the window (the reference publishes states via
+    O_TMPFILE+linkat, src/honas_state.c:476-543; `recover` undoes a
+    half-done swap)."""
+    old = final + ".old"
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+    if os.path.isdir(final):
+        os.rename(final, old)
+    os.rename(tmp, final)
+    if os.path.isdir(old):
+        shutil.rmtree(old)
+
+
+def recover(root: str) -> None:
+    """Make a store consistent after a crash mid-publish: a `.old` dir
+    whose final is missing is rolled back; orphan `.old` and stray
+    `.tmp-` dirs are dropped."""
+    if not os.path.isdir(root):
+        return
+    for name in os.listdir(root):
+        path = os.path.join(root, name)
+        if name.endswith(".old"):
+            final = path[: -len(".old")]
+            if not os.path.isdir(final):
+                os.rename(path, final)  # crash between the 2 renames
+            else:
+                shutil.rmtree(path)
+        elif ".tmp-" in name:
+            shutil.rmtree(path)
 
 
 def list_done_windows(root: str) -> dict[str, dict]:
     """window_key -> manifest for every committed partition."""
     done = {}
-    if not os.path.isdir(root):
-        return done
-    for name in os.listdir(root):
+    for name in window_dirs(root):
         mpath = os.path.join(root, name, _MANIFEST)
-        if name.startswith("window=") and os.path.isfile(mpath):
+        if os.path.isfile(mpath):
             with open(mpath) as f:
                 done[name.split("=", 1)[1]] = json.load(f)
     return done
@@ -70,8 +116,7 @@ def commit_window(
     run_id: str,
 ) -> None:
     """Atomically publish one window's sketch rows + manifest."""
-    key = _window_key(window_value)
-    final = _part_dir(root, key)
+    final = _part_dir(root, window_key(window_value))
     tmp = final + f".tmp-{run_id}"
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)
@@ -86,9 +131,7 @@ def commit_window(
     }
     with open(os.path.join(tmp, _MANIFEST), "w") as f:
         json.dump(manifest, f, indent=2)
-    if os.path.isdir(final):
-        shutil.rmtree(final)
-    os.rename(tmp, final)  # atomic publish (linkat analog)
+    publish(tmp, final)
 
 
 def input_fingerprint(df: DataFrame, sha_col: str = "content_sha256") -> str:
@@ -131,11 +174,9 @@ def build_resumable(
     longer matches its manifest's fingerprint is rebuilt instead of
     silently reused."""
     write_spec(root, spec)
-    # sweep half-published tmp dirs from crashed runs (a tmp dir with a
-    # different run_id would otherwise linger forever)
-    for name in os.listdir(root):
-        if ".tmp-" in name:
-            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+    # undo a crashed run's half-done publish and sweep its tmp dirs (a
+    # tmp dir with a different run_id would otherwise linger forever)
+    recover(root)
     done = list_done_windows(root)
 
     has_sha = "content_sha256" in df.columns
@@ -155,7 +196,7 @@ def build_resumable(
     for r in fp_rows:
         w = r[window_col]
         windows.append(w)
-        fps[_window_key(w)] = (
+        fps[window_key(w)] = (
             f"n={r['n']},xor={r['x']}" if has_sha else f"rows={r['n']}"
         )
     windows.sort(key=str)
@@ -175,7 +216,7 @@ def build_resumable(
     todo = [
         w
         for w in windows
-        if _window_key(w) not in done or _window_key(w) in stale
+        if window_key(w) not in done or window_key(w) in stale
     ]
     if todo:
         missing = df.filter(F.col(window_col).isin(todo))
@@ -187,7 +228,7 @@ def build_resumable(
         for w in todo:
             wsk = sketch.filter(F.col(window_col) == F.lit(w))
             commit_window(
-                root, w, wsk, spec, fps[_window_key(w)],
+                root, w, wsk, spec, fps[window_key(w)],
                 {"sketch_rows": int(counts.get(w, 0))}, run_id,
             )
         sketch.unpersist()
@@ -195,11 +236,11 @@ def build_resumable(
 
 
 def read_checkpoint(spark: SparkSession, root: str) -> DataFrame:
+    recover(root)
     parts = [
         os.path.join(root, name, "data")
-        for name in sorted(os.listdir(root))
-        if name.startswith("window=")
-        and os.path.isfile(os.path.join(root, name, _MANIFEST))
+        for name in window_dirs(root)
+        if os.path.isfile(os.path.join(root, name, _MANIFEST))
     ]
     if not parts:
         raise FileNotFoundError(f"no committed windows under {root}")

@@ -135,42 +135,48 @@ class SketchState:
     def merge_packed(
         cls, spec: SketchSpec, filters, hll_clients, hll_items, cms, kll
     ) -> "SketchState":
-        """Reduce parallel sequences of serialized component buffers in
-        one vectorized pass: one bitwise_or.reduce / maximum.reduce /
-        add.reduce over the stacked buffers instead of P sequential
-        deserialize+merge round trips.  Bit-identical to folding with
-        merge() (associativity).  Counters/ts stats stay at their
-        zero/None defaults — the caller owns them (they aggregate
-        vectorized across ALL groups at once in _merge_by_group)."""
+        """A new state holding the fold (fold_packed) of parallel
+        sequences of serialized component buffers.  Bloom/HLL/CMS are
+        bit-identical to folding the decoded states with merge()
+        (associativity); the first KLL is adopted as-is and later ones
+        merge in arrival order.  Counters/ts stats stay at their
+        zero/None defaults — the caller owns them (fold_counters)."""
         out = cls(spec)
-        out.filters = np.bitwise_or.reduce(
-            np.stack([
-                K.bloom_unpack(b, spec.num_filters, spec.filter_bytes)
-                for b in filters
-            ]),
-            axis=0,
-        )
-        out.hll_clients = np.maximum.reduce(
-            np.stack([K.hll_unpack(b) for b in hll_clients]),
-            axis=0,
-        )
-        out.hll_items = np.maximum.reduce(
-            np.stack([K.hll_unpack(b) for b in hll_items]),
-            axis=0,
-        )
-        out.cms = np.add.reduce(
-            np.stack([
-                K.cms_unpack(b, spec.cms_depth, spec.cms_width)
-                for b in cms
-            ]),
-            axis=0,
-        ).astype(np.int64)
-        acc = None
+        out.kll = None  # not yet received: fold_packed adopts the first
+        out.fold_packed(filters, hll_clients, hll_items, cms, kll)
+        return out
+
+    def fold_packed(self, filters, hll_clients, hll_items, cms, kll) -> None:
+        """Fold parallel sequences of serialized component buffers into
+        this state in place, one decoded row at a time: bitwise OR /
+        register max / counter add straight into the state's own
+        arrays, so memory stays one state whatever the row count.  KLLs
+        merge in arrival order (a state whose `kll` is None adopts the
+        first one)."""
+        for b in filters:
+            K.bloom_fold(self.filters, b)
+        for b in hll_clients:
+            K.hll_fold(self.hll_clients, b)
+        for b in hll_items:
+            K.hll_fold(self.hll_items, b)
+        for b in cms:
+            K.cms_fold(self.cms, b)
         for b in kll:
             nxt = K.KLL.from_bytes(b)
-            acc = nxt if acc is None else acc.merge(nxt)
-        out.kll = acc
-        return out
+            self.kll = nxt if self.kll is None else self.kll.merge(nxt)
+
+    def fold_counters(self, n_rows, first_ts, last_ts) -> None:
+        """Add a row count and widen the first/last timestamps; NaN/NaT
+        (a group without timestamps) leaves them as they are."""
+        self.n_rows += int(n_rows)
+        if not pd.isna(first_ts) and (
+            self.first_ts is None or first_ts < self.first_ts
+        ):
+            self.first_ts = first_ts
+        if not pd.isna(last_ts) and (
+            self.last_ts is None or last_ts > self.last_ts
+        ):
+            self.last_ts = last_ts
 
     # ------------------------------------------------------------------ #
     # probe — honas_state_check_host_name_lookups (honas_state.c:456-474):#
@@ -237,14 +243,10 @@ class SketchState:
 
     @classmethod
     def from_fields(cls, spec: SketchSpec, row) -> "SketchState":
-        st = cls(spec)
-        st.filters = K.bloom_unpack(
-            row["filters"], spec.num_filters, spec.filter_bytes
-        )
-        st.hll_clients = K.hll_unpack(row["hll_clients"])
-        st.hll_items = K.hll_unpack(row["hll_items"])
-        st.cms = K.cms_unpack(row["cms"], spec.cms_depth, spec.cms_width)
-        st.kll = K.KLL.from_bytes(row["kll"])
+        st = cls.merge_packed(spec, *(
+            [row[c]]
+            for c in ("filters", "hll_clients", "hll_items", "cms", "kll")
+        ))
         st.n_rows = int(row["n_rows"])
         st.first_ts = row["first_ts"]
         st.last_ts = row["last_ts"]

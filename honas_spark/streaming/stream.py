@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..spec import SketchSpec
 from ..operators.sketch_agg import build_sketches, rollup_sketches
+from ..sources.checkpoint import publish, recover, window_dirs, window_key
 
 
 class StreamingSketchBuilder:
@@ -49,63 +50,13 @@ class StreamingSketchBuilder:
     def _store_path(self) -> str:
         return os.path.join(self.store_dir, "sketches")
 
-    @staticmethod
-    def _window_key(value) -> str:
-        return str(value).replace(" ", "T").replace(":", "-")
-
-    def _recover(self) -> None:
-        """Make the store consistent after a crash mid-publish: a
-        `.old` dir whose final is missing is rolled back; orphan `.old`
-        and stray `.tmp-*` dirs are dropped."""
-        import shutil
-
-        root = self._store_path()
-        if not os.path.isdir(root):
-            return
-        for name in os.listdir(root):
-            path = os.path.join(root, name)
-            if name.endswith(".old"):
-                final = path[: -len(".old")]
-                if not os.path.isdir(final):
-                    os.rename(path, final)  # crash between the 2 renames
-                else:
-                    shutil.rmtree(path)
-            elif ".tmp-" in name:
-                shutil.rmtree(path)
-
-    def _window_dirs(self) -> list[str]:
-        root = self._store_path()
-        if not os.path.isdir(root):
-            return []
-        return sorted(
-            os.path.join(root, n)
-            for n in os.listdir(root)
-            if n.startswith("window=") and not n.endswith(".old")
-            and ".tmp-" not in n
-        )
-
     def read_store(self, spark: SparkSession) -> Optional[DataFrame]:
-        self._recover()
-        dirs = self._window_dirs()
+        root = self._store_path()
+        recover(root)
+        dirs = window_dirs(root)
         if not dirs:
             return None
-        return spark.read.parquet(*dirs)
-
-    def _publish(self, tmp: str, final: str) -> None:
-        """Crash-safe swap: the previous version is renamed aside before
-        the new one lands, so no crash point loses the window (the
-        reference publishes states via O_TMPFILE+linkat,
-        src/honas_state.c:476-543; `_recover` undoes a half-done swap)."""
-        import shutil
-
-        old = final + ".old"
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-        if os.path.isdir(final):
-            os.rename(final, old)
-        os.rename(tmp, final)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
+        return spark.read.parquet(*(os.path.join(root, d) for d in dirs))
 
     def _read_manifest(self, final: str) -> Optional[dict]:
         import json
@@ -144,7 +95,8 @@ class StreamingSketchBuilder:
         import time as _time
 
         spark = batch_df.sparkSession
-        self._recover()
+        root = self._store_path()
+        recover(root)
         batch_sketches = build_sketches(
             batch_df,
             self.spec,
@@ -160,11 +112,10 @@ class StreamingSketchBuilder:
             .distinct()
             .collect()
         ]
-        root = self._store_path()
         os.makedirs(root, exist_ok=True)
         todo, existing = [], []
         for w in touched:
-            final = os.path.join(root, f"window={self._window_key(w)}")
+            final = os.path.join(root, f"window={window_key(w)}")
             man = self._read_manifest(final)
             if man is not None and man.get("last_epoch_id") == int(epoch_id):
                 continue  # replayed epoch: this batch is already merged
@@ -186,18 +137,18 @@ class StreamingSketchBuilder:
             self.group_cols,
         ).cache()
         # ONE write job for every touched window: partition dirs under a
-        # tmp root (`_recover` clears a stray one after a crash) ...
+        # tmp root (`recover` clears a stray one after a crash) ...
         tmp_root = os.path.join(root, f"all.tmp-{epoch_id}")
         if os.path.isdir(tmp_root):
             shutil.rmtree(tmp_root)
-        # the partition key MUST byte-match the Python-side _window_key
-        # used to locate the dirs below — so it IS _window_key, applied
+        # the partition key MUST byte-match the Python-side window_key
+        # used to locate the dirs below — so it IS window_key, applied
         # driver-side per touched window and shipped as a literal map
         # (windows per batch are bounded; a string-cast re-derivation in
         # SQL diverges on fractional-second window starts)
         wkey_map = F.create_map(
             *[x for w in touched
-              for x in (F.lit(w), F.lit(self._window_key(w)))]
+              for x in (F.lit(w), F.lit(window_key(w)))]
         )
         (
             merged.withColumn("_wkey", wkey_map[F.col(self.window_col)])
@@ -214,7 +165,7 @@ class StreamingSketchBuilder:
         merged.unpersist()
         batch_sketches.unpersist()
         for w in todo:
-            wk = self._window_key(w)
+            wk = window_key(w)
             tmp = os.path.join(tmp_root, f"_wkey={wk}")
             if not os.path.isdir(tmp):
                 # a todo window that merged to zero rows writes no
@@ -234,7 +185,7 @@ class StreamingSketchBuilder:
                     },
                     f,
                 )
-            self._publish(tmp, os.path.join(root, f"window={wk}"))
+            publish(tmp, os.path.join(root, f"window={wk}"))
         shutil.rmtree(tmp_root, ignore_errors=True)
 
     def start(

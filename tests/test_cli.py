@@ -45,6 +45,15 @@ def test_gather_writes_metrics_and_manifests(ckpt_dir):
         assert man["input_fingerprint"].startswith("n=")
 
 
+def test_gather_rejects_unknown_mode(tmp_path, capsys):
+    """--mode is one of the two build plans; a typo is a usage error."""
+    with pytest.raises(SystemExit) as exc:
+        main(["gather", "--input", str(tmp_path), "--output",
+              str(tmp_path / "out"), "--mode", "shuffle_key"])
+    assert exc.value.code == 2
+    assert "invalid choice" in capsys.readouterr().err
+
+
 def test_info_plotmode_csv(ckpt_dir, tmp_path):
     csv = str(tmp_path / "plot.csv")
     assert main(["info", "--state", ckpt_dir, "--plotmode", csv]) == 0

@@ -293,7 +293,7 @@ def test_streaming_store_crash_recovery(spark, tmp_path):
     os.rename(victim, victim + ".old")
     os.makedirs(victim + ".tmp-99")  # stray half-written tmp
 
-    got = builder.read_store(spark)  # triggers _recover
+    got = builder.read_store(spark)  # triggers recover
     assert got.count() == before
     assert os.path.isdir(victim)
     assert not os.path.isdir(victim + ".old")

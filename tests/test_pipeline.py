@@ -189,6 +189,65 @@ def test_checkpoint_stale_fingerprint_rebuilds(spark, tmp_path):
     assert len(calls) == 2
 
 
+def test_checkpoint_failed_recommit_keeps_previous_version(
+    spark, tmp_path, monkeypatch
+):
+    """Re-committing a window swaps the new version in crash-safely: if
+    the tmp -> final rename fails after the old version was moved aside,
+    recovery rolls the old version back and it is still read (and
+    listed as done)."""
+    root = str(tmp_path / "ckpt3")
+    corpus = generate_corpus(spark, 600, n_hours=2)
+    keyed = sha256_key(
+        with_window(corpus, "commit_ts", SPEC.window), "path"
+    )
+
+    def build_fn(wdf):
+        return build_sketches(wdf, SPEC, group_cols=["window_start"])
+
+    table = CP.build_resumable(
+        spark, keyed, SPEC, root, "window_start", [], build_fn, run_id="a"
+    )
+    before = table.collect()
+    assert len(before) == 2
+    w = before[0]["window_start"]
+    real_rename = os.rename
+
+    def failing_rename(src, dst):
+        if ".tmp-" in os.path.basename(src):
+            raise OSError("simulated crash before the publish rename")
+        real_rename(src, dst)
+
+    # a different, two-row version of the window
+    both = spark.createDataFrame(before, table.schema)
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", failing_rename)
+        with pytest.raises(OSError, match="simulated crash"):
+            CP.commit_window(root, w, both, SPEC, "fp", {}, run_id="b")
+    after = CP.read_checkpoint(spark, root).collect()
+    assert sorted(r["window_start"] for r in after) == sorted(
+        r["window_start"] for r in before
+    )
+    done = CP.list_done_windows(root)
+    assert len(done) == 2
+    assert {m["run_id"] for m in done.values()} == {"a"}
+    assert not [n for n in os.listdir(root) if not n.startswith(
+        ("window=", "_spec")) or n.endswith(".old") or ".tmp-" in n]
+
+
+@pytest.mark.parametrize("kw", [
+    dict(mode="shuffle_key"),
+    dict(mode="map_combine", salt=8),
+    dict(mode="shuffle_keys", salt=0),
+], ids=["unknown_mode", "salt_with_map_combine", "salt_below_one"])
+def test_build_sketches_rejects_bad_mode_and_salt(spark, kw):
+    """A misspelt mode, a salt map_combine would ignore and a salt
+    below 1 are errors, not a silently different plan."""
+    df = spark.createDataFrame([(0, b"\0" * 32)], "g int, key_sha binary")
+    with pytest.raises(ValueError):
+        build_sketches(df, SPEC, ["g"], **kw)
+
+
 def test_flatten_semantics(spark):
     """D1: sketches whose client estimate is below the threshold clamp
     hit counts to 0/1."""

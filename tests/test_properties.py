@@ -138,9 +138,10 @@ def test_merge_rejects_spec_mismatch():
     clients_strategy,
 )
 def test_merge_many_equals_sequential_fold(key_lists, clients):
-    """The merge phase's vectorized reduce (_merge_by_group over one
-    group's partial rows) must be bit-identical to folding the same
-    partials with pairwise merge(), counters and ts stats included."""
+    """The merge phase's in-place fold (_merge_by_group over one group's
+    partial rows, in one Arrow batch or split across 2 and 3) must be
+    bit-identical to folding the same partials with pairwise merge(),
+    counters and ts stats included."""
     from honas_spark.operators.sketch_agg import _merge_by_group
 
     states = [_build(ks, clients) for ks in key_lists]
@@ -155,15 +156,57 @@ def test_merge_many_equals_sequential_fold(key_lists, clients):
     for c in ("first_ts", "last_ts"):  # typed as Arrow hands them over
         sub[c] = pd.to_datetime(sub[c])
     sub.insert(0, "g", 0)
-    (out,) = _merge_by_group(SPEC, ["g"])(iter([sub]))
-    assert len(out) == 1
-    row = out.iloc[0]
-    vec = SketchState.from_fields(SPEC, row)
-    assert _exact_eq(seq, vec)
-    assert np.array_equal(seq.cms, vec.cms)
-    for got, want in ((row["first_ts"], seq.first_ts),
-                      (row["last_ts"], seq.last_ts)):
-        assert got == want or (want is None and pd.isna(got))
+    for n_batches in (1, 2, 3):
+        bounds = np.linspace(0, len(sub), n_batches + 1).astype(int)
+        batches = [sub.iloc[a:b] for a, b in zip(bounds, bounds[1:])]
+        (out,) = _merge_by_group(SPEC, ["g"])(iter(batches))
+        assert len(out) == 1
+        row = out.iloc[0]
+        vec = SketchState.from_fields(SPEC, row)
+        assert _exact_eq(seq, vec), n_batches
+        for got, want in ((row["first_ts"], seq.first_ts),
+                          (row["last_ts"], seq.last_ts)):
+            assert got == want or (want is None and pd.isna(got))
+
+
+def test_merge_by_group_memory_does_not_grow_with_rows():
+    """_merge_by_group folds each packed row into its group's state in
+    place: over N dense partial rows of one group the Python heap peak
+    stays a few dense sketches, whatever N (stacking the group's
+    unpacked rows would peak at N dense sketches)."""
+    import tracemalloc
+
+    from honas_spark.operators.sketch_agg import _merge_by_group
+
+    spec = SketchSpec(m_bits=1 << 18, k=3, num_filters=4,
+                      filters_per_user=2, cms_depth=4, cms_width=4096)
+    dense = SketchState(spec)
+    dense.filters[:] = 0xFF
+    dense.hll_clients[:] = 1
+    dense.hll_items[:] = 2
+    dense.cms[:] = 3
+    dense.n_rows = 1
+    fields = dense.to_fields()
+    dense_bytes = sum(len(fields[c]) for c in ("filters", "hll_clients",
+                                               "hll_items", "cms"))
+    assert dense_bytes == (spec.filters_blob_bytes + 2 * K.HLL_REGISTERS
+                           + spec.cms_bytes)
+    merge = _merge_by_group(spec, ["g"])
+    for n in (8, 64):
+        pdf = pd.DataFrame([fields] * n)
+        pdf.insert(0, "g", 0)
+        tracemalloc.start()
+        try:
+            (out,) = merge(iter([pdf]))
+            peak = tracemalloc.get_traced_memory()[1]
+        finally:
+            tracemalloc.stop()
+        assert peak < 4 * dense_bytes, (n, peak, dense_bytes)
+        got = SketchState.from_fields(spec, out.iloc[0])
+        assert got.n_rows == n
+        assert np.array_equal(got.filters, dense.filters)
+        assert np.array_equal(got.hll_items, dense.hll_items)
+        assert np.array_equal(got.cms, dense.cms * n)
 
 
 def test_pareto_coverage_property(spark):
