@@ -9,7 +9,15 @@ Scale shape: the query set is tiny (a search job), the sketch table is the
 big side -> the queries are precomputed on the driver (offsets per filter
 index, derived ONCE per key — not per sketch row) and shipped inside the
 mapInPandas closure (a broadcast).  No join, no shuffle: one pass over the
-sketch table."""
+sketch table.
+
+`search_probe` is the search in that one pass: like the reference
+(honas_search.c:188-217, 303-314) it folds the threshold, the flatten
+clamp and each group's filter-mask AND inside the loop, with numpy per
+Arrow batch, and emits only the key rows that pass the threshold plus one
+summary row per (sketch row, group) with results — never the cross
+product.  `probe_sketches` keeps the full cross product on the same
+per-row kernel."""
 
 from __future__ import annotations
 
@@ -22,6 +30,55 @@ from pyspark.sql import DataFrame
 from .. import kernels as K
 from ..spec import SketchSpec
 from .common import group_fields_ddl
+
+
+def _query_offsets(shas: list, spec: SketchSpec) -> list:
+    """Bloom offsets of every query, one (nq, k) array per filter index.
+
+    Derived executor-side (vectorized numpy over all queries x filters):
+    the closure ships only the 32-byte SHAs instead of k*F precomputed
+    offsets per key — ~10x less task payload for large query sets, and
+    the derivation runs in parallel across sketch partitions instead of
+    serial on the driver.  Callers derive lazily, so empty partitions pay
+    nothing."""
+    limbs = K.hashes_to_limbs(shas, spec.hash_len)
+    return [
+        K.bloom_offsets(K.transform_limbs(limbs, fi), spec.m_bits, spec.k)
+        for fi in range(spec.num_filters)
+    ]
+
+
+def _probe_rows(pdf: pd.DataFrame, spec: SketchSpec, offsets: list):
+    """Probe every query against every sketch row of one Arrow batch.
+
+    -> (hits (R, nq), filters_hit (R, nq), total_bits_set (R,),
+    est_clients (R,), est_items (R,)), all int64.  Preallocated numpy
+    matrices, no per-row Python lists: a 10k-key job costs numpy time,
+    not interpreter time."""
+    R, nq = len(pdf), len(offsets[0])
+    hits_mat = np.zeros((R, nq), dtype=np.int64)
+    mask_mat = np.zeros((R, nq), dtype=np.int64)
+    total_bits = np.zeros(R, dtype=np.int64)
+    est_clients = np.zeros(R, dtype=np.int64)
+    est_items = np.zeros(R, dtype=np.int64)
+    filt_col = pdf["filters"].to_numpy()
+    hllc_col = pdf["hll_clients"].to_numpy()
+    hlli_col = pdf["hll_items"].to_numpy()
+    for i in range(R):
+        # lightweight parse: the probe needs only the filters and HLLs —
+        # skip CMS/KLL deserialization entirely
+        filters = K.bloom_unpack(
+            filt_col[i], spec.num_filters, spec.filter_bytes
+        )
+        hm, mm = hits_mat[i], mask_mat[i]
+        for fi in range(spec.num_filters):
+            hit = K.bloom_probe(filters[fi], offsets[fi])
+            hm += hit
+            mm |= hit.astype(np.int64) << fi
+            total_bits[i] += K.bloom_bits_set(filters[fi])
+        est_clients[i] = K.hll_count(K.hll_unpack(hllc_col[i]))
+        est_items[i] = K.hll_count(K.hll_unpack(hlli_col[i]))
+    return hits_mat, mask_mat, total_bits, est_clients, est_items
 
 
 def probe_sketches(
@@ -42,7 +99,7 @@ def probe_sketches(
     # object dtype: group ids are optional in the reference job format
     # (README.md:296-339) — None rides the Arrow long column as null
     gids = np.array([q[0] for q in qlist], dtype=object)
-    keys = [q[1] for q in qlist]
+    keys_arr = np.array([q[1] for q in qlist], dtype=object)
     shas = [q[2] for q in qlist]
 
     group_ddl = group_fields_ddl(sketch_df, group_cols)
@@ -51,76 +108,149 @@ def probe_sketches(
         " filters_hit long, n_rows long, est_clients long, est_items long,"
         " total_bits_set long"
     )
-
     nq = len(qlist)
-    keys_arr = np.array(keys, dtype=object)
 
     def probe(batches):
-        # offsets are derived executor-side (vectorized numpy over all
-        # queries x filters): the closure ships only the 32-byte SHAs
-        # instead of k*F precomputed offsets per key — ~10x less task
-        # payload for large query sets, and the derivation runs in
-        # parallel across sketch partitions instead of serial on the
-        # driver.  Lazily, so empty partitions pay nothing.
-        per_filter_offsets = None
+        offsets = None
         for pdf in batches:
             if pdf.empty or nq == 0:
                 continue
-            if per_filter_offsets is None:
-                limbs = K.hashes_to_limbs(shas, spec.hash_len)
-                per_filter_offsets = [
-                    K.bloom_offsets(
-                        K.transform_limbs(limbs, fi), spec.m_bits, spec.k
-                    )
-                    for fi in range(spec.num_filters)
-                ]
-            # block assembly: the (R sketch rows x nq keys) output is
-            # built from preallocated numpy matrices + repeat/tile — no
-            # per-row Python lists, so a 10k-key job costs numpy time,
-            # not interpreter time
+            if offsets is None:
+                offsets = _query_offsets(shas, spec)
+            hits, masks, bits, est_c, est_i = _probe_rows(pdf, spec, offsets)
+            # block assembly of the (R sketch rows x nq keys) output:
+            # repeat/tile, no per-row Python lists
             R = len(pdf)
-            hits_mat = np.zeros((R, nq), dtype=np.int64)
-            mask_mat = np.zeros((R, nq), dtype=np.int64)
-            total_bits = np.zeros(R, dtype=np.int64)
-            est_clients = np.zeros(R, dtype=np.int64)
-            est_items = np.zeros(R, dtype=np.int64)
-            filt_col = pdf["filters"].to_numpy()
-            hllc_col = pdf["hll_clients"].to_numpy()
-            hlli_col = pdf["hll_items"].to_numpy()
-            for i in range(R):
-                # lightweight parse: the probe needs only the filters and
-                # HLLs — skip CMS/KLL deserialization entirely
-                filters = K.bloom_unpack(
-                    filt_col[i], spec.num_filters, spec.filter_bytes
-                )
-                hm, mm = hits_mat[i], mask_mat[i]
-                for fi in range(spec.num_filters):
-                    hit = K.bloom_probe(
-                        filters[fi], per_filter_offsets[fi]
-                    )
-                    hm += hit
-                    mm |= hit.astype(np.int64) << fi
-                    total_bits[i] += K.bloom_bits_set(filters[fi])
-                est_clients[i] = K.hll_count(
-                    K.hll_unpack(hllc_col[i])
-                )
-                est_items[i] = K.hll_count(
-                    K.hll_unpack(hlli_col[i])
-                )
             data = {
                 c: pdf[c].repeat(nq).reset_index(drop=True)
                 for c in group_cols
             }
             data["group_id"] = np.tile(gids, R)
             data["key"] = np.tile(keys_arr, R)
-            data["hits"] = hits_mat.reshape(-1)
-            data["filters_hit"] = mask_mat.reshape(-1)
+            data["hits"] = hits.reshape(-1)
+            data["filters_hit"] = masks.reshape(-1)
             data["n_rows"] = np.repeat(
                 pdf["n_rows"].to_numpy(dtype=np.int64), nq
             )
-            data["est_clients"] = np.repeat(est_clients, nq)
-            data["est_items"] = np.repeat(est_items, nq)
-            data["total_bits_set"] = np.repeat(total_bits, nq)
+            data["est_clients"] = np.repeat(est_c, nq)
+            data["est_items"] = np.repeat(est_i, nq)
+            data["total_bits_set"] = np.repeat(bits, nq)
+            yield pd.DataFrame(data)
+
+    return sketch_df.mapInPandas(probe, schema=out_schema)
+
+
+def search_probe(
+    sketch_df: DataFrame,
+    spec: SketchSpec,
+    queries: Sequence[tuple],
+    group_cols: Sequence[str],
+    flatten_on: str = "clients",
+) -> DataFrame:
+    """The honas-search result in one probe pass (`run_search`'s engine).
+
+    queries as for `probe_sketches`.  Per sketch row, with u =
+    filters_per_user:
+      * flattened = est_clients (est_items when flatten_on="hostnames")
+        < flatten_threshold; a flattened row's hits clamp to
+        hits < u ? 0 : 1 (honas_search.c:200-201) -> hits_out
+      * key rows: one per query whose RAW hits >= u (honas_search.c:
+        199-217), carrying hits, hits_out, filters_hit, flattened and
+        the row's diagnostics
+      * summary rows: per (sketch row, group_id) the AND of the group's
+        filter masks, all_found (every key hits_out > 0) and has_results
+        (some key hits_out > 0); one row per group with results, carrying
+        flattened and hits_by_all_hostnames = all_found ? (flattened ?
+        popcount(AND) >= u : popcount(AND)) : 0 (honas_search.c:303-314)
+    Group ids fold by value — two job groups with the same id are one
+    group, and a missing id (None) is its own group.
+
+    One schema, `summary` telling the two kinds apart:
+      group_cols..., group_id long, summary boolean, key string (null on
+      summaries), hits long, hits_out long, filters_hit long,
+      flattened boolean, hits_by_all_hostnames int (0 on key rows),
+      n_rows long, est_clients long, est_items long, total_bits_set long
+    """
+    group_cols = list(group_cols)
+    qlist = list(queries)
+    gids = np.array([q[0] for q in qlist], dtype=object)
+    keys_arr = np.array([q[1] for q in qlist], dtype=object)
+    shas = [q[2] for q in qlist]
+    nq = len(qlist)
+    # query columns sorted by group, so each group is one contiguous
+    # segment for the ufunc .reduceat folds; factorize folds equal ids
+    # and keeps None as its own group, but its uniques turn None into
+    # NaN, so each group's id is read back from its first query
+    codes, _ = pd.factorize(gids, use_na_sentinel=False)
+    order = np.argsort(codes, kind="stable")
+    starts = np.searchsorted(
+        codes[order], np.arange(codes.max(initial=-1) + 1)
+    )
+    group_ids = gids[order[starts]]
+    u = spec.filters_per_user
+    threshold = spec.flatten_threshold
+    use_clients = flatten_on == "clients"
+
+    group_ddl = group_fields_ddl(sketch_df, group_cols)
+    out_schema = (
+        f"{group_ddl}, group_id long, summary boolean, key string,"
+        " hits long, hits_out long, filters_hit long, flattened boolean,"
+        " hits_by_all_hostnames int, n_rows long, est_clients long,"
+        " est_items long, total_bits_set long"
+    )
+
+    def probe(batches):
+        offsets = None
+        for pdf in batches:
+            if pdf.empty or nq == 0:
+                continue
+            if offsets is None:
+                offsets = _query_offsets(shas, spec)
+            hits, masks, bits, est_c, est_i = _probe_rows(pdf, spec, offsets)
+            flat = (est_c if use_clients else est_i) < threshold
+            found = hits >= u
+            # the flatten clamp is hits < u ? 0 : 1, not min(hits, 1)
+            hits_out = np.where(flat[:, None], found, hits)
+            pos = (hits_out > 0)[:, order]
+            and_mask = np.bitwise_and.reduceat(
+                masks[:, order], starts, axis=1
+            )
+            and_pop = sum(
+                (and_mask >> fi) & 1 for fi in range(spec.num_filters)
+            )
+            by_all = np.where(
+                np.logical_and.reduceat(pos, starts, axis=1),
+                np.where(flat[:, None], and_pop >= u, and_pop),
+                0,
+            )
+            has_results = np.logical_or.reduceat(pos, starts, axis=1)
+            kr, kq = np.nonzero(found)
+            sr, sg = np.nonzero(has_results)
+            nk, ns = len(kr), len(sr)
+            if nk + ns == 0:
+                continue  # never yield an empty frame
+            rows = np.concatenate([kr, sr])
+            zeros = np.zeros(ns, dtype=np.int64)
+            data = {
+                c: pdf[c].take(rows).reset_index(drop=True)
+                for c in group_cols
+            }
+            data["group_id"] = np.concatenate([gids[kq], group_ids[sg]])
+            data["summary"] = np.arange(nk + ns) >= nk
+            data["key"] = np.concatenate(
+                [keys_arr[kq], np.full(ns, None, dtype=object)]
+            )
+            data["hits"] = np.concatenate([hits[kr, kq], zeros])
+            data["hits_out"] = np.concatenate([hits_out[kr, kq], zeros])
+            data["filters_hit"] = np.concatenate([masks[kr, kq], zeros])
+            data["flattened"] = flat[rows]
+            data["hits_by_all_hostnames"] = np.concatenate(
+                [np.zeros(nk, np.int32), by_all[sr, sg].astype(np.int32)]
+            )
+            data["n_rows"] = pdf["n_rows"].to_numpy(dtype=np.int64)[rows]
+            data["est_clients"] = est_c[rows]
+            data["est_items"] = est_i[rows]
+            data["total_bits_set"] = bits[rows]
             yield pd.DataFrame(data)
 
     return sketch_df.mapInPandas(probe, schema=out_schema)

@@ -15,7 +15,12 @@ Result semantics (src/bin/honas_search.c:129-421):
     of the per-key filter-hit bitmasks across ALL keys of the group — any
     missing key zeroes it (honas_search.c:303-314)
 
-Everything after the probe is plain DataFrame expressions."""
+Like the reference, the probe loop folds all three: one `mapInPandas`
+pass (`operators.probe.search_probe`) applies the threshold and the
+flatten clamp and ANDs each group's masks with numpy, and sends back only
+the key rows that pass plus one summary row per (sketch row, group) with
+results.  `run_search` materialises that pass once and derives both
+result frames from it."""
 
 from __future__ import annotations
 
@@ -27,7 +32,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, functions as F
 
 from .spec import SketchSpec
-from .operators.probe import probe_sketches
+from .operators.probe import search_probe
 from .operators.common import duckdb_round
 
 
@@ -58,7 +63,12 @@ def parse_search_job(job: "dict | str") -> list[tuple]:
         if gid is not None:
             if isinstance(gid, bool) or not isinstance(gid, (int, float)):
                 raise ValueError(f"group id must be numeric, got {gid!r}")
+            if isinstance(gid, float) and not math.isfinite(gid):
+                raise ValueError(f"group id must be finite, got {gid!r}")
             gid = int(gid)
+            # the result's group_id column is a signed 64-bit long
+            if not -(1 << 63) <= gid < 1 << 63:
+                raise ValueError(f"group id {gid} is outside signed int64")
         hostnames = grp.get("hostnames", {})
         if not isinstance(hostnames, dict):
             raise ValueError("'hostnames' must be an object")
@@ -181,56 +191,26 @@ def run_search(
     (README.md:607-614); "hostnames" reproduces the reference BINARY's
     actual compare (honas_search.c:378 uses
     estimated_number_of_host_names — Quirk Q2) for byte-level parity on
-    states whose two estimates straddle the threshold."""
+    states whose two estimates straddle the threshold.
+
+    Runs one Spark job when called: the folded probe (`search_probe`) is
+    materialised once with `localCheckpoint`, and both frames are
+    filters/projections of that checkpoint, so collecting them never
+    re-runs the probe.
+
+    Group results are per sketch row (the reference's per-state
+    semantics): one group row per (sketch row, group_id) with results.
+    That equals a group-by over (group_cols, group_id) whenever
+    group_cols identify a sketch row, as they do for every table
+    `build_sketches`, the rollups, the checkpoint store and the .hs
+    import produce."""
     if flatten_on not in ("clients", "hostnames"):
         raise ValueError(f"flatten_on must be clients|hostnames: {flatten_on}")
     group_cols = list(group_cols)
     queries = parse_search_job(job)
-    probed = probe_sketches(sketch_df, spec, queries, group_cols)
-
-    u_lit = F.lit(spec.filters_per_user)
-    est_col = "est_clients" if flatten_on == "clients" else "est_items"
-    flattened = F.col(est_col) < F.lit(spec.flatten_threshold)
-    # Flatten clamp per the reference (honas_search.c:200-201):
-    # hits = hits < filters_per_user ? 0 : 1 — NOT least(hits, 1), which
-    # would report 1 for a key whose raw hits are in [1, u-1].
-    probed = probed.withColumn("flattened", flattened).withColumn(
-        "hits_out",
-        F.when(
-            flattened,
-            F.when(F.col("hits") < u_lit, F.lit(0)).otherwise(F.lit(1)),
-        ).otherwise(F.col("hits")),
-    )
-
-    # group AND over ALL keys (before the per-key threshold filter).
-    # Reference semantics (honas_search.c:188-217, 303-314):
-    #   * a group is emitted only if at least one key had post-flatten
-    #     hits > 0 (group_has_results)
-    #   * hits_by_all_hostnames = popcount of the AND of per-key masks,
-    #     zeroed unless EVERY key had post-flatten hits > 0
-    #     (group_all_host_names_found), with the same flatten clamp.
-    group_df = (
-        probed.groupBy(*group_cols, "group_id")
-        .agg(
-            F.bit_count(F.bit_and(F.col("filters_hit"))).alias("and_pop"),
-            F.max("flattened").alias("flattened"),
-            F.min((F.col("hits_out") > 0).cast("int")).alias("all_found"),
-            F.max((F.col("hits_out") > 0).cast("int")).alias("has_results"),
-        )
-        .withColumn(
-            "hits_by_all_hostnames",
-            F.when(F.col("all_found") == 0, F.lit(0)).otherwise(
-                F.when(
-                    F.col("flattened"),
-                    F.when(F.col("and_pop") < u_lit, F.lit(0)).otherwise(
-                        F.lit(1)
-                    ),
-                ).otherwise(F.col("and_pop"))
-            ),
-        )
-        .filter(F.col("has_results") == 1)
-        .drop("and_pop", "all_found", "has_results")
-    )
+    folded = search_probe(
+        sketch_df, spec, queries, group_cols, flatten_on
+    ).localCheckpoint()
 
     # D5: coarse per-key client estimate from the hit count (a key seen
     # by more distinct clients lands in more of the F filters;
@@ -247,21 +227,21 @@ def run_search(
         )
     )
 
-    key_df = (
-        probed.filter(F.col("hits") >= F.lit(spec.filters_per_user))
-        .select(
-            *group_cols,
-            "group_id",
-            "key",
-            F.col("hits_out").alias("hits"),
-            "filters_hit",
-            "flattened",
-            duckdb_round(est_clients_for_hits, 2).alias("est_key_clients"),
-            "n_rows",
-            "est_clients",
-            "est_items",
-            "total_bits_set",
-        )
+    key_df = folded.filter(~F.col("summary")).select(
+        *group_cols,
+        "group_id",
+        "key",
+        F.col("hits_out").alias("hits"),
+        "filters_hit",
+        "flattened",
+        duckdb_round(est_clients_for_hits, 2).alias("est_key_clients"),
+        "n_rows",
+        "est_clients",
+        "est_items",
+        "total_bits_set",
+    )
+    group_df = folded.filter(F.col("summary")).select(
+        *group_cols, "group_id", "flattened", "hits_by_all_hostnames"
     )
     return key_df, group_df
 

@@ -85,6 +85,27 @@ def test_parse_search_job_reference_contract():
         parse_search_job(
             {"groups": [{"id": 1, "hostnames": {"a": "zz" * 32}}]}
         )
+    # ids keep int() truncation across the whole signed int64 range
+    for raw, gid in ((str(-(2**63)), -(2**63)), (str(2**63 - 1), 2**63 - 1),
+                     ("7.0", 7), ("2.5", 2)):
+        job = '{"groups": [{"id": %s, "hostnames": {"a": "%s"}}]}' % (
+            raw, "0" * 64
+        )
+        assert parse_search_job(job) == [(gid, "a", b"\x00" * 32)]
+
+
+@pytest.mark.parametrize(
+    "raw_id", ["Infinity", "-Infinity", "NaN", "1e30", str(2**63)]
+)
+def test_parse_search_job_rejects_ids_outside_int64(raw_id):
+    """A group id must fit the result's signed 64-bit group_id column:
+    non-finite and out-of-range ids raise ValueError at parse time, not
+    OverflowError here or an Arrow error inside a Spark task."""
+    job = '{"groups": [{"id": %s, "hostnames": {"a": "%s"}}]}' % (
+        raw_id, "0" * 64
+    )
+    with pytest.raises(ValueError, match="group id"):
+        parse_search_job(job)
 
 
 # ---------------------------------------------------------------------------
