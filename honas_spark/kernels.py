@@ -152,11 +152,31 @@ def hashes_to_limbs(hashes, hash_len: int = 32) -> np.ndarray:
     Limbs are little-endian (limb 0 least significant) — the reference
     treats the hash as a little-endian big integer (byte_slice mul,
     tests/byte_slice.c:259-305).
+
+    Digests longer than hash_len are truncated to their first hash_len
+    bytes.  A None digest (a NULL key_sha) or one shorter than hash_len
+    raises ValueError: joined as-is, it would shift every later row's
+    limbs by its missing bytes.
     """
-    if len(hashes) == 0:
+    n = len(hashes)
+    if n == 0:
         return np.empty((0, hash_len // 4), dtype=np.uint32)
-    buf = b"".join(hashes)
-    if len(buf) != len(hashes) * hash_len:
+    try:
+        lens = np.fromiter(map(len, hashes), dtype=np.int64, count=n)
+    except TypeError:
+        i = next(i for i, h in enumerate(hashes) if not hasattr(h, "__len__"))
+        raise ValueError(
+            f"digest {i} is {hashes[i]!r}, not {hash_len} bytes"
+            " (a NULL key_sha?)"
+        ) from None
+    if lens.min() < hash_len:
+        i = int(np.argmin(lens))
+        raise ValueError(
+            f"digest {i} has {lens[i]} bytes, fewer than hash_len={hash_len}"
+        )
+    if lens.max() == hash_len:
+        buf = b"".join(hashes)
+    else:
         # inputs longer than hash_len (e.g. full 32-byte digests with a
         # truncating spec): keep the first hash_len bytes of each
         buf = b"".join(h[:hash_len] for h in hashes)
@@ -211,6 +231,8 @@ def bloom_offsets(
     `limbs` is (N, n_limbs) uint32 little-endian; consumed (copied inside).
     Matches reference golden vectors (tests/bloom.c:93-137) for 4-byte
     hashes and the mul64 path (bloom.c:58-84) for 8-byte-multiple hashes.
+    Up to one block of rows comes back as the transpose of the kernel's
+    column-major tail (Fortran order); more rows concatenate to C order.
 
     Cache-blocked: rows are independent, and the k x n_limbs inner
     passes re-walk the whole limb matrix — processing 4096-row blocks
@@ -235,8 +257,10 @@ def _bloom_offsets_block(limbs: np.ndarray, m_bits: int, k: int) -> np.ndarray:
     mode64 = nl % 2 == 0
     bs = m_bits
     num = min(k, m_bits)
-    off = np.zeros((n, num), dtype=np.int64)
-    rows = np.arange(n)
+    # the placed offsets, column-major: tail[j:] holds the sorted draws
+    # so far, one contiguous row of n values per position
+    tail = np.empty((num, n), dtype=np.uint64)
+    ge = np.empty(n, dtype=bool)
     # work in a column-major uint64 limb matrix: every inner op runs on a
     # contiguous column with preallocated scratch (no per-step temporaries
     # — this loop runs 8 x k times per batch and is the engine's hottest
@@ -272,27 +296,25 @@ def _bloom_offsets_block(limbs: np.ndarray, m_bits: int, k: int) -> np.ndarray:
             else:
                 np.bitwise_and(tmp, _MASK32, out=L[0])
         # collision-shift insert (bloom.c:73-82 / 101-109): the C scan
-        # "while new >= tail[i]: skip past it, new++" places the draw at
-        # the d-th UNOCCUPIED slot — i.e. the smallest fixed point of
-        # v = d + |{prev <= v}| (prev values are distinct by
-        # construction).  Iterating that equation is pure contiguous
-        # compares+sums — an order of magnitude faster than the
-        # scatter/gather insertion sort it replaces (same result,
-        # verified by the reference golden vectors).
-        v = overflow.astype(np.int64)
-        t = num - j  # values already placed (in columns j..num-1)
-        if t > 0:
-            prev = off[:, j:num]
-            d = v.copy()
-            while True:
-                nv = d + (prev <= v[:, None]).sum(axis=1)
-                if (nv == v).all():
-                    break
-                v = nv
-        off[:, j - 1] = v
+        # "while new >= tail[i]: skip past it, new++" over the sorted
+        # tail, run for every row at once.  v only grows and the tail
+        # ascends, so once a row stops (v < tail[i]) no later position
+        # can bump it again: scanning the whole tail without the break
+        # gives the C result, one compare and one add per position.
+        v = overflow  # the carry buffer, reset before the next draw
+        for i in range(j, num):
+            np.greater_equal(v, tail[i], out=ge)
+            np.add(v, ge, out=v)
+        # merge v into the tail, which moves down one slot: position
+        # i-1 takes min(v, tail[i]) and v keeps the max, so tail[j-1:]
+        # is sorted again and no final sort is needed
+        for i in range(j, num):
+            np.minimum(v, tail[i], out=tail[i - 1])
+            np.maximum(v, tail[i], out=v)
+        tail[num - 1] = v
         bs -= 1
-    off.sort(axis=1)
-    return off
+    # values < m_bits < 2^32, so the int64 view reads the same numbers
+    return tail.view(np.int64).T
 
 
 # ---------------------------------------------------------------------------
@@ -458,40 +480,22 @@ def _pack_nonzero(
     the Bloom-bitset and CMS-counter variants of the HLL sparse
     encoding — the one merge protocol's one sparse format.
 
-    uint8 arrays (Bloom bitsets, HLL registers — the per-group hot
-    path) scan as uint64 WORDS first: np.nonzero's per-byte
-    extraction runs ~2ns/element, so on a 64 KiB row the scan itself
-    dominated the pack.  The word pass is a SIMD compare over 8x
-    fewer elements; nnz >= nonzero-word count, so a word count that
-    already loses to dense returns None without extracting anything
-    (a nearly-full build sketch pays ONE cheap count, not a wasted
-    index materialization), and a sparse row extracts bytes only from
-    its few nonzero words.  Indices and bytes are identical to the
-    plain flatnonzero path (pinned by
-    tests/test_r07_hardening.py::test_grouped_scatter_and_u8_fastpath_bit_identical)."""
+    The exact nnz comes from ONE SIMD count reduction, so a row too
+    full for sparse returns None having paid only the count, never an
+    index extraction it would throw away.  A sparse row then extracts
+    its indexes from a `!= 0` bool mask: np.flatnonzero over a bool
+    array is several times faster than over the uint8 values
+    themselves (~2 ns/element), and faster than pre-scanning uint64
+    words and gathering their 8 candidate bytes at every size and
+    fill measured.  Indexes ascend, so the bytes equal the plain
+    flatnonzero encoding (pinned by tests/test_kernels_reference.py)."""
     pair = np.dtype(idx_dtype).itemsize + np.dtype(val_dtype).itemsize
     dense_bytes = flat.size * flat.itemsize
-    # exact nnz via ONE SIMD count reduction (no index materialization):
-    # a too-full row returns None having paid only the count, never the
-    # extraction it would throw away
     nnz = int(np.count_nonzero(flat))
     if 5 + pair * nnz >= dense_bytes:
         return None
-    if (
-        flat.dtype == np.uint8
-        and flat.size % 8 == 0
-        and flat.flags.c_contiguous
-    ):
-        cand = (
-            np.flatnonzero(flat.view("<u8"))[:, None] * 8 + np.arange(8)
-        ).reshape(-1)
-        vals = flat[cand]
-        mask = vals != 0
-        nz = cand[mask]
-        nzv = vals[mask]
-    else:
-        nz = np.flatnonzero(flat)
-        nzv = flat[nz]
+    nz = np.flatnonzero(flat != 0)
+    nzv = flat[nz]
     return (
         bytes([_HLL_SPARSE_MAGIC])
         + np.array(nz.size, dtype="<u4").tobytes()

@@ -350,9 +350,9 @@ def test_count_sketch_f2_lowbits_equals_conv(spark):
 
 
 def test_grouped_scatter_and_u8_fastpath_bit_identical():
-    """The bulk-flush grouped HLL/CMS scatter and the word-level
-    sparse-pack fast path must be BIT-identical to the per-group
-    kernels they replace (the .hs interop and every gate hash ride on
+    """The bulk-flush grouped HLL/CMS scatter and the bool-mask
+    sparse pack must be BIT-identical to the per-group kernels and the
+    plain flatnonzero encoding they replace (the .hs interop and every gate hash ride on
     the exact register/counter/byte values)."""
     import numpy as np
     from honas_spark import kernels as K
@@ -375,8 +375,8 @@ def test_grouped_scatter_and_u8_fastpath_bit_identical():
         K.cms_add(cref, hashes[seg[g]:seg[g + 1]])
         assert np.array_equal(cref, cmats[g]), g
 
-    # the word-level u8 pack fast path emits byte-identical buffers
-    # to the naive flatnonzero reference across density regimes
+    # the u8 sparse pack emits byte-identical buffers to the naive
+    # flatnonzero reference across density regimes
     # (empty, sparse, half-dense, fully dense, unaligned, int64)
     def ref_pack(flat, idx_dtype, val_dtype):
         nz = np.flatnonzero(flat)
