@@ -373,7 +373,7 @@ def cmd_rotate(args) -> int:
     honas_daily_state_combine.py): roll the checkpoint's windows up to a
     coarser period into a new checkpoint — exact by merge associativity,
     no raw data touched."""
-    from pyspark.sql import functions as F
+    from dataclasses import replace
 
     from .operators.sketch_agg import rollup_sketches
     from .sources import checkpoint as CP
@@ -387,22 +387,16 @@ def cmd_rotate(args) -> int:
     ]
     rolled = rollup_sketches(
         df, spec, "window_start", args.period, group_cols
-    ).cache()
-    windows = [r[0] for r in rolled.select("window_start").distinct().collect()]
-    from dataclasses import replace
-
+    )
     out_spec = replace(spec, window=args.period)
     CP.write_spec(args.output, out_spec)
-    for w in windows:
-        CP.commit_window(
-            args.output, w,
-            rolled.filter(F.col("window_start") == F.lit(w)),
-            out_spec,
-            input_fingerprint=f"rotated-from={args.state}",
-            metrics={}, run_id=args.run_id,
-        )
-    rolled.unpersist()
-    print(f"rotated {len(windows)} {args.period} windows -> {args.output}")
+    n = CP.write_windows(
+        args.output, rolled, "window_start",
+        {"spec": out_spec.to_dict(),
+         "input_fingerprint": f"rotated-from={args.state}"},
+        args.run_id,
+    )
+    print(f"rotated {n} {args.period} windows -> {args.output}")
     return 0
 
 

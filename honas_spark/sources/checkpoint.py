@@ -1,13 +1,28 @@
-"""Checkpointed, resumable sketch builds with per-partition lineage.
+"""The sketch store: one writer, one manifest schema and one reader for the
+per-window sketch rows of batch builds, rotations and streams.
 
 The reference persists each period's state as an atomically-published
 binary file (O_TMPFILE + linkat, src/honas_state.c:476-543) and resumes by
-re-opening the active state (honas_gather.c:984-1010).  Here a checkpoint
-is a directory of per-window Parquet partitions, each published crash-safely
-(write to tmp dir, then `publish`'s rename-aside swap, which `recover`
-completes or rolls back) together with a JSON manifest carrying lineage
-(spec, input fingerprint, run id) and metrics (rows, bits set, estimates).
-The streaming store (streaming/stream.py) publishes through the same swap.
+re-opening the active state (honas_gather.c:984-1010).  Here a store is a
+directory holding `_spec.json` and one `window=KEY/` dir per window: the
+window's sketch rows as Parquet under `data/`, and a `manifest.json` with
+`window`, `run_id`, `committed_at`, `sketch_rows` and `spec`, plus the
+`input_fingerprint` of a batch build or the `last_epoch_id` of a stream.
+This module is the only one that knows the layout and the key format:
+
+- `write_windows` publishes any number of windows with ONE Spark write
+  job, then swaps each window in with `publish`'s rename-aside swap,
+  which `recover` completes or rolls back after a crash.
+  `build_resumable`, `commit_window`, the CLI's `rotate` and the streaming
+  sink (streaming/stream.py) all write through it.
+- `read_checkpoint` reads every committed window, or the named ones.
+  Stores written by the earlier streaming sink, with the Parquet files and
+  a `_manifest.json` directly in `window=KEY/`, read in place until a
+  batch rewrites their windows.
+- `window_key` computes the keys in Spark, in the session time zone.
+  Earlier code keyed windows in the driver's local zone; before it
+  resumes a build or merges a stream's first batch, `check_window_keys`
+  refuses a store whose earlier-format windows carry such keys.
 
 Resume = enumerate manifests, skip windows already done (the anti-join the
 north rule asks for), build only the missing ones.  The same layout works
@@ -20,22 +35,27 @@ import json
 import os
 import shutil
 import time
-from typing import Sequence
+from pathlib import Path
+from typing import Collection, Mapping, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from ..spec import SketchSpec
 
 _MANIFEST = "manifest.json"
 
 
-def _part_dir(root: str, key: str) -> str:
-    return os.path.join(root, f"window={key}")
+def window_key(col: str) -> Column:
+    """Directory-safe key of each row's window (`window=KEY/`), for a
+    TIMESTAMP or TIMESTAMP_NTZ column.
 
-
-def window_key(value) -> str:
-    """Directory-safe key of a window value (`window=KEY/`)."""
-    return str(value).replace(" ", "T").replace(":", "-")
+    Computed in Spark, in the session time zone: a window value collected
+    to the driver becomes a local-time datetime, which folds the two
+    hours of a DST fall-back into one."""
+    # microseconds only when a window starts between whole seconds
+    return F.regexp_replace(
+        F.date_format(col, "yyyy-MM-dd'T'HH-mm-ss.SSSSSS"), r"\.0{6}$", ""
+    )
 
 
 def window_dirs(root: str) -> list[str]:
@@ -69,7 +89,8 @@ def publish(tmp: str, final: str) -> None:
 def recover(root: str) -> None:
     """Make a store consistent after a crash mid-publish: a `.old` dir
     whose final is missing is rolled back; orphan `.old` and stray
-    `.tmp-` dirs are dropped."""
+    `.tmp-` dirs (of any run id) are dropped.  Every read and write of
+    the windows runs it first."""
     if not os.path.isdir(root):
         return
     for name in os.listdir(root):
@@ -84,15 +105,52 @@ def recover(root: str) -> None:
             shutil.rmtree(path)
 
 
-def list_done_windows(root: str) -> dict[str, dict]:
-    """window_key -> manifest for every committed partition."""
-    done = {}
+def _committed(
+    root: str, keys: Optional[Collection[str]] = None
+) -> dict[str, tuple[str, str]]:
+    """window key -> (data path, manifest path) of every committed window,
+    or of the windows whose keys are in `keys`."""
+    recover(root)
+    out = {}
     for name in window_dirs(root):
-        mpath = os.path.join(root, name, _MANIFEST)
-        if os.path.isfile(mpath):
-            with open(mpath) as f:
-                done[name.split("=", 1)[1]] = json.load(f)
-    return done
+        if keys is not None and name.split("=", 1)[1] not in keys:
+            continue
+        wdir = os.path.join(root, name)
+        for data, manifest in (
+            (os.path.join(wdir, "data"), os.path.join(wdir, _MANIFEST)),
+            (wdir, os.path.join(wdir, "_manifest.json")),  # earlier stream
+        ):
+            if os.path.isfile(manifest):
+                out[name.split("=", 1)[1]] = (data, manifest)
+                break
+    return out
+
+
+def list_done_windows(
+    root: str, keys: Optional[Collection[str]] = None
+) -> dict[str, dict]:
+    """window key -> manifest for every committed window, or for the
+    windows whose keys are in `keys`."""
+    return {k: json.loads(Path(m).read_text())
+            for k, (_, m) in _committed(root, keys).items()}
+
+
+def check_window_keys(spark: SparkSession, root: str, window_col: str) -> None:
+    """Refuse to extend a store whose earlier-format windows (manifest
+    `window` not equal to the key) carry keys that the windows' own
+    `window_col` values no longer give.  Earlier code keyed windows in the
+    driver's local time zone; resuming such a store would add a second
+    copy of each window under its session-zone key."""
+    old = {k for k, m in list_done_windows(root).items()
+           if m.get("window") != k}
+    if old:
+        keys = read_checkpoint(spark, root, old).select(window_key(window_col))
+        new = {r[0] for r in keys.distinct().collect()}
+        if new != old:
+            raise ValueError(
+                f"{root}: windows {sorted(old)} hold the data of windows "
+                f"{sorted(new)}, keyed in another time zone; rebuild the "
+                "store, or `rotate` it into a new one")
 
 
 def write_spec(root: str, spec: SketchSpec) -> None:
@@ -106,6 +164,52 @@ def read_spec(root: str) -> SketchSpec:
         return SketchSpec.from_dict(json.load(f))
 
 
+def write_windows(
+    root: str,
+    rows: DataFrame,
+    key: str,
+    fields: dict,
+    run_id: str,
+    fingerprints: Optional[Mapping[str, str]] = None,
+) -> int:
+    """Publish every window of `rows` (windowed by column `key`) under
+    `root` with ONE Spark write job, whatever the number of windows, and
+    return how many were published.
+
+    Every manifest records `fields` besides the `window`, `run_id`,
+    `committed_at` and `sketch_rows` written here, and window `k`'s
+    `input_fingerprint` is `fingerprints[k]` when that is given; a window
+    without one fails before anything is written.
+    Each window is moved from the job's output into its own tmp dir and
+    swapped in by `publish`, so a crash leaves every window at its old or
+    its new version.  A window without rows publishes nothing."""
+    recover(root)
+    rows = rows.withColumn("_wkey", window_key(key)).cache()
+    counts = dict(rows.groupBy("_wkey").count().collect())
+    if fingerprints is not None and counts.keys() - fingerprints.keys():
+        rows.unpersist()
+        raise ValueError(f"no input fingerprint for windows "
+                         f"{sorted(counts.keys() - fingerprints.keys())}")
+    tmp_root = os.path.join(root, f"all.tmp-{run_id}")
+    rows.write.partitionBy("_wkey").parquet(tmp_root)
+    rows.unpersist()
+    for wkey, n in counts.items():
+        final = os.path.join(root, f"window={wkey}")
+        tmp = f"{final}.tmp-{run_id}"
+        os.makedirs(tmp)
+        os.rename(os.path.join(tmp_root, f"_wkey={wkey}"),
+                  os.path.join(tmp, "data"))
+        manifest = {**fields, "window": wkey, "run_id": run_id,
+                    "committed_at": time.time(), "sketch_rows": n}
+        if fingerprints is not None:
+            manifest["input_fingerprint"] = fingerprints[wkey]
+        with open(os.path.join(tmp, _MANIFEST), "w") as f:
+            json.dump(manifest, f, indent=2)
+        publish(tmp, final)
+    shutil.rmtree(tmp_root)
+    return len(counts)
+
+
 def commit_window(
     root: str,
     window_value,
@@ -115,35 +219,14 @@ def commit_window(
     metrics: dict,
     run_id: str,
 ) -> None:
-    """Atomically publish one window's sketch rows + manifest."""
-    final = _part_dir(root, window_key(window_value))
-    tmp = final + f".tmp-{run_id}"
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    sketch_rows.write.mode("overwrite").parquet(os.path.join(tmp, "data"))
-    manifest = {
-        "window": str(window_value),
-        "run_id": run_id,
-        "committed_at": time.time(),
-        "spec": spec.to_dict(),
-        "input_fingerprint": input_fingerprint,
-        "metrics": metrics,
-    }
-    with open(os.path.join(tmp, _MANIFEST), "w") as f:
-        json.dump(manifest, f, indent=2)
-    publish(tmp, final)
-
-
-def input_fingerprint(df: DataFrame, sha_col: str = "content_sha256") -> str:
-    """Order-insensitive fingerprint of the input slice: count + xor-fold
-    of xxhash64 over the per-row sha column (the content-sha256 ingest
-    guard doubles as the lineage anchor).  XOR never overflows (ANSI-safe)
-    and ignores row order."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"bit_xor(xxhash64({sha_col}))").alias("x"),
-    ).collect()[0]
-    return f"n={row['n']},xor={row['x']}"
+    """Publish `sketch_rows` as the whole of `window_value`'s window;
+    `metrics` are extra manifest fields."""
+    # the literal key column is replaced by its string key in
+    # write_windows, and partitionBy keeps it out of the data files
+    rows = sketch_rows.withColumn("_wkey", F.lit(window_value))
+    fields = {"spec": spec.to_dict(),
+              "input_fingerprint": input_fingerprint, **metrics}
+    write_windows(root, rows, "_wkey", fields, run_id)
 
 
 def build_resumable(
@@ -155,7 +238,6 @@ def build_resumable(
     group_cols: Sequence[str],
     build_fn,
     run_id: str = "run",
-    verify_fingerprints: bool = True,
 ) -> DataFrame:
     """Build sketches per window, skipping committed windows.
 
@@ -165,83 +247,58 @@ def build_resumable(
 
     Scale shape: exactly TWO passes over the raw input regardless of the
     number of windows — one column-pruned groupBy for the per-window
-    fingerprints, one build over all missing windows together (the old
-    per-window `df.filter(...)` loop re-scanned the raw table O(W)
-    times).  Per-window publication then slices the small CACHED sketch
-    table, never the raw data.
+    fingerprints, one build over all missing windows together — and one
+    write job for all of them.
 
-    With `verify_fingerprints`, a committed window whose input slice no
-    longer matches its manifest's fingerprint is rebuilt instead of
-    silently reused."""
+    A committed window whose input slice no longer matches its manifest's
+    fingerprint (count + xor-fold of xxhash64 over `content_sha256` when
+    the input has it, else the row count) is rebuilt instead of silently
+    reused."""
     write_spec(root, spec)
-    # undo a crashed run's half-done publish and sweep its tmp dirs (a
-    # tmp dir with a different run_id would otherwise linger forever)
-    recover(root)
+    check_window_keys(spark, root, window_col)
     done = list_done_windows(root)
 
+    wkey = window_key(window_col)
     has_sha = "content_sha256" in df.columns
     aggs = [F.count(F.lit(1)).alias("n")]
     if has_sha:
         aggs.append(
             F.expr("bit_xor(xxhash64(content_sha256))").alias("x")
         )
-    fp_rows = df.groupBy(window_col).agg(*aggs).collect()
-    if not fp_rows and not done:
+    fps = {
+        r["k"]: f"n={r['n']},xor={r['x']}" if has_sha else f"rows={r['n']}"
+        for r in df.groupBy(wkey.alias("k")).agg(*aggs).collect()
+    }
+    if not fps and not done:
         raise ValueError(
             f"build_resumable: input has no rows (no {window_col} windows)"
             " and no committed checkpoint exists"
         )
-    fps: dict[str, str] = {}
-    windows = []
-    for r in fp_rows:
-        w = r[window_col]
-        windows.append(w)
-        fps[window_key(w)] = (
-            f"n={r['n']},xor={r['x']}" if has_sha else f"rows={r['n']}"
-        )
-    windows.sort(key=str)
-
     stale = {
         k
         for k, m in done.items()
-        if verify_fingerprints
-        and k in fps
-        and m.get("input_fingerprint") not in (None, fps[k])
+        if k in fps and m.get("input_fingerprint") not in (None, fps[k])
     }
     for k in sorted(stale):
         print(
             f"checkpoint: window {k} input fingerprint changed "
             f"({done[k].get('input_fingerprint')} -> {fps[k]}), rebuilding"
         )
-    todo = [
-        w
-        for w in windows
-        if window_key(w) not in done or window_key(w) in stale
-    ]
+    todo = sorted(k for k in fps if k not in done or k in stale)
     if todo:
-        missing = df.filter(F.col(window_col).isin(todo))
-        sketch = build_fn(missing).cache()
-        counts = {
-            r[0]: r[1]
-            for r in sketch.groupBy(window_col).count().collect()
-        }
-        for w in todo:
-            wsk = sketch.filter(F.col(window_col) == F.lit(w))
-            commit_window(
-                root, w, wsk, spec, fps[window_key(w)],
-                {"sketch_rows": int(counts.get(w, 0))}, run_id,
-            )
-        sketch.unpersist()
+        write_windows(
+            root, build_fn(df.filter(wkey.isin(todo))), window_col,
+            {"spec": spec.to_dict()}, run_id, {k: fps[k] for k in todo},
+        )
     return read_checkpoint(spark, root)
 
 
-def read_checkpoint(spark: SparkSession, root: str) -> DataFrame:
-    recover(root)
-    parts = [
-        os.path.join(root, name, "data")
-        for name in window_dirs(root)
-        if os.path.isfile(os.path.join(root, name, _MANIFEST))
-    ]
+def read_checkpoint(
+    spark: SparkSession, root: str, keys: Optional[Collection[str]] = None
+) -> DataFrame:
+    """The sketch rows of every committed window under `root`, or of the
+    windows whose keys are in `keys`."""
+    parts = [data for data, _ in _committed(root, keys).values()]
     if not parts:
         raise FileNotFoundError(f"no committed windows under {root}")
     return spark.read.parquet(*parts)

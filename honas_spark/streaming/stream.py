@@ -4,7 +4,10 @@ honas-gather is a socket-fed streaming aggregator with period rotation
 (src/bin/honas_gather.c event loop + recheck_handler:1302-1351).  The
 Spark-native equivalent: `readStream` over the landing zone ->
 `foreachBatch` building per-window partial sketches for each micro-batch
--> merge into the persistent sketch store.
+-> merge into the sketch store of sources/checkpoint.py, the same store a
+batch build or a rotation writes: `read_checkpoint` reads the touched
+windows, `write_windows` publishes the merged ones, and each window's
+manifest records the last epoch merged into it.
 
 The merge algebra does the heavy lifting for exactly-once semantics: the
 Bloom/HLL components are idempotent under re-delivery (a replayed batch
@@ -19,11 +22,14 @@ from __future__ import annotations
 import os
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ..spec import SketchSpec
 from ..operators.sketch_agg import build_sketches, rollup_sketches
-from ..sources.checkpoint import publish, recover, window_dirs, window_key
+from ..sources.checkpoint import (
+    check_window_keys, list_done_windows, read_checkpoint, window_key,
+    write_windows,
+)
 
 
 class StreamingSketchBuilder:
@@ -46,40 +52,27 @@ class StreamingSketchBuilder:
         self.client_col = client_col
         self.ts_col = ts_col
         self.window_col = window_col
+        self._keys_checked = False
 
     def _store_path(self) -> str:
         return os.path.join(self.store_dir, "sketches")
 
     def read_store(self, spark: SparkSession) -> Optional[DataFrame]:
-        root = self._store_path()
-        recover(root)
-        dirs = window_dirs(root)
-        if not dirs:
-            return None
-        return spark.read.parquet(*(os.path.join(root, d) for d in dirs))
-
-    def _read_manifest(self, final: str) -> Optional[dict]:
-        import json
-
-        p = os.path.join(final, "_manifest.json")
-        if not os.path.isfile(p):
-            return None
+        """The store's sketch table, or None before the first batch."""
         try:
-            with open(p) as f:
-                return json.load(f)
-        except (ValueError, OSError):
+            return read_checkpoint(spark, self._store_path())
+        except FileNotFoundError:
             return None
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Merge one micro-batch into the store.
 
-        The store is partitioned by window (`window=KEY/` dirs) and only
-        windows TOUCHED by this batch are read+merged+rewritten — per-batch
-        cost is O(batch + touched windows' sketch rows), independent of
-        stream length.  All touched windows are written by ONE
-        `partitionBy` job (a backfill batch touching hundreds of windows
-        issues O(1) Spark jobs, not one per window); the crash-safe
-        per-directory swap then happens on the local filesystem only.
+        Only the windows TOUCHED by this batch are read, merged and
+        rewritten, and only their manifests are loaded, so the work per
+        batch is O(batch + touched windows' sketch rows), independent of
+        stream length, and `write_windows` publishes all of them with one
+        Spark write job.  The first batch of a builder also runs
+        `check_window_keys` over the whole store once.
 
         Idempotent under foreachBatch's at-least-once replay: a window
         whose manifest already records this epoch_id has this batch merged
@@ -90,14 +83,12 @@ class StreamingSketchBuilder:
         epoch ids continue) — standard Structured Streaming practice."""
         if batch_df.isEmpty():
             return
-        import json
-        import shutil
-        import time as _time
-
-        spark = batch_df.sparkSession
         root = self._store_path()
-        recover(root)
-        batch_sketches = build_sketches(
+        spark = batch_df.sparkSession
+        if not self._keys_checked:
+            check_window_keys(spark, root, self.window_col)
+            self._keys_checked = True
+        batch = build_sketches(
             batch_df,
             self.spec,
             group_cols=[self.window_col] + self.group_cols,
@@ -105,88 +96,29 @@ class StreamingSketchBuilder:
             client_col=self.client_col,
             ts_col=self.ts_col,
         ).cache()
-        # bounded collect: one value per window touched by this batch
-        touched = [
-            r[0]
-            for r in batch_sketches.select(self.window_col)
-            .distinct()
-            .collect()
+        wkey = window_key(self.window_col)
+        # bounded collect: one key per window touched by this batch
+        touched = [r[0] for r in batch.select(wkey).distinct().collect()]
+        done = list_done_windows(root, touched)
+        todo = [
+            k for k in touched
+            if done.get(k, {}).get("last_epoch_id") != int(epoch_id)
         ]
-        os.makedirs(root, exist_ok=True)
-        todo, existing = [], []
-        for w in touched:
-            final = os.path.join(root, f"window={window_key(w)}")
-            man = self._read_manifest(final)
-            if man is not None and man.get("last_epoch_id") == int(epoch_id):
-                continue  # replayed epoch: this batch is already merged
-            todo.append(w)
-            if os.path.isdir(final):
-                existing.append(final)
-        if not todo:
-            batch_sketches.unpersist()
-            return
-        union = (
-            batch_sketches
-            if len(todo) == len(touched)
-            else batch_sketches.filter(F.col(self.window_col).isin(todo))
-        )
-        if existing:
-            union = spark.read.parquet(*existing).unionByName(union)
-        merged = rollup_sketches(
-            union, self.spec, self.window_col, self.spec.window,
-            self.group_cols,
-        ).cache()
-        # ONE write job for every touched window: partition dirs under a
-        # tmp root (`recover` clears a stray one after a crash) ...
-        tmp_root = os.path.join(root, f"all.tmp-{epoch_id}")
-        if os.path.isdir(tmp_root):
-            shutil.rmtree(tmp_root)
-        # the partition key MUST byte-match the Python-side window_key
-        # used to locate the dirs below — so it IS window_key, applied
-        # driver-side per touched window and shipped as a literal map
-        # (windows per batch are bounded; a string-cast re-derivation in
-        # SQL diverges on fractional-second window starts)
-        wkey_map = F.create_map(
-            *[x for w in touched
-              for x in (F.lit(w), F.lit(window_key(w)))]
-        )
-        (
-            merged.withColumn("_wkey", wkey_map[F.col(self.window_col)])
-            .write.mode("overwrite")
-            .partitionBy("_wkey")
-            .parquet(tmp_root)
-        )
-        # ... and ONE count job off the cached merge for the manifests
-        # (no re-read of files just written)
-        counts = {
-            r[0]: r[1]
-            for r in merged.groupBy(self.window_col).count().collect()
-        }
-        merged.unpersist()
-        batch_sketches.unpersist()
-        for w in todo:
-            wk = window_key(w)
-            tmp = os.path.join(tmp_root, f"_wkey={wk}")
-            if not os.path.isdir(tmp):
-                # a todo window that merged to zero rows writes no
-                # partition dir — nothing to publish (and a missing dir
-                # must not fail the whole batch)
-                continue
-            # per-window lineage manifest (north rule): which epoch last
-            # touched this window, when, and how many sketch rows it holds
-            with open(os.path.join(tmp, "_manifest.json"), "w") as f:
-                json.dump(
-                    {
-                        "window": str(w),
-                        "last_epoch_id": int(epoch_id),
-                        "committed_at": _time.time(),
-                        "sketch_rows": int(counts.get(w, 0)),
-                        "spec": self.spec.to_dict(),
-                    },
-                    f,
-                )
-            publish(tmp, os.path.join(root, f"window={wk}"))
-        shutil.rmtree(tmp_root, ignore_errors=True)
+        if todo:
+            rows = batch.filter(wkey.isin(todo))
+            existing = [k for k in todo if k in done]
+            if existing:
+                rows = read_checkpoint(spark, root, existing).unionByName(rows)
+            merged = rollup_sketches(
+                rows, self.spec, self.window_col, self.spec.window,
+                self.group_cols,
+            )
+            write_windows(
+                root, merged, self.window_col,
+                {"spec": self.spec.to_dict(), "last_epoch_id": int(epoch_id)},
+                f"epoch{epoch_id}",
+            )
+        batch.unpersist()
 
     def start(
         self,
