@@ -2,12 +2,12 @@
 engine with the query and data-processing capabilities of SURFnet/honas,
 re-designed Spark-first (see SURVEY.md)."""
 
-from . import _zipimport
+from . import _worker
 from .spec import SketchSpec
 from .state import SketchState
 
-# no-op outside a PySpark worker task and on Python >= 3.13
-_zipimport.install()
+# no-op outside a running PySpark task
+_worker.install()
 
 
 def get_spark(*args, **kwargs):

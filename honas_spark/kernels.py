@@ -352,14 +352,24 @@ def bloom_probe(filt: np.ndarray, offsets: np.ndarray) -> np.ndarray:
     return bits.all(axis=1)
 
 
-_POPCOUNT8 = np.unpackbits(
-    np.arange(256, dtype=np.uint8)[:, None], axis=1
-).sum(axis=1).astype(np.uint8)
+_POPCOUNT_CHUNK = 1 << 16
+
+
+def popcount(a: np.ndarray) -> int:
+    """Exact number of set bits in a uint8 array (any shape).
+
+    unpackbits + count_nonzero, both SIMD, per 64 KiB chunk: ~4x faster
+    than a 256-entry LUT gather and sum (16 KiB: 38 -> 9 us), and the
+    chunk caps the 8x bool temporary at 512 KiB."""
+    flat = a.reshape(-1)
+    return sum(
+        int(np.count_nonzero(np.unpackbits(flat[i:i + _POPCOUNT_CHUNK])))
+        for i in range(0, flat.size, _POPCOUNT_CHUNK)
+    )
 
 
 def bloom_bits_set(filt: np.ndarray) -> int:
-    # byte-LUT popcount: 1/8th the memory traffic of unpackbits
-    return int(_POPCOUNT8[filt].sum(dtype=np.int64))
+    return popcount(filt)
 
 
 def bloom_approx_count(m_bits: int, k: int, bits_set: int) -> int:
@@ -504,25 +514,18 @@ def _pack_nonzero(
     )
 
 
-def _fold_packed(
-    out: np.ndarray, buf: bytes, ufunc, idx_dtype: str
-) -> np.ndarray:
-    """Fold one serialized buffer into `out` in place with `ufunc`
-    (np.bitwise_or / np.maximum / np.add; None copies the values in,
-    the decode of a zero `out`) and return `out`.  A dense buffer
-    combines as a read-only view of its bytes, a sparse
-    (_pack_nonzero) one only at its listed indexes, so no dense
-    temporary is built.  `out` is C-contiguous (every sketch component
-    is), so its flat reshape is a view."""
-    flat = out.reshape(-1)
-    val_dtype = flat.dtype.newbyteorder("<")
-    if len(buf) == flat.nbytes:
-        val = np.frombuffer(buf, dtype=val_dtype)
-        if ufunc is None:
-            flat[:] = val
-        else:
-            ufunc(flat, val, out=flat)
-        return out
+def _packed_entries(
+    buf: bytes, size: int, val_dtype, idx_dtype: str
+) -> tuple:
+    """Parse one serialized buffer of a flat `size`-value array
+    without densifying it.
+
+    -> (None, vals) for a dense buffer, vals a read-only view of all
+    `size` values; (idx, vals) for a sparse (_pack_nonzero) one, the
+    ascending int64 indexes and their nonzero values."""
+    val_dtype = np.dtype(val_dtype).newbyteorder("<")
+    if len(buf) == size * val_dtype.itemsize:
+        return None, np.frombuffer(buf, dtype=val_dtype)
     if not buf or buf[0] != _HLL_SPARSE_MAGIC:
         raise ValueError(f"not a sparse buffer (len={len(buf)})")
     (nnz,) = np.frombuffer(buf[1:5], dtype="<u4")
@@ -535,14 +538,35 @@ def _fold_packed(
     idx = np.frombuffer(buf[5:5 + iw * nnz], dtype=idx_dtype)
     val = np.frombuffer(buf[5 + iw * nnz:], dtype=val_dtype)
     idx = idx.astype(np.int64)
-    if idx.size and int(idx.max()) >= flat.size:
+    if idx.size and int(idx.max()) >= size:
         # a clean error for damaged checkpoints, not an IndexError
         # from deep inside a scatter
         raise ValueError(
-            f"corrupt sparse buffer: index {int(idx.max())} >= {flat.size}"
+            f"corrupt sparse buffer: index {int(idx.max())} >= {size}"
         )
-    # indexes are unique, so the gather/scatter pair is exact
-    flat[idx] = val if ufunc is None else ufunc(flat[idx], val)
+    return idx, val
+
+
+def _fold_packed(
+    out: np.ndarray, buf: bytes, ufunc, idx_dtype: str
+) -> np.ndarray:
+    """Fold one serialized buffer into `out` in place with `ufunc`
+    (np.bitwise_or / np.maximum / np.add; None copies the values in,
+    the decode of a zero `out`) and return `out`.  A dense buffer
+    combines as a read-only view of its bytes, a sparse
+    (_pack_nonzero) one only at its listed indexes, so no dense
+    temporary is built.  `out` is C-contiguous (every sketch component
+    is), so its flat reshape is a view."""
+    flat = out.reshape(-1)
+    idx, val = _packed_entries(buf, flat.size, flat.dtype, idx_dtype)
+    if idx is None:
+        if ufunc is None:
+            flat[:] = val
+        else:
+            ufunc(flat, val, out=flat)
+    else:
+        # indexes are unique, so the gather/scatter pair is exact
+        flat[idx] = val if ufunc is None else ufunc(flat[idx], val)
     return out
 
 
@@ -571,6 +595,32 @@ def bloom_unpack(
     return _fold_packed(
         np.zeros((num_filters, filter_bytes), dtype=np.uint8), buf, None,
         "<u4",
+    )
+
+
+def bloom_entries(buf: bytes, num_filters: int, filter_bytes: int) -> tuple:
+    """The (idx, vals) of a bloom_pack buffer over its flat
+    num_filters * filter_bytes bitset, without densifying it
+    (_packed_entries: idx is None for a dense buffer)."""
+    return _packed_entries(
+        buf, num_filters * filter_bytes, np.uint8, "<u4"
+    )
+
+
+def bloom_bits_set_packed(
+    buf: bytes, num_filters: int, filter_bytes: int
+) -> np.ndarray:
+    """Per-filter bloom_bits_set of a bloom_pack buffer -> (num_filters,)
+    int64, read from its bytes: a dense buffer popcounts each filter's
+    view, a sparse one only its nonzero bytes (its ascending indexes
+    split them by filter).  Never unpack a row just to count its bits."""
+    idx, vals = bloom_entries(buf, num_filters, filter_bytes)
+    bounds = np.arange(num_filters + 1) * filter_bytes
+    if idx is not None:
+        bounds = np.searchsorted(idx, bounds)
+    return np.array(
+        [popcount(vals[a:b]) for a, b in zip(bounds[:-1], bounds[1:])],
+        dtype=np.int64,
     )
 
 
@@ -622,11 +672,39 @@ _HLL_PE = 2.0 ** -np.arange(64)
 def hll_count(regs: np.ndarray) -> int:
     """Harmonic-mean estimate with LinearCounting + P=14 bias polynomial
     (hyperloglog.c:917-983; constants identical)."""
+    return _hll_estimate(float(_HLL_PE[regs].sum()), int((regs == 0).sum()))
+
+
+# hll_count_packed sums 2^-r exactly as integers in units of 2^-39: for
+# registers below 40 every term, every partial sum and the total (at most
+# 2^14 * 2^39 = 2^53 units) is exact in float64, so the float sum of
+# hll_count equals the integer one whatever its summation order.  A
+# register of 40 or more (a client-less build's client HLL has
+# register 0 = 50) could round, so such arrays go through hll_count.
+_HLL_EXACT_R = 40
+_HLL_UNITS = np.int64(1) << (_HLL_EXACT_R - 1 - np.arange(_HLL_EXACT_R))
+
+
+def hll_count_packed(buf: bytes) -> int:
+    """hll_count(hll_unpack(buf)), read from a histogram of the
+    buffer's register values instead of the dense array (a sparse
+    buffer's unlisted registers count as zeros)."""
+    idx, vals = _packed_entries(buf, HLL_REGISTERS, np.uint8, "<u2")
+    hist = np.bincount(vals, minlength=_HLL_EXACT_R)
+    if hist.size > _HLL_EXACT_R:
+        return hll_count(hll_unpack(buf))
+    if idx is not None:
+        hist[0] += HLL_REGISTERS - vals.size
+    units = int(hist @ _HLL_UNITS)
+    return _hll_estimate(math.ldexp(units, 1 - _HLL_EXACT_R), int(hist[0]))
+
+
+def _hll_estimate(pe_sum: float, ez: int) -> int:
+    """The estimate from the register sum of 2^-r and the number of
+    zero registers."""
     m = float(HLL_REGISTERS)
     alpha = 0.7213 / (1 + 1.079 / m)
-    E = float(_HLL_PE[regs].sum())
-    ez = int((regs == 0).sum())
-    E = (1.0 / E) * alpha * m * m
+    E = (1.0 / pe_sum) * alpha * m * m
     if E < m * 2.5 and ez != 0:
         E = m * math.log(m / ez)  # LINEARCOUNTING
     elif E < 72000:

@@ -54,8 +54,15 @@ def _probe_rows(pdf: pd.DataFrame, spec: SketchSpec, offsets: list):
     -> (hits (R, nq), filters_hit (R, nq), total_bits_set (R,),
     est_clients (R,), est_items (R,)), all int64.  Preallocated numpy
     matrices, no per-row Python lists: a 10k-key job costs numpy time,
-    not interpreter time."""
+    not interpreter time.
+
+    Rows are never unpacked: a dense Bloom row is probed as a read-only
+    view of its bytes, a sparse one is scattered into one zeroed scratch
+    that is cleared again after its probe, and the per-row statistics
+    come from the packed bytes (bits set from the listed bytes, HLL
+    estimates from register histograms) — CMS and KLL are never read."""
     R, nq = len(pdf), len(offsets[0])
+    F, fb = spec.num_filters, spec.filter_bytes
     hits_mat = np.zeros((R, nq), dtype=np.int64)
     mask_mat = np.zeros((R, nq), dtype=np.int64)
     total_bits = np.zeros(R, dtype=np.int64)
@@ -64,20 +71,26 @@ def _probe_rows(pdf: pd.DataFrame, spec: SketchSpec, offsets: list):
     filt_col = pdf["filters"].to_numpy()
     hllc_col = pdf["hll_clients"].to_numpy()
     hlli_col = pdf["hll_items"].to_numpy()
+    scratch = None
     for i in range(R):
-        # lightweight parse: the probe needs only the filters and HLLs —
-        # skip CMS/KLL deserialization entirely
-        filters = K.bloom_unpack(
-            filt_col[i], spec.num_filters, spec.filter_bytes
-        )
+        idx, vals = K.bloom_entries(filt_col[i], F, fb)
+        if idx is None:
+            filters = vals.reshape(F, fb)
+        else:
+            if scratch is None:
+                scratch = np.zeros(F * fb, dtype=np.uint8)
+            scratch[idx] = vals
+            filters = scratch.reshape(F, fb)
         hm, mm = hits_mat[i], mask_mat[i]
-        for fi in range(spec.num_filters):
+        for fi in range(F):
             hit = K.bloom_probe(filters[fi], offsets[fi])
             hm += hit
             mm |= hit.astype(np.int64) << fi
-            total_bits[i] += K.bloom_bits_set(filters[fi])
-        est_clients[i] = K.hll_count(K.hll_unpack(hllc_col[i]))
-        est_items[i] = K.hll_count(K.hll_unpack(hlli_col[i]))
+        if idx is not None:
+            scratch[idx] = 0
+        total_bits[i] = K.popcount(vals)
+        est_clients[i] = K.hll_count_packed(hllc_col[i])
+        est_items[i] = K.hll_count_packed(hlli_col[i])
     return hits_mat, mask_mat, total_bits, est_clients, est_items
 
 

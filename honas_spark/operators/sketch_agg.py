@@ -419,8 +419,7 @@ def finalize_stats(
         for pdf in batches:
             rows = []
             for row in pdf.to_dict('records'):
-                st = SketchState.from_fields(spec, row)
-                s = st.stats()
+                s = SketchState.packed_stats(spec, row)
                 out = {c: row[c] for c in group_cols}
                 out.update(
                     n_rows=s["n_rows"],
@@ -470,15 +469,14 @@ def per_filter_stats(
                 actual_false_positive_rate=[],
             )
             for row in pdf.to_dict("records"):
-                filters = K.bloom_unpack(
+                bits = K.bloom_bits_set_packed(
                     row["filters"], spec.num_filters, spec.filter_bytes
-                )
-                for fi in range(spec.num_filters):
-                    b = K.bloom_bits_set(filters[fi])
+                ).tolist()
+                for fi, b in enumerate(bits):
                     for c in group_cols:
                         out[c].append(row[c])
                     out["filter_index"].append(fi)
-                    out["number_of_bits_set"].append(int(b))
+                    out["number_of_bits_set"].append(b)
                     out["estimated_number_of_host_names"].append(
                         int(K.bloom_approx_count(spec.m_bits, spec.k, b))
                     )

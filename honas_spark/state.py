@@ -203,21 +203,25 @@ class SketchState:
     # honas_search.c:88-127)                                              #
     # ------------------------------------------------------------------ #
     def stats(self) -> dict:
-        spec = self.spec
-        bits = [K.bloom_bits_set(f) for f in self.filters]
-        total_bits = int(sum(bits))
-        return {
-            "n_rows": int(self.n_rows),
-            "bits_set": bits,
-            "est_items": K.hll_count(self.hll_items),
-            "est_clients": K.hll_count(self.hll_clients),
-            "est_items_per_filter": [
-                K.bloom_approx_count(spec.m_bits, spec.k, b) for b in bits
-            ],
-            "fill_rate": [b / spec.m_bits for b in bits],
-            "actual_fpr": [K.actual_fpr(spec.m_bits, spec.k, b) for b in bits],
-            "total_bits_set": total_bits,
-        }
+        return _stats(
+            self.spec, self.n_rows,
+            [K.bloom_bits_set(f) for f in self.filters],
+            K.hll_count(self.hll_items), K.hll_count(self.hll_clients),
+        )
+
+    @staticmethod
+    def packed_stats(spec: SketchSpec, row) -> dict:
+        """`from_fields(spec, row).stats()`, read straight from the
+        row's packed Bloom and HLL buffers: nothing is unpacked, and
+        CMS and KLL are never decoded."""
+        return _stats(
+            spec, row["n_rows"],
+            K.bloom_bits_set_packed(
+                row["filters"], spec.num_filters, spec.filter_bytes
+            ).tolist(),
+            K.hll_count_packed(row["hll_items"]),
+            K.hll_count_packed(row["hll_clients"]),
+        )
 
     # ------------------------------------------------------------------ #
     # serialization to/from flat row fields (BinaryType columns)          #
@@ -251,6 +255,23 @@ class SketchState:
         st.first_ts = row["first_ts"]
         st.last_ts = row["last_ts"]
         return st
+
+
+def _stats(
+    spec: SketchSpec, n_rows, bits: list, est_items: int, est_clients: int
+) -> dict:
+    return {
+        "n_rows": int(n_rows),
+        "bits_set": bits,
+        "est_items": est_items,
+        "est_clients": est_clients,
+        "est_items_per_filter": [
+            K.bloom_approx_count(spec.m_bits, spec.k, b) for b in bits
+        ],
+        "fill_rate": [b / spec.m_bits for b in bits],
+        "actual_fpr": [K.actual_fpr(spec.m_bits, spec.k, b) for b in bits],
+        "total_bits_set": int(sum(bits)),
+    }
 
 
 def _opt_min(a, b):

@@ -1,7 +1,9 @@
 """The worker-side zipimport fix: an importer re-reads its archive on
 ``importlib.invalidate_caches()`` only when the archive's stat key
-changed, and the fix installs only inside a Spark task on Python < 3.13."""
+changed, and the fix installs only inside a Spark task on Python < 3.13.
+(The GC hook that the same install adds is tested in test_worker_gc.py.)"""
 
+import gc
 import importlib
 import sys
 import zipfile
@@ -9,7 +11,7 @@ import zipimport
 
 import pytest
 
-from honas_spark import _zipimport
+from honas_spark import _worker
 
 
 def _write_zip(path, modules):
@@ -18,16 +20,25 @@ def _write_zip(path, modules):
             z.writestr(f"{name}.py", body)
 
 
+def _drop_gc_hook():
+    while _worker._freeze_between_tasks in gc.callbacks:
+        gc.callbacks.remove(_worker._freeze_between_tasks)
+
+
 @pytest.fixture
 def patched(monkeypatch):
     """Install the fix as if inside a worker; undone after the test."""
     cls = zipimport.zipimporter
     monkeypatch.setattr(cls, "invalidate_caches", cls.invalidate_caches)
-    monkeypatch.setattr(_zipimport, "_in_spark_worker", lambda: True)
+    monkeypatch.setattr(_worker, "_task_active", lambda: True)
     if sys.version_info >= (3, 13):
         pytest.skip("zipimporter.invalidate_caches is lazy on 3.13+")
-    assert _zipimport.install()
-    assert _zipimport.installed()
+    try:
+        assert _worker.install()
+        assert _worker.zip_fix_installed()
+        yield
+    finally:
+        _drop_gc_hook()
 
 
 def test_unchanged_archive_is_not_reread(patched, tmp_path, monkeypatch):
@@ -72,17 +83,22 @@ def test_not_installed_outside_worker_or_on_313(monkeypatch):
 
     cls = zipimport.zipimporter
     monkeypatch.setattr(cls, "invalidate_caches", cls.invalidate_caches)
-    assert not _zipimport.installed()
-    assert not _zipimport._in_spark_worker()
-    assert not _zipimport.install()
+    assert not _worker.zip_fix_installed()
+    assert not _worker._task_active()
+    assert not _worker.install()
     with monkeypatch.context() as m:
         m.delitem(sys.modules, "pyspark.taskcontext")
-        assert not _zipimport._in_spark_worker()
+        assert not _worker._task_active()
     with monkeypatch.context() as m:
-        m.setattr(_zipimport, "_in_spark_worker", lambda: True)
+        m.setattr(_worker, "_task_active", lambda: True)
         m.setattr(sys, "version_info", (3, 13, 0, "final", 0))
-        assert not _zipimport.install()
-    assert not _zipimport.installed()
+        try:
+            # the GC hook still goes in; the zip patch does not
+            assert _worker.install()
+            assert _worker.gc_hook_installed()
+        finally:
+            _drop_gc_hook()
+    assert not _worker.zip_fix_installed()
 
 
 def test_fix_active_inside_spark_worker(spark):
@@ -96,7 +112,7 @@ def test_fix_active_inside_spark_worker(spark):
 
         import pandas as pd
 
-        from honas_spark import _zipimport as z
+        from honas_spark import _worker as z
 
         orig = zi._read_directory
         reads = []
@@ -111,7 +127,7 @@ def test_fix_active_inside_spark_worker(spark):
             pass
         yield pd.DataFrame({
             "eager": [s.version_info < (3, 13)],
-            "installed": [z.installed()],
+            "installed": [z.zip_fix_installed()],
             "zip_importers": [sum(
                 isinstance(f, zi.zipimporter)
                 for f in s.path_importer_cache.values()
