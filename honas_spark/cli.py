@@ -634,8 +634,14 @@ def main(argv=None) -> int:
     g.add_argument("--ts-col", default="commit_ts")
     g.add_argument("--sep", default="/")
     g.add_argument("--mode", default="map_combine",
-                   choices=["map_combine", "shuffle_keys"])
-    g.add_argument("--salt", type=int, default=None)
+                   choices=["map_combine", "shuffle_keys"],
+                   help="build plan (same Bloom/HLL/CMS).  shuffle_keys used "
+                   "1.20 vs 1.66 CPU-s at 21 groups, 4.42 vs 8.20 at ~14k "
+                   "(4 cores, ROADMAP D8)")
+    g.add_argument("--salt", type=int, default=None,
+                   help="shuffle_keys only: a group with n of N rows splits "
+                   "over min(SALT, ceil(n*P/N)) partials (P = shuffle "
+                   "partitions); no merge stage when none is above N/P")
     g.add_argument("--run-id", default="cli")
     g.add_argument("--dry-run", action="store_true",
                    help="the reference's -d mode: no state built; print "
@@ -768,6 +774,9 @@ def main(argv=None) -> int:
     cu.set_defaults(fn=cmd_curate)
 
     args = p.parse_args(argv)
+    if args.cmd == "gather" and args.salt is not None and (
+            args.salt < 1 or args.mode != "shuffle_keys"):
+        g.error("--salt needs --mode shuffle_keys and a value >= 1")
     return args.fn(args)
 
 

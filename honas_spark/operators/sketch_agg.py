@@ -22,7 +22,7 @@ as a two-phase Spark aggregation designed for 100 TB inputs:
       reference merge src/honas_state.c:568-611).  Memory is one state
       per group, whatever the number of rows merged.  Associativity
       (property-tested) makes the merge order irrelevant.
-      mode="shuffle_keys" without salt skips this phase: its
+      mode="shuffle_keys" skips this phase when no group is hot: its
       pre-repartition already leaves exactly one partial per group.
       `rollup_sketches` and `rollup_hierarchy` merge through the same
       phase.
@@ -141,25 +141,25 @@ def build_sketches(
     optionally a client column (string; murmur-hashed per unique value),
     an event-time column and a numeric column for the KLL sibling.
 
-    mode picks the physical plan:
+    mode picks the physical plan (sketch output is identical; KLL bytes
+    depend on the plan):
       * "map_combine" (default) — partial sketch per (input partition,
-        group), tiny merge shuffle.  Right when groups are FEW relative
-        to input partitions (the honas shape: a handful of windows x
-        entities over billions of rows).  Partial volume is
-        O(partitions x groups x sketch_bytes), so it degrades when the
-        group count explodes.
+        group), tiny merge shuffle.  Partial volume is
+        O(partitions x groups x sketch_bytes).  It lost on both measured
+        shapes (4 cores, ROADMAP D8): 1.66 vs 1.20 CPU-s at 21 groups,
+        8.20 vs 4.42 at ~14k groups.
       * "shuffle_keys" — hash-repartition rows by group first, so each
-        group materializes exactly one partial.  Right when groups are
-        MANY and small (per-user/per-file sketches): shuffle carries only
-        (group, key_sha) pairs, and sketch bytes are written once per
-        group instead of once per (partition, group).
+        group materializes exactly one partial: the shuffle carries only
+        (group, key_sha) rows and each sketch is written once.
 
-    salt (only with "shuffle_keys"): split each group into `salt`
-    sub-partials keyed by hash(key_sha) so a hot group (one repo holding
-    30% of the corpus) fans out over `salt` tasks instead of serializing
-    on one.  Correct by construction — the merge algebra is commutative/
-    idempotent, so salted partials OR back to the exact same bitsets
-    (property-tested in tests/test_properties.py::test_split_anywhere).
+    salt (only with "shuffle_keys"; an int >= 1; batch frames only):
+    the most partials a HOT group fans out to.  One JVM-only count
+    action (at most P + 1 rows, P = spark.sql.shuffle.partitions) gives
+    group g with n_g of N rows the fan-out min(salt, ceil(n_g * P / N));
+    its rows split by hash(key_sha) over that many sub-partials, which
+    the merge phase ORs back bit-exactly (commutative/idempotent
+    algebra, tests/test_properties.py::test_split_anywhere).  A build
+    with no group above N/P rows runs the unsalted plan: no merge.
 
     components: subset of {"bloom","hll","cms","kll"} to maintain — a
     CMS-only or HLL-only aggregation skips the per-key Bloom offset
@@ -172,8 +172,10 @@ def build_sketches(
         )
     if salt is not None and mode != "shuffle_keys":
         raise ValueError("salt needs mode='shuffle_keys'")
-    if salt is not None and salt < 1:
-        raise ValueError(f"salt must be >= 1, not {salt}")
+    if salt is not None and (type(salt) is not int or salt < 1):
+        raise ValueError(f"salt must be an int >= 1, not {salt!r}")
+    if salt is not None and df.isStreaming:
+        raise ValueError("salt counts rows: salt each batch in foreachBatch")
     group_cols = list(group_cols)
     group_ddl = group_fields_ddl(df, group_cols)
     out_schema = f"{group_ddl}, {SKETCH_VALUE_FIELDS}"
@@ -192,10 +194,16 @@ def build_sketches(
     if ts_col and ts_col not in cols:
         cols.append(ts_col)
     slim = df.select(*cols)
+    fanout = {}
     if mode == "shuffle_keys":
-        if salt is not None:
+        gid = F.xxhash64(*group_cols)
+        fanout = _hot_fanout(slim, gid, salt) if salt else {}
+        if fanout:
+            fan = F.lit(1)  # a cold row's _salt is pmod(h, 1) = 0
+            for f, hashes in fanout.items():
+                fan = F.when(gid.isin(hashes), f).otherwise(fan)
             slim = slim.withColumn(
-                "_salt", F.pmod(F.xxhash64(F.col(key_sha_col)), F.lit(salt))
+                "_salt", F.pmod(F.xxhash64(F.col(key_sha_col)), fan)
             ).repartition(*group_cols, "_salt").drop("_salt")
         else:
             slim = slim.repartition(*group_cols)
@@ -364,13 +372,35 @@ def build_sketches(
 
     partials = slim.mapInPandas(build_partials, schema=out_schema)
 
-    if mode == "shuffle_keys" and salt is None:
+    if mode == "shuffle_keys" and not fanout:
         # the pre-repartition guarantees each group lives in exactly
         # one partition, so build_partials emits exactly ONE row per
         # group — the merge phase would only unpack and repack every
         # sketch row through one more exchange
         return partials
     return _merge_phase(partials, spec, group_cols)
+
+
+def _hot_fanout(slim: DataFrame, gid, salt: int) -> dict:
+    """{fan-out f > 1: xxhash64 keys of the groups salted f ways}.  Only
+    a group above N/P rows is hot, and at most P - 1 are, so one rollup
+    collects the total (`_g` NULL) and the P largest groups.  Counting by
+    key hash keeps NULL, float and timestamp keys off the driver; a
+    collision can only salt a cold group too, which is harmless."""
+    p = int(slim.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if salt == 1 or p == 1:
+        return {}
+    top = (
+        slim.rollup(gid.alias("_g")).count()
+        .orderBy(F.desc("count")).limit(p + 1).collect()
+    )
+    n = next((r["count"] for r in top if r["_g"] is None), 0)
+    out: dict = {}
+    for r in top:
+        f = 1 if r["_g"] is None else min(salt, -(-r["count"] * p // n))
+        if f > 1:
+            out.setdefault(f, []).append(r["_g"])
+    return out
 
 
 def _merge_phase(

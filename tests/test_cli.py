@@ -54,6 +54,20 @@ def test_gather_rejects_unknown_mode(tmp_path, capsys):
     assert "invalid choice" in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("args", [
+    ["--salt", "4"], ["--mode", "shuffle_keys", "--salt", "0"],
+], ids=["salt_with_map_combine", "salt_below_one"])
+def test_gather_rejects_bad_salt_before_reading(tmp_path, capsys, args):
+    """--salt needs --mode shuffle_keys and a value >= 1: a usage error
+    before any input is read (the input path does not exist)."""
+    with pytest.raises(SystemExit) as exc:
+        main(["gather", "--input", str(tmp_path / "missing"), "--output",
+              str(tmp_path / "out"), *args])
+    assert exc.value.code == 2
+    assert "--salt needs --mode shuffle_keys" in capsys.readouterr().err
+    assert not os.path.exists(tmp_path / "out")
+
+
 def test_info_plotmode_csv(ckpt_dir, tmp_path):
     csv = str(tmp_path / "plot.csv")
     assert main(["info", "--state", ckpt_dir, "--plotmode", csv]) == 0

@@ -229,15 +229,29 @@ def test_checkpoint_failed_recommit_keeps_previous_version(
         ("window=", "_spec")) or n.endswith(".old") or ".tmp-" in n]
 
 
-@pytest.mark.parametrize("kw", [
-    dict(mode="shuffle_key"),
-    dict(mode="map_combine", salt=8),
-    dict(mode="shuffle_keys", salt=0),
-], ids=["unknown_mode", "salt_with_map_combine", "salt_below_one"])
-def test_build_sketches_rejects_bad_mode_and_salt(spark, kw):
-    """A misspelt mode, a salt map_combine would ignore and a salt
-    below 1 are errors, not a silently different plan."""
-    df = spark.createDataFrame([(0, b"\0" * 32)], "g int, key_sha binary")
+@pytest.mark.parametrize("kw,stream", [
+    (dict(mode="shuffle_key"), False),
+    (dict(mode="map_combine", salt=8), False),
+    (dict(mode="shuffle_keys", salt=0), False),
+    (dict(mode="shuffle_keys", salt=True), False),
+    (dict(mode="shuffle_keys", salt=2.5), False),
+    (dict(mode="shuffle_keys", salt=8), True),
+], ids=["unknown_mode", "salt_with_map_combine", "salt_below_one",
+        "salt_bool", "salt_float", "salt_on_stream"])
+def test_build_sketches_rejects_bad_mode_and_salt(spark, kw, stream):
+    """A misspelt mode, a salt map_combine would ignore, a salt below 1,
+    a bool or float salt and a salt on a streaming frame (its hot-group
+    count is a batch action) are errors, not a silently different
+    plan."""
+    if stream:
+        df = spark.readStream.format("rate").load().select(
+            F.lit(0).alias("g"), F.unhex(F.lit("00" * 32)).alias("key_sha")
+        )
+        assert df.isStreaming
+    else:
+        df = spark.createDataFrame(
+            [(0, b"\0" * 32)], "g int, key_sha binary"
+        )
     with pytest.raises(ValueError):
         build_sketches(df, SPEC, ["g"], **kw)
 
@@ -352,6 +366,10 @@ def test_build_modes_bit_identical_under_skew(spark):
             keyed, SPEC, mode="shuffle_keys", salt=8, **kw
         ),
     }
+    # two hours of ~50% of the rows each: both are hot on a 4-partition
+    # session, so the salted variant still runs the merge stage
+    plan = variants["salted"]._jdf.queryExecution().optimizedPlan()
+    assert "merge_all" in plan.toString()
     collected = {
         name: {str(r["window_start"]): r for r in df.collect()}
         for name, df in variants.items()
