@@ -1,4 +1,4 @@
-"""IP parse/format + CIDR arithmetic (P9, reference src/inet.c).
+"""IP parsing + CIDR arithmetic (P9, reference src/inet.c).
 
 The reference stores client addresses as sockaddr unions and renders them
 with inet_ntop/inet_pton (inet.c str_addr/str_in_addr); subnet matching
@@ -7,11 +7,12 @@ masks the address at every registered prefix length
 
 Spark-native representation:
   * IPv4 — one signed BIGINT (value range [0, 2^32) so the sign bit is
-    never set); parse/format/mask are pure built-ins, fully codegen'd.
+    never set); parse/mask are pure built-ins, fully codegen'd.
   * IPv6 — struct<hi: bigint, lo: bigint> (network byte order, bits
-    reinterpreted as two signed int64 limbs); parse/format go through an
+    reinterpreted as two signed int64 limbs); parsing goes through an
     Arrow-batched pandas UDF (the slow path, used once at ingest), while
-    masking and comparison stay JVM-side long arithmetic.
+    masking and comparison stay JVM-side long arithmetic
+    (operators/prefix_join.ip6_mask_limbs).
 
 Masking uses shiftrightunsigned/shiftleft so Catalyst folds the per-length
 mask into the comparison; no Python in any probe path."""
@@ -19,7 +20,6 @@ mask into the comparison; no Python in any probe path."""
 from __future__ import annotations
 
 import ipaddress
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import Column, functions as F
@@ -51,17 +51,6 @@ def ip4_aton(col: Column) -> Column:
     return F.when(valid, num).otherwise(F.lit(None).cast("long"))
 
 
-def ip4_ntoa(col: Column) -> Column:
-    """BIGINT -> dotted-quad string (inet_ntop analog), pure built-ins."""
-    return F.concat_ws(
-        ".",
-        F.shiftrightunsigned(col, 24).bitwiseAND(F.lit(255)).cast("string"),
-        F.shiftrightunsigned(col, 16).bitwiseAND(F.lit(255)).cast("string"),
-        F.shiftrightunsigned(col, 8).bitwiseAND(F.lit(255)).cast("string"),
-        col.bitwiseAND(F.lit(255)).cast("string"),
-    )
-
-
 def ip4_mask(col: Column, plen: int) -> Column:
     """Keep the top `plen` bits of an IPv4 BIGINT (subnet_activity.c's
     per-length mask table, folded to a constant by Catalyst)."""
@@ -73,7 +62,7 @@ def ip4_mask(col: Column, plen: int) -> Column:
 
 
 # --------------------------------------------------------------------------
-# IPv6 — parse/format via Arrow-batched pandas UDF; mask via long limbs
+# IPv6 — parse via Arrow-batched pandas UDF
 # --------------------------------------------------------------------------
 
 
@@ -97,55 +86,12 @@ def _ip6_aton_batch(s: pd.Series) -> pd.DataFrame:
     )
 
 
-def _ip6_ntoa_batch(hi: pd.Series, lo: pd.Series) -> pd.Series:
-    out = []
-    for h, l in zip(hi, lo):
-        if h is None or l is None or pd.isna(h) or pd.isna(l):
-            out.append(None)
-            continue
-        n = ((int(h) & 0xFFFFFFFFFFFFFFFF) << 64) | (
-            int(l) & 0xFFFFFFFFFFFFFFFF
-        )
-        out.append(str(ipaddress.IPv6Address(n)))
-    return pd.Series(out)
-
-
 def ip6_aton(col: Column) -> Column:
     """IPv6 text -> struct<hi, lo> of signed int64 limbs (big-endian);
     null for malformed input.  Arrow-batched pandas UDF — one Python call
     per batch (UDF constructed lazily: decorating at import time needs an
     active session)."""
     return pandas_udf(_ip6_aton_batch, "struct<hi: long, lo: long>")(col)
-
-
-def ip6_ntoa(struct_col: Column) -> Column:
-    return pandas_udf(_ip6_ntoa_batch, "string")(
-        struct_col["hi"], struct_col["lo"]
-    )
-
-
-def ip6_mask(struct_col: Column, plen: int) -> Column:
-    """Keep the top `plen` bits of an IPv6 limb pair — JVM-side long
-    arithmetic, no Python."""
-    plen = max(0, min(plen, 128))
-    if plen <= 64:
-        keep = plen
-        hi_mask = (((1 << keep) - 1) << (64 - keep)) if keep else 0
-        # Python literal may exceed int64 when keep=64 -> wrap to signed
-        if hi_mask >= 1 << 63:
-            hi_mask -= 1 << 64
-        return F.struct(
-            struct_col["hi"].bitwiseAND(F.lit(hi_mask)).alias("hi"),
-            F.lit(0).cast("long").alias("lo"),
-        )
-    keep = plen - 64
-    lo_mask = ((1 << keep) - 1) << (64 - keep)
-    if lo_mask >= 1 << 63:
-        lo_mask -= 1 << 64
-    return F.struct(
-        struct_col["hi"].alias("hi"),
-        struct_col["lo"].bitwiseAND(F.lit(lo_mask)).alias("lo"),
-    )
 
 
 # --------------------------------------------------------------------------

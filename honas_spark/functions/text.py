@@ -167,17 +167,6 @@ def language_guess(col: Column) -> Column:
     return F.array_max(F.array(*scores))["l"]
 
 
-def hygiene_filter(
-    df: DataFrame, text_col: str, max_chars: int = 262_144,
-    min_chars: int = 1,
-) -> DataFrame:
-    """F3 analog (oversize-frame skip, honas_gather.c:300-308): drop
-    rows whose payload is outside sane bounds before they reach the
-    sketch path.  Pushed to the scan by Catalyst."""
-    c = F.length(F.col(text_col))
-    return df.filter((c >= min_chars) & (c <= max_chars))
-
-
 def fingerprint(col: Column) -> Column:
     """Document fingerprint: MD5 of the whitespace-normalized, lowercased
     text — the exact-dedup key (rolling-hash analog, deterministic)."""

@@ -1193,27 +1193,6 @@ def filter_indexes_for_clients(
 
 
 # ---------------------------------------------------------------------------
-# Coarse client estimate from probe hit count (README.md:273-279): a key hit
-# in h of F filters when each client updates u of them suggests roughly how
-# many distinct clients looked it up.
-# ---------------------------------------------------------------------------
-
-
-def estimate_clients_from_hits(hits: int, num_filters: int, filters_per_user: int) -> float:
-    if hits <= 0:
-        return 0.0
-    if hits >= num_filters:
-        return float("inf")
-    # P(a specific filter untouched by c clients) = (1 - u/F)^c; expected
-    # touched = F(1-(1-u/F)^c); invert for c.
-    frac = hits / num_filters
-    base = 1.0 - filters_per_user / num_filters
-    if base <= 0:
-        return 1.0
-    return math.log(1.0 - frac) / math.log(base)
-
-
-# ---------------------------------------------------------------------------
 # KMV / theta distinct sketch — the set-operation sibling.  The reference
 # can only approximate an intersection through the search-time hit-bitmap
 # AND (src/bin/honas_search.c:303-314, group "hits_by_all_hostnames"); a

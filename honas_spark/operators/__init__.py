@@ -5,7 +5,7 @@ from .sketch_agg import (
 from .probe import probe_sketches, cms_probe
 from .prefix_join import longest_prefix_join, cidr_longest_prefix_join
 from .sampling import (
-    hash_sample, stratified_hash_sample, top_k_by_hash,
+    hash_sample, top_k_by_hash,
     weighted_hash_sample, weighted_hash_sample_per_group,
 )
 from .dedup import (
@@ -21,7 +21,7 @@ __all__ = [
     "per_filter_stats", "with_window", "sha256_key", "with_client_hash",
     "probe_sketches", "cms_probe",
     "longest_prefix_join", "cidr_longest_prefix_join",
-    "hash_sample", "stratified_hash_sample", "top_k_by_hash",
+    "hash_sample", "top_k_by_hash",
     "weighted_hash_sample", "weighted_hash_sample_per_group",
     "connected_components", "exact_duplicates", "lsh_params",
     "minhash_lsh_candidates", "minhash_signatures", "near_dedup",

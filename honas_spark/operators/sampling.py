@@ -38,24 +38,6 @@ def hash_sample(
     return df.filter(hash_bucket(F.col(key_col), buckets, salt) < rate_pct)
 
 
-def stratified_hash_sample(
-    df: DataFrame,
-    key_col: str,
-    rates: dict,
-    strata_col: str,
-    salt: str = "",
-    buckets: int = 100,
-    default_pct: int = 0,
-) -> DataFrame:
-    """Per-stratum deterministic sampling (e.g. language-balanced corpus
-    cuts): rates maps stratum value -> keep percentage.  Still a pure
-    filter — the rate lookup folds into a CASE chain."""
-    rate = F.lit(default_pct)
-    for value, pct in sorted(rates.items()):
-        rate = F.when(F.col(strata_col) == value, F.lit(pct)).otherwise(rate)
-    return df.filter(hash_bucket(F.col(key_col), buckets, salt) < rate)
-
-
 def top_k_by_hash(
     df: DataFrame,
     key_col: str,

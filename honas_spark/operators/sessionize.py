@@ -1,11 +1,7 @@
-"""Batch gap-based sessionization — the batch twin of
-streaming/sessions.py's stateful sessionizer: assign every event a
-per-key session ordinal, where a gap larger than `gap_sec` between
-consecutive events of the same key closes the session.
-
-Semantics match the streaming operator (events <= gap apart extend the
-session, a larger gap opens the next one), so a backfill over parquet
-and the live stream agree on session boundaries.
+"""Batch gap-based sessionization: assign every event a per-key
+session ordinal, where a gap larger than `gap_sec` between consecutive
+events of the same key closes the session (events <= gap apart extend
+the session, a larger gap opens the next one).
 
 Scale shape: ONE shuffle on the key for the ordered window; only
 (key, ts) ordering state is needed per task, and Spark's window runs

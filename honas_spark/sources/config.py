@@ -6,14 +6,11 @@ SketchSpec — drop-in config parity for reference users.
 
 S6: the subnet-definitions JSON (entity -> list of prefixes,
 etc/example_subnet_definitions.json via src/subnet_activity.c:360-438),
-generalized to any prefix->entity dimension, loaded as the broadcast dim
-for the longest-prefix join (J1)."""
+generated from the CRM CSV by `generate_subnet_definitions`.  The
+longest-prefix join (J1) takes the prefix->entity dimension as any
+(prefix, entity) DataFrame."""
 
 from __future__ import annotations
-
-import json
-
-from pyspark.sql import DataFrame, SparkSession
 
 from ..spec import SketchSpec
 
@@ -53,36 +50,6 @@ def parse_gather_config(text: str) -> SketchSpec:
 def load_gather_config(path: str) -> SketchSpec:
     with open(path) as f:
         return parse_gather_config(f.read())
-
-
-def entity_dim_from_json(
-    spark: SparkSession, doc: "str | dict"
-) -> DataFrame:
-    """Entity->prefix-list JSON -> (prefix, entity) broadcast dim.
-
-    Accepts the reference's subnet_activity shape
-    (etc/example_subnet_definitions.json: `{"subnet_activity":
-    [{"entity": e, "prefixes": [{addr: plen}, ...]}]}` — prefixes
-    become "addr/plen" strings), the simplified `{"entities":
-    [{"entity": name, "prefixes": [p, ...]}, ...]}` shape, or a plain
-    `{entity: [prefixes]}` mapping."""
-    if isinstance(doc, str):
-        doc = json.loads(doc)
-    rows = []
-    if "subnet_activity" in doc:
-        for e in doc["subnet_activity"]:
-            for p in e.get("prefixes", []):
-                for addr, plen in p.items():
-                    rows.append((f"{addr}/{plen}", str(e["entity"])))
-    elif "entities" in doc:
-        for e in doc["entities"]:
-            for p in e.get("prefixes", []):
-                rows.append((str(p), str(e["entity"])))
-    else:
-        for entity, prefixes in doc.items():
-            for p in prefixes:
-                rows.append((str(p), str(entity)))
-    return spark.createDataFrame(rows, "prefix string, entity string")
 
 
 def generate_subnet_definitions(

@@ -4,9 +4,8 @@ signature approximately matches one seen in ANY earlier micro-batch.
 The batch engine clusters near-duplicates after the fact
 (operators/dedup.near_dedup); a continuously-fed pipeline wants the
 signal AT INGEST — "this document is probably a near-copy of doc X we
-already took" — hours or days after the original landed.  Exact dedup
-streams on the fingerprint (streaming/dedupe.py); near-dedup streams on
-the LSH band buckets: the same banding that bounds the batch join also
+already took" — hours or days after the original landed.  It streams
+on the LSH band buckets: the same banding that bounds the batch join also
 bounds the state lookup, so each arriving document is compared against
 ONLY the signatures sharing one of its band values, never the corpus.
 

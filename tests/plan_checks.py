@@ -1,5 +1,5 @@
-"""Physical-plan inspection helpers — make "did the filter push down /
-did the join broadcast / how many shuffles" checkable in tests and CI
+"""Physical-plan inspection helpers for the tests — make "did the filter
+push down / did the join broadcast / how many shuffles" checkable
 instead of eyeballed."""
 
 from __future__ import annotations

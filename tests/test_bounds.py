@@ -73,15 +73,43 @@ def test_hll_vs_exact_on_slice():
     assert abs(est - exact) / exact < 0.05  # sigma ~0.81% at P=14
 
 
-def test_client_estimate_monotone():
+def test_client_estimate_monotone(spark):
     """D5: more distinct clients -> more filters touched -> higher
-    coarse client estimate."""
+    coarse client estimate, checked on the `est_key_clients` column that
+    `run_search` ships.  Key `kC` is looked up by C distinct clients, each
+    updating u=2 of F=8 filters."""
+    from pyspark.sql import functions as F
+
+    from honas_spark.operators import build_sketches, sha256_key
+    from honas_spark.search import make_search_job, run_search
+
     spec = SketchSpec(
         m_bits=1 << 14, k=3, num_filters=8, filters_per_user=2,
         cms_width=256, kll_k=64,
     )
-    assert K.estimate_clients_from_hits(2, 8, 2) <= K.estimate_clients_from_hits(6, 8, 2)
-    assert K.estimate_clients_from_hits(0, 8, 2) == 0.0
+    counts = (1, 2, 3, 5, 8, 13, 60)
+    rows = [(f"k{c}", f"client{i}") for c in counts for i in range(c)]
+    df = spark.createDataFrame(rows, "key string, client string")
+    sk = build_sketches(
+        sha256_key(df.withColumn("g", F.lit(1)), "key"), spec, ["g"],
+        client_col="client",
+    )
+    keys = [f"k{c}" for c in counts] + ["never-seen"]
+    key_df, _ = run_search(sk, spec, make_search_job({1: keys}), ["g"])
+    got = {r["key"]: (r["hits"], r["est_key_clients"]) for r in key_df.collect()}
+
+    # 0 hits: no key row, so no estimate (key rows need hits >= u)
+    assert "never-seen" not in got
+    assert set(got) == {f"k{c}" for c in counts}
+    # one client touches exactly u filters, which inverts to one client
+    assert got["k1"] == (2, 1.0)
+    # every filter hit: the inversion diverges, the column is NULL
+    assert got["k60"] == (8, None)
+    # one key per hit count u..F; below F the estimate never decreases
+    by_hits = sorted(got.values(), key=lambda hv: hv[0])
+    assert [h for h, _ in by_hits] == list(range(2, 9)), by_hits
+    ests = [e for _, e in by_hits[:-1]]
+    assert None not in ests and ests == sorted(ests), by_hits
 
 
 def test_fpr_sweep_actual_vs_theoretical():

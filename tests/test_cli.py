@@ -501,8 +501,7 @@ def test_export_csv_and_diff_results(tmp_path, capsys):
 def test_gen_subnets_matches_reference_format(tmp_path, capsys):
     """gen-subnets reproduces subnet_definitions_generator.py's exact
     JSON shape (subnet_activity list, {network_address: prefixlen}
-    prefix dicts, insertion order) + the entities_out list, and the
-    output round-trips through entity_dim_from_json."""
+    prefix dicts, insertion order) + the entities_out list."""
     crm = tmp_path / "crm.csv"
     crm.write_text(
         '"Prefix","Volledige naam klant"\n'
@@ -523,19 +522,6 @@ def test_gen_subnets_matches_reference_format(tmp_path, capsys):
          "prefixes": [{"2001:67c:6ec::": 48}, {"192.42.113.5": 32}]},
     ]}
     assert oe.read_text() == "SURFnet\nnetSURF\n"
-
-
-def test_entity_dim_reads_reference_subnet_activity_shape(spark):
-    from honas_spark.sources.config import entity_dim_from_json
-
-    doc = {"subnet_activity": [
-        {"entity": "SURFnet", "prefixes": [{"192.87.0.0": 16}]},
-        {"entity": "netSURF", "prefixes": [{"2001:67c:6ec::": 48}]},
-    ]}
-    rows = {(r["prefix"], r["entity"])
-            for r in entity_dim_from_json(spark, doc).collect()}
-    assert rows == {("192.87.0.0/16", "SURFnet"),
-                    ("2001:67c:6ec::/48", "netSURF")}
 
 
 def test_fpr_report_over_exported_states(spark, ckpt_dir, tmp_path, capsys):
@@ -600,25 +586,6 @@ def test_occurrences_counts_across_results(tmp_path, capsys):
     assert out[0] == "2 evil.example"
     assert set(out[1:]) == {"1 a.example", "1 b.example"}
     assert not any("netSURF@" in l for l in out)
-
-
-def test_iceberg_fallback_roundtrip(spark, tmp_path):
-    """No Iceberg jar in this sandbox: iceberg_available is False and
-    the source falls back to plain parquet read/write with the same
-    schema, keeping every operator storage-agnostic."""
-    from honas_spark.sources.iceberg import (
-        iceberg_available,
-        read_corpus_table,
-        write_sketch_table,
-    )
-
-    assert iceberg_available(spark) is False
-    df = generate_corpus(spark, 50, n_hours=1)
-    out = str(tmp_path / "corpus.parquet")
-    write_sketch_table(df, out)
-    back = read_corpus_table(spark, out)
-    assert back.count() == 50
-    assert set(back.columns) == set(df.columns)
 
 
 def test_curate_pipeline_end_to_end(spark, tmp_path):

@@ -1,13 +1,9 @@
-"""S6/S7/S8/D3 coverage: gather-config parser, entity-map source, info
-sink, sizing advice."""
+"""S7/S8/D3 coverage: gather-config parser, info sink, sizing advice."""
 
 import pytest
 
 from honas_spark.spec import SketchSpec
-from honas_spark.sources.config import (
-    entity_dim_from_json,
-    parse_gather_config,
-)
+from honas_spark.sources.config import parse_gather_config
 from honas_spark.info import sizing_advice
 
 
@@ -39,26 +35,6 @@ def test_parse_gather_config_rejects_bad_combo():
         )
 
 
-def test_entity_dim_from_json(spark):
-    # subnet-definitions shape (etc/example_subnet_definitions.json)
-    doc = {
-        "entities": [
-            {"entity": "OrgZero", "prefixes": ["org0/"]},
-            {"entity": "TeamOne", "prefixes": ["org0/repo1", "org1/"]},
-        ]
-    }
-    dim = entity_dim_from_json(spark, doc)
-    rows = {(r["prefix"], r["entity"]) for r in dim.collect()}
-    assert rows == {
-        ("org0/", "OrgZero"),
-        ("org0/repo1", "TeamOne"),
-        ("org1/", "TeamOne"),
-    }
-    # plain-mapping shape
-    dim2 = entity_dim_from_json(spark, {"X": ["a", "b"]})
-    assert dim2.count() == 2
-
-
 def test_sizing_advice_reference_anchor():
     # README.md:642-647: ~2,578,756 uniques/h -> m = 40.81e6 bits @ 1e-3
     advs = {a["target_fpr"]: a for a in sizing_advice(2_578_756)}
@@ -85,12 +61,3 @@ def test_info_rows(spark):
     assert info[0]["est_items"] == 3
     assert 0 < info[0]["total_bits_set"] <= 15
 
-
-def test_hygiene_filter(spark):
-    from honas_spark.functions.text import hygiene_filter
-
-    df = spark.createDataFrame(
-        [(1, ""), (2, "ok"), (3, "x" * 100)], "id long, text string"
-    )
-    kept = [r["id"] for r in hygiene_filter(df, "text", max_chars=50).collect()]
-    assert kept == [2]

@@ -14,8 +14,7 @@ from honas_spark.operators.corpusprep import (
     salient_terms,
     stratified_split,
 )
-from honas_spark.plans import assert_max_shuffles
-from honas_spark.plans.inspect import formatted_plan
+from plan_checks import assert_max_shuffles, formatted_plan
 
 SF = "/root/testdata/sf0.001"
 

@@ -1,4 +1,4 @@
-"""P9 IP parse/format + CIDR longest-prefix join (reference src/inet.c,
+"""P9 IP parsing + CIDR longest-prefix join (reference src/inet.c,
 src/subnet_activity.c:441-507)."""
 
 import ipaddress
@@ -8,10 +8,7 @@ from pyspark.sql import functions as F
 from honas_spark.functions.inet import (
     ip4_aton,
     ip4_mask,
-    ip4_ntoa,
     ip6_aton,
-    ip6_mask,
-    ip6_ntoa,
     parse_cidr,
 )
 from honas_spark.operators.prefix_join import cidr_longest_prefix_join
@@ -37,14 +34,6 @@ def test_ip4_roundtrip_and_validation(spark):
             assert got[s] is None, s
         else:
             assert got[s] == int(ipaddress.IPv4Address(s)), s
-    # format round-trips every valid address
-    rt = (
-        df.filter(F.col("n").isNotNull())
-        .withColumn("rt", ip4_ntoa(F.col("n")))
-        .collect()
-    )
-    for r in rt:
-        assert r["rt"] == r["ip"]
 
 
 def test_ip4_mask_matches_ipaddress(spark):
@@ -70,23 +59,17 @@ def test_ip6_roundtrip_and_mask(spark):
     df = spark.createDataFrame(
         [(a,) for a in addrs] + [("not-an-ip",)], "ip string"
     ).withColumn("limbs", ip6_aton(F.col("ip")))
-    out = df.withColumn("rt", ip6_ntoa(F.col("limbs"))).collect()
-    got = {r["ip"]: r for r in out}
-    for a in addrs:
-        assert got[a]["rt"] == str(ipaddress.IPv6Address(a))
-    assert got["not-an-ip"]["limbs"]["hi"] is None
+    got = {r["ip"]: r["limbs"] for r in df.collect()}
 
-    # masking equals ipaddress-computed network addresses at both limb sides
-    for plen in (1, 48, 64, 65, 96, 128):
-        m = (
-            df.filter(F.col("ip") == "fe80::a:b:c:d")
-            .select(ip6_ntoa(ip6_mask(F.col("limbs"), plen)).alias("m"))
-            .collect()[0]["m"]
-        )
-        expect = ipaddress.ip_network(
-            ("fe80::a:b:c:d", plen), strict=False
-        ).network_address
-        assert m == str(expect), plen
+    def signed64(v):
+        return v - (1 << 64) if v >= 1 << 63 else v
+
+    # (hi, lo) are the address's big-endian 64-bit halves as signed longs
+    for a in addrs:
+        n = int(ipaddress.IPv6Address(a))
+        expect = (signed64(n >> 64), signed64(n & ((1 << 64) - 1)))
+        assert (got[a]["hi"], got[a]["lo"]) == expect, a
+    assert got["not-an-ip"]["hi"] is None
 
 
 def test_parse_cidr():

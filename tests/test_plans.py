@@ -1,10 +1,10 @@
 """Plan-shape regression tests: pruning, pushdown, broadcast, shuffle
 counts — the properties that decide whether a query survives a 100x
-scale-up.  Uses the plans.inspect helpers so regressions fail loudly."""
+scale-up.  Uses the plan_checks helpers so regressions fail loudly."""
 
 from pyspark.sql import functions as F
 
-from honas_spark.plans import (
+from plan_checks import (
     assert_columns_pruned,
     assert_max_shuffles,
     plan_summary,

@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 from honas_spark.operators.sampling import (
     hash_bucket,
     hash_sample,
-    stratified_hash_sample,
     top_k_by_hash,
 )
 
@@ -46,20 +45,6 @@ def test_hash_sample_is_filter_only(spark):
     plan = hash_sample(_docs(spark), "text", 20)._jdf.queryExecution(
     ).executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_stratified_rates(spark):
-    df = _docs(spark, 4000)
-    out = stratified_hash_sample(
-        df, "text", {"0": 50, "1": 10}, "lang"
-    )
-    counts = {
-        r["lang"]: r["n"]
-        for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    assert counts.get("2") is None and counts.get("3") is None
-    assert 400 < counts["0"] < 600      # 50% of 1000
-    assert 50 < counts["1"] < 160       # 10% of 1000
 
 
 def test_top_k_by_hash_exact_k_and_stable(spark):
