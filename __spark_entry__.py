@@ -1726,7 +1726,7 @@ def _q_tdigest_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_sizing_advice(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D3: dry-run sizing advice from per-lang HLL uniques estimates
     (rows-only: derives from the HLL estimate).  The advice math
-    (info.sizing_advice / src/advice.c:30-51) is expressed as Spark
+    (src/advice.c:30-51) is expressed as Spark
     column arithmetic over the finalize_stats output — one explode per
     target FPR, no driver-side collect+createDataFrame in the path."""
     import math as _math

@@ -147,7 +147,16 @@ def cmd_gather(args) -> int:
     return 0
 
 
+def _group_cols(df) -> list:
+    """A sketch table's group columns: every column that is not a
+    sketch value."""
+    from .operators.sketch_agg import SKETCH_VALUE_COLS
+
+    return [c for c in df.columns if c not in SKETCH_VALUE_COLS]
+
+
 def _load_sketch_table(args, spark):
+    """-> (spec, sketch table, group columns, .hs header or None)."""
     from .sources import checkpoint as CP
 
     if args.state.endswith(".hs"):
@@ -169,14 +178,10 @@ def _load_sketch_table(args, spark):
         schema = f"window_start timestamp, {SKETCH_VALUE_FIELDS}"
         return spec, spark.createDataFrame(pdf, schema=schema), [
             "window_start"
-        ]
+        ], h
     spec = CP.read_spec(args.state)
     df = CP.read_checkpoint(spark, args.state)
-    group_cols = [
-        c for c in df.columns
-        if c in ("window_start", "entity", "lang", "org", "repo")
-    ]
-    return spec, df, group_cols
+    return spec, df, _group_cols(df), None
 
 
 def _search_hs_file(
@@ -189,16 +194,13 @@ def _search_hs_file(
     import argparse as _ap
 
     from .search import run_search, search_result_json_reference
-    from .sources.hsfile import HEADER_READ_SIZE, read_hs_header
 
-    spec, table, group_cols = _load_sketch_table(
+    spec, table, group_cols, h = _load_sketch_table(
         _ap.Namespace(state=hs_path), spark
     )
     key_df, group_df = run_search(
         table, spec, job, group_cols, flatten_on=flatten_on
     )
-    with open(hs_path, "rb") as f:
-        h = read_hs_header(f.read(HEADER_READ_SIZE))
     return search_result_json_reference(
         key_df, group_df, spec, h, flatten_on=flatten_on
     )
@@ -262,7 +264,7 @@ def cmd_search(args) -> int:
     )
 
     spark = _spark()
-    spec, table, group_cols = _load_sketch_table(args, spark)
+    spec, table, group_cols, h = _load_sketch_table(args, spark)
     if args.keys:
         # blacklist-file mode (scripts/query_generic_blacklist.py shape)
         from .search import read_entities_csv
@@ -278,13 +280,9 @@ def cmd_search(args) -> int:
         table, spec, job, group_cols,
         flatten_on=getattr(args, "flatten_on", "clients"),
     )
-    if args.state.endswith(".hs"):
+    if h is not None:
         # single-state search: render the reference binary's exact
         # document (README.md:341-454) from the state header
-        from .sources.hsfile import HEADER_READ_SIZE, read_hs_header
-
-        with open(args.state, "rb") as f:
-            h = read_hs_header(f.read(HEADER_READ_SIZE))
         out = search_result_json_reference(
             key_df, group_df, spec, h,
             flatten_on=getattr(args, "flatten_on", "clients"),
@@ -324,11 +322,11 @@ def cmd_search(args) -> int:
 
 def cmd_info(args) -> int:
     from .info import (
-        info_rows,
         render_info_text,
         render_plot_lines,
         write_plotmode_csv,
     )
+    from .operators.sketch_agg import finalize_stats
 
     if args.state.endswith(".hs"):
         # single-state info: the reference binary's exact text/plot
@@ -345,12 +343,12 @@ def cmd_info(args) -> int:
             print(render_info_text(spec, h))
         return 0
     spark = _spark()
-    spec, table, group_cols = _load_sketch_table(args, spark)
+    spec, table, group_cols, _h = _load_sketch_table(args, spark)
     if args.plotmode:
         write_plotmode_csv(table, spec, group_cols, args.plotmode)
         print(f"wrote {args.plotmode}")
     else:
-        info_rows(table, spec, group_cols).show(100, truncate=False)
+        finalize_stats(table, spec, group_cols).show(100, truncate=False)
     return 0
 
 
@@ -381,10 +379,7 @@ def cmd_rotate(args) -> int:
     spark = _spark()
     spec = CP.read_spec(args.state)
     df = CP.read_checkpoint(spark, args.state)
-    group_cols = [
-        c for c in df.columns
-        if c in ("entity", "lang", "org", "repo")
-    ]
+    group_cols = [c for c in _group_cols(df) if c != "window_start"]
     rolled = rollup_sketches(
         df, spec, "window_start", args.period, group_cols
     )
@@ -410,11 +405,7 @@ def cmd_export_hs(args) -> int:
     spec = CP.read_spec(args.state)
     df = CP.read_checkpoint(spark, args.state)
     os.makedirs(args.output, exist_ok=True)
-    value_fields = {
-        "filters", "hll_clients", "hll_items", "cms", "kll",
-        "n_rows", "first_ts", "last_ts",
-    }
-    group_cols = [c for c in df.columns if c not in value_fields]
+    group_cols = _group_cols(df)
     n = 0
     for row in df.collect():
         st = SketchState.from_fields(spec, row.asDict())

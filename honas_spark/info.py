@@ -2,10 +2,10 @@
 
 S8: honas-info's human-readable and CSV (`--plotmode`) dumps of the
 state header (src/bin/honas_info.c:60-105) over our sketch table.
-D3: the dry-run sizing advisor (src/advice.c:30-51 +
-src/bin/honas_gather.c:1150-1212): given estimated uniques per window,
-recommend (m, k) at the three target FPRs, rounded up to the next 1e5
-with the reference's 10% headroom."""
+D3: the dry-run sizing advice block (src/advice.c:30-51 +
+src/bin/honas_gather.c:1150-1212): given the largest hourly and daily
+distinct counts, the (m, k) at the three target FPRs, rounded up to the
+next 1e5 with the reference's 10% headroom."""
 
 from __future__ import annotations
 
@@ -17,29 +17,6 @@ from pyspark.sql import DataFrame
 from . import kernels as K
 from .spec import SketchSpec
 from .operators.sketch_agg import finalize_stats
-
-_ADVICE_FPRS = (1e-3, 1e-4, 1e-5)
-
-
-def sizing_advice(n_uniques: int, headroom: float = 1.10) -> list[dict]:
-    """(m, k) advice at the reference's three target FPRs.
-
-    Mirrors the dry-run advice output (README.md:639-656): m is sized
-    for n*headroom uniques and rounded up to the next 100000 bits."""
-    out = []
-    n = max(int(n_uniques * headroom), 1)
-    for p in _ADVICE_FPRS:
-        m = K.bloom_filter_size(p, n)
-        m = int(math.ceil(m / 100_000) * 100_000)
-        out.append(
-            {
-                "target_fpr": p,
-                "n_uniques": n_uniques,
-                "m_bits": m,
-                "k": max(K.optimal_k(n, m), 1),
-            }
-        )
-    return out
 
 
 def _optimal_k_ref(n: int, m: int) -> int:
@@ -195,14 +172,6 @@ def render_plot_lines(header: dict) -> str:
     )
 
 
-def info_rows(
-    sketch_df: DataFrame, spec: SketchSpec, group_cols: Sequence[str]
-) -> DataFrame:
-    """The honas-info dump as a DataFrame (S8); write with .show() for
-    the human view or .write.csv for --plotmode."""
-    return finalize_stats(sketch_df, spec, group_cols)
-
-
 def write_plotmode_csv(
     sketch_df: DataFrame,
     spec: SketchSpec,
@@ -211,7 +180,7 @@ def write_plotmode_csv(
 ) -> None:
     # one row per sketch group (bounded) -> a single CSV FILE like the
     # reference's --plotmode output, not a Spark part-file directory
-    rows = info_rows(sketch_df, spec, group_cols).collect()
+    rows = finalize_stats(sketch_df, spec, group_cols).collect()
     import csv
 
     with open(path, "w", newline="") as f:

@@ -1,5 +1,5 @@
 from .sketch_agg import (
-    build_sketches, rollup_sketches, rollup_hierarchy, finalize_stats, per_filter_stats,
+    build_sketches, rollup_sketches, rollup_hierarchy, finalize_stats,
     with_window, sha256_key, with_client_hash,
 )
 from .probe import probe_sketches, cms_probe
@@ -18,7 +18,7 @@ from .quality import contamination_flags, ngram_repetition, span_dup_stats
 
 __all__ = [
     "build_sketches", "rollup_sketches", "rollup_hierarchy", "finalize_stats",
-    "per_filter_stats", "with_window", "sha256_key", "with_client_hash",
+    "with_window", "sha256_key", "with_client_hash",
     "probe_sketches", "cms_probe",
     "longest_prefix_join", "cidr_longest_prefix_join",
     "hash_sample", "top_k_by_hash",

@@ -118,7 +118,7 @@ def cidr_longest_prefix_join(
         if ver != 4:
             raise ValueError(
                 f"cidr_longest_prefix_join is IPv4-only: {cidr};"
-                " use cidr_longest_prefix_join6 / cidr_longest_prefix_join_dual"
+                " use cidr_longest_prefix_join6 for IPv6 prefixes"
             )
         parsed.append((net, plen, entity))
 
@@ -294,51 +294,3 @@ def cidr_longest_prefix_join6(
     )
     return fact.join(matched, row_id_col, "left")
 
-
-def cidr_longest_prefix_join_dual(
-    fact: DataFrame,
-    addr_col: str,
-    addr6_col: str,
-    cidrs: Sequence[tuple],
-    out_col: str = "matched_entity",
-    plen_col: str = "matched_plen",
-    row_id_col: str = "row_id",
-    max_case_entries: int = 500,
-) -> DataFrame:
-    """Dual-stack LPM — the reference's family dispatch
-    (subnet_activity.c:441-507): each row carries EITHER an IPv4 BIGINT
-    (`addr_col`) or an IPv6 struct<hi,lo> (`addr6_col`), the other NULL;
-    v4 addresses match v4 CIDRs, v6 addresses v6 CIDRs, longest prefix
-    wins within the family.  One pass, both CASE chains fused into the
-    same projection (a NULL address makes its family's chain NULL, so a
-    plain coalesce combines them)."""
-    from ..functions.inet import parse_cidr
-
-    v4 = [(c, e) for c, e in cidrs if parse_cidr(c)[0] == 4]
-    v6 = [(c, e) for c, e in cidrs if parse_cidr(c)[0] == 6]
-    out4, ln4 = f"_{out_col}_v4", f"_{plen_col}_v4"
-    out6, ln6 = f"_{out_col}_v6", f"_{plen_col}_v6"
-    df = fact
-    if v4:
-        df = cidr_longest_prefix_join(
-            df, addr_col, v4, out_col=out4, plen_col=ln4,
-            row_id_col=row_id_col, max_case_entries=max_case_entries,
-        )
-    else:
-        df = df.withColumn(out4, F.lit(None).cast("string")).withColumn(
-            ln4, F.lit(None).cast("int")
-        )
-    if v6:
-        df = cidr_longest_prefix_join6(
-            df, addr6_col, v6, out_col=out6, plen_col=ln6,
-            row_id_col=row_id_col, max_case_entries=max_case_entries,
-        )
-    else:
-        df = df.withColumn(out6, F.lit(None).cast("string")).withColumn(
-            ln6, F.lit(None).cast("int")
-        )
-    return (
-        df.withColumn(out_col, F.coalesce(F.col(out4), F.col(out6)))
-        .withColumn(plen_col, F.coalesce(F.col(ln4), F.col(ln6)))
-        .drop(out4, ln4, out6, ln6)
-    )

@@ -36,13 +36,13 @@ uses the integer n_hit_terms, never the float).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from honas_spark.functions.text import tokens
 from honas_spark.operators.common import duckdb_round
 
-__all__ = ["bm25_scores", "bm25_topk"]
+__all__ = ["bm25_scores"]
 
 
 def _tf(tok: Column, term: str) -> Column:
@@ -60,9 +60,9 @@ def bm25_scores(
     """-> (id, n_hit_terms, dl, score): BM25 score of every document
     that contains at least one query term.
 
-    ``score`` is rounded to 4 decimals for reporting; rank real
-    consumers with :func:`bm25_topk`, which tie-breaks on the id so
-    top-k sets stay deterministic.
+    ``score`` is rounded to 4 decimals for reporting; a top-k that must
+    be deterministic orders by (score desc, id asc) so ties break on the
+    id.
     """
     if not query_terms:
         raise ValueError("query_terms must be non-empty")
@@ -123,21 +123,3 @@ def bm25_scores(
         )
     )
 
-
-def bm25_topk(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    query_terms: list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Top-k documents by BM25, deterministic (score desc, id asc)
-    tie-break.  Global top-k goes through TakeOrderedAndProject (a
-    per-partition heap + driver merge of k rows), never a single-task
-    global sort."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1: {k}")
-    scored = bm25_scores(df, id_col, text_col, query_terms, k1=k1, b=b)
-    return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(k)

@@ -438,11 +438,20 @@ def finalize_stats(
 ) -> DataFrame:
     """Attach diagnostic stats (D2/D5: fill rate, actual FPR fill^k,
     HLL estimates, Bloom approx-count) to every sketch row."""
+    return _row_stats(sketch_df, spec, group_cols).drop("bits_set")
+
+
+def _row_stats(
+    sketch_df: DataFrame, spec: SketchSpec, group_cols: Sequence[str]
+) -> DataFrame:
+    """`finalize_stats` plus each row's per-filter `bits_set` array, the
+    input of the reference's per-filter block (honas_search.c:113-124):
+    one pass over the packed Bloom rows serves both."""
     group_cols = list(group_cols)
     group_ddl = group_fields_ddl(sketch_df, group_cols)
     out_schema = (
         f"{group_ddl}, n_rows long, first_ts timestamp, last_ts timestamp,"
-        f" {STATS_FIELDS}"
+        f" {STATS_FIELDS}, bits_set array<long>"
     )
 
     def add_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -463,60 +472,13 @@ def finalize_stats(
                     ),
                     fill_rate=float(np.mean(s["fill_rate"])),
                     actual_fpr=float(np.mean(s["actual_fpr"])),
+                    bits_set=s["bits_set"],
                 )
                 rows.append(out)
             if rows:
                 yield pd.DataFrame(rows)
 
     return sketch_df.mapInPandas(add_stats, schema=out_schema)
-
-
-def per_filter_stats(
-    sketch_df: DataFrame, spec: SketchSpec, group_cols: Sequence[str]
-) -> DataFrame:
-    """Per-FILTER diagnostics — one row per (sketch row, filter index).
-
-    Mirrors the reference's search-result "general information" filters
-    array (src/bin/honas_search.c:113-124): for each of the F filters,
-    `number_of_bits_set`, `estimated_number_of_host_names`
-    (bloom_approx_count) and `actual_false_positive_rate` (fill^k).
-    `finalize_stats` averages these across filters; this emits the array
-    the reference actually prints."""
-    group_cols = list(group_cols)
-    group_ddl = group_fields_ddl(sketch_df, group_cols)
-    out_schema = (
-        f"{group_ddl}, filter_index int, number_of_bits_set long,"
-        " estimated_number_of_host_names long,"
-        " actual_false_positive_rate double"
-    )
-
-    def expand(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {c: [] for c in group_cols}
-            out.update(
-                filter_index=[], number_of_bits_set=[],
-                estimated_number_of_host_names=[],
-                actual_false_positive_rate=[],
-            )
-            for row in pdf.to_dict("records"):
-                bits = K.bloom_bits_set_packed(
-                    row["filters"], spec.num_filters, spec.filter_bytes
-                ).tolist()
-                for fi, b in enumerate(bits):
-                    for c in group_cols:
-                        out[c].append(row[c])
-                    out["filter_index"].append(fi)
-                    out["number_of_bits_set"].append(b)
-                    out["estimated_number_of_host_names"].append(
-                        int(K.bloom_approx_count(spec.m_bits, spec.k, b))
-                    )
-                    out["actual_false_positive_rate"].append(
-                        float(K.actual_fpr(spec.m_bits, spec.k, b))
-                    )
-            if out["filter_index"]:
-                yield pd.DataFrame(out)
-
-    return sketch_df.mapInPandas(expand, schema=out_schema)
 
 
 def _merge_by_group(spec: SketchSpec, group_cols: list):

@@ -10,8 +10,9 @@ once (the standard Z-ORDER layout optimization, e.g. Iceberg's
 rewrite_data_files sort strategy).
 
 The key computation is a pure projection of shift/mask/or built-ins —
-whole-stage codegen, no UDF, no shuffle.  `cluster_by_zorder` adds the
-single range-exchange any re-clustering write must pay.
+whole-stage codegen, no UDF, no shuffle.  A re-clustering write adds the
+one range exchange it must pay: `repartitionByRange` on the key, then
+`sortWithinPartitions`.
 """
 
 from __future__ import annotations
@@ -19,7 +20,7 @@ from __future__ import annotations
 from functools import reduce
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 def zorder_key(*cols: Column | str, bits: int = 16) -> Column:
@@ -63,20 +64,3 @@ def zorder_key_sql(cols: Sequence[str], bits: int = 16) -> str:
     ]
     return "(" + " | ".join(f"({t})" for t in terms) + ")"
 
-
-def cluster_by_zorder(
-    df: DataFrame,
-    cols: Sequence[str],
-    num_partitions: int,
-    bits: int = 16,
-    key_col: str = "zkey",
-) -> DataFrame:
-    """Re-cluster a table for multi-dimensional scan locality: compute
-    the Morton key, range-partition on it (contiguous, non-overlapping
-    key ranges per output partition/file) and sort within partitions.
-    One exchange total; write the result partition-preserving and every
-    participating column prunes well."""
-    keyed = df.withColumn(key_col, zorder_key(*cols, bits=bits))
-    return keyed.repartitionByRange(num_partitions, key_col).sortWithinPartitions(
-        key_col
-    )

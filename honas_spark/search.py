@@ -215,15 +215,16 @@ def run_search(
     # D5: coarse per-key client estimate from the hit count (a key seen
     # by more distinct clients lands in more of the F filters;
     # README.md:273-279) — invert E[touched] = F(1-(1-u/F)^c)
-    F_, u_ = spec.num_filters, spec.filters_per_user
-    base = 1.0 - u_ / F_
     # hits == F means "all filters touched" — the inversion diverges, so
-    # emit null ("at least everyone", keeps the JSON standard-parseable)
-    est_clients_for_hits = F.when(F.col("hits") <= 0, F.lit(0.0)).otherwise(
-        F.when(F.col("hits") >= F_, F.lit(None).cast("double")).otherwise(
-            F.log(1.0 - F.col("hits") / F_) / math.log(base)
-            if base > 0
-            else F.lit(1.0)
+    # emit null ("at least everyone", keeps the JSON standard-parseable).
+    # Key rows carry hits >= u >= 1; at u == F every one has hits == F.
+    F_, u_ = spec.num_filters, spec.filters_per_user
+    est_clients_for_hits = (
+        F.lit(None).cast("double")
+        if u_ == F_
+        else F.when(
+            F.col("hits") < F_,
+            F.log(1.0 - F.col("hits") / F_) / math.log(1.0 - u_ / F_),
         )
     )
 
@@ -246,37 +247,38 @@ def run_search(
     return key_df, group_df
 
 
+def _filter_block(spec: SketchSpec, bits_set) -> list[dict]:
+    """The reference's per-filter stats (honas_search.c:113-124): bits
+    set, estimated host names and the "%.10f" actual FPR of each filter."""
+    from . import kernels as K
+
+    return [
+        {
+            "number_of_bits_set": int(b),
+            "estimated_number_of_host_names": int(
+                K.bloom_approx_count(spec.m_bits, spec.k, int(b))
+            ),
+            "actual_false_positive_rate": "%.10f"
+            % K.actual_fpr(spec.m_bits, spec.k, int(b)),
+        }
+        for b in bits_set
+    ]
+
+
 def general_information(
     sketch_df: DataFrame, spec: SketchSpec, group_cols: Sequence[str]
 ) -> list[dict]:
     """The reference search result's leading "general information" block
     (src/bin/honas_search.c:88-127): state metadata + per-filter stats.
 
-    One dict per sketch row (state).  The collect is bounded: one row per
-    group (windows x entities), never per input key."""
-    from .operators.sketch_agg import finalize_stats, per_filter_stats
+    One dict per sketch row (state), each with that row's own F filters,
+    from one stats pass.  The collect is bounded: one row per group
+    (windows x entities), never per input key."""
+    from .operators.sketch_agg import _row_stats
 
     group_cols = list(group_cols)
-    stats = finalize_stats(sketch_df, spec, group_cols).collect()
-    pf = per_filter_stats(sketch_df, spec, group_cols).collect()
-    by_group: dict[tuple, list] = {}
-    for r in pf:
-        by_group.setdefault(tuple(r[c] for c in group_cols), []).append(
-            (
-                r["filter_index"],
-                {
-                    "number_of_bits_set": r["number_of_bits_set"],
-                    "estimated_number_of_host_names": r[
-                        "estimated_number_of_host_names"
-                    ],
-                    "actual_false_positive_rate": "%.10f"
-                    % r["actual_false_positive_rate"],
-                },
-            )
-        )
     out = []
-    for r in stats:
-        gkey = tuple(r[c] for c in group_cols)
+    for r in _row_stats(sketch_df, spec, group_cols).collect():
         info = {c: r[c] for c in group_cols}
         info.update(
             first_request=r["first_ts"],
@@ -289,9 +291,7 @@ def general_information(
             number_of_hashes=spec.k,
             number_of_bits_per_filter=spec.m_bits,
             flatten_threshold=spec.flatten_threshold,
-            filters=[
-                d for _, d in sorted(by_group.get(gkey, []))
-            ],
+            filters=_filter_block(spec, r["bits_set"]),
         )
         out.append(info)
     return out
@@ -324,7 +324,6 @@ def search_result_json_reference(
     key_df/group_df come from `run_search` over the imported state (the
     engine path — this is a sink, not a second implementation); `header`
     is the .hs header dict from `import_hs_state`."""
-    from . import kernels as K
     from honas_spark import __version__
 
     doc: dict = {
@@ -346,17 +345,7 @@ def search_result_json_reference(
         "number_of_hashes": spec.k,
         "number_of_bits_per_filter": spec.m_bits,
         "flatten_threshold": spec.flatten_threshold,
-        "filters": [
-            {
-                "number_of_bits_set": int(b),
-                "estimated_number_of_host_names": int(
-                    K.bloom_approx_count(spec.m_bits, spec.k, int(b))
-                ),
-                "actual_false_positive_rate": "%.10f"
-                % K.actual_fpr(spec.m_bits, spec.k, int(b)),
-            }
-            for b in header["filter_bits_set"]
-        ],
+        "filters": _filter_block(spec, header["filter_bits_set"]),
         "flattened_results": bool(
             int(
                 header["estimated_number_of_clients"]

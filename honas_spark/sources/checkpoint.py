@@ -13,7 +13,7 @@ This module is the only one that knows the layout and the key format:
 - `write_windows` publishes any number of windows with ONE Spark write
   job, then swaps each window in with `publish`'s rename-aside swap,
   which `recover` completes or rolls back after a crash.
-  `build_resumable`, `commit_window`, the CLI's `rotate` and the streaming
+  `build_resumable`, the CLI's `rotate` and the streaming
   sink (streaming/stream.py) all write through it.
 - `read_checkpoint` reads every committed window, or the named ones.
   Stores written by the earlier streaming sink, with the Parquet files and
@@ -208,25 +208,6 @@ def write_windows(
         publish(tmp, final)
     shutil.rmtree(tmp_root)
     return len(counts)
-
-
-def commit_window(
-    root: str,
-    window_value,
-    sketch_rows: DataFrame,
-    spec: SketchSpec,
-    input_fingerprint: str,
-    metrics: dict,
-    run_id: str,
-) -> None:
-    """Publish `sketch_rows` as the whole of `window_value`'s window;
-    `metrics` are extra manifest fields."""
-    # the literal key column is replaced by its string key in
-    # write_windows, and partitionBy keeps it out of the data files
-    rows = sketch_rows.withColumn("_wkey", F.lit(window_value))
-    fields = {"spec": spec.to_dict(),
-              "input_fingerprint": input_fingerprint, **metrics}
-    write_windows(root, rows, "_wkey", fields, run_id)
 
 
 def build_resumable(

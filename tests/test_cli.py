@@ -100,6 +100,8 @@ def test_search_cli_finds_member(spark, corpus_dir, ckpt_dir, tmp_path):
     res = json.load(open(op))
     assert res["general_information"][0]["number_of_filters"] == 1
     assert any(r["key"] == path and r["hits"] >= 1 for r in res["hostnames"])
+    # u == F == 1: every key row touched all filters, so no estimate
+    assert all(r["est_key_clients"] is None for r in res["hostnames"])
     # zero-hit group 2 omitted; group 1 present with AND zeroed by miss
     gids = {g["group_id"] for g in res["groups"]}
     assert gids == {1}
@@ -213,6 +215,51 @@ def test_rotate_cli_rolls_hourly_to_daily(spark, ckpt_dir, tmp_path):
     got = SketchState.from_fields(h_spec, daily[0].asDict())
     assert np.array_equal(got.filters, expected.filters)
     assert got.n_rows == expected.n_rows
+
+
+def test_group_column_outside_known_names_survives_rotate_and_search(
+    spark, corpus_dir, tmp_path
+):
+    """A store's group columns come from its schema: a `country` entity
+    column keeps one row per (day, country) through rotate, and search
+    rows and general-information blocks carry it."""
+    import hashlib
+
+    from pyspark.sql import functions as F
+
+    from honas_spark.sources import checkpoint as CP
+
+    src = str(tmp_path / "corpus_country")
+    spark.read.parquet(corpus_dir).withColumn(
+        "country",
+        F.element_at(F.array(*map(F.lit, ["nl", "de", "be"])),
+                     (F.col("row_id") % 3 + 1).cast("int")),
+    ).write.parquet(src)
+    hourly, daily = str(tmp_path / "hourly"), str(tmp_path / "daily")
+    assert main([
+        "gather", "--input", src, "--output", hourly,
+        "--m-bits", str(1 << 16), "--k", "5", "--window", "1 hour",
+        "--client-col", "repo", "--entity-col", "country",
+    ]) == 0
+    assert CP.read_checkpoint(spark, hourly).count() == 6
+    assert main(["rotate", "--state", hourly, "--output", daily,
+                 "--period", "1 day"]) == 0
+    rows = CP.read_checkpoint(spark, daily).select(
+        "window_start", "country").collect()
+    assert sorted(r["country"] for r in rows) == ["be", "de", "nl"]
+    assert len({r["window_start"] for r in rows}) == 1
+
+    path = spark.read.parquet(src).select("path").first()["path"].lower()
+    jp, op = str(tmp_path / "job.json"), str(tmp_path / "res.json")
+    with open(jp, "w") as f:
+        json.dump({"groups": [{"id": 1, "hostnames": {
+            path: hashlib.sha256(path.encode()).hexdigest()}}]}, f)
+    assert main(["search", "--state", daily, "--job", jp, "--out", op]) == 0
+    res = json.load(open(op))
+    assert res["hostnames"] and all("country" in r for r in res["hostnames"])
+    info = res["general_information"]
+    assert sorted(r["country"] for r in info) == ["be", "de", "nl"]
+    assert all(len(r["filters"]) == r["number_of_filters"] for r in info)
 
 
 def test_gather_dry_run_prints_reference_advice_block(

@@ -1,14 +1,15 @@
 """Guard against library surfaces that only tests call.
 
-Every top-level `def` or `class` in `honas_spark/` must be referenced,
-as a whole word, somewhere in non-test code outside its own body.
-Non-test code is `honas_spark/`, `__spark_entry__.py`, `bench.py`,
-`tools/` and `perfbench/` (without `perfbench/tests`).  Import lines and
-`__all__` in an `__init__.py` are re-exports, not callers, so they do
-not count.  Pure text scan: nothing is imported or run."""
+Every top-level `def` or `class` in `honas_spark/` must be referenced
+in code -- an `ast` Name or Attribute node -- somewhere in non-test code
+outside its own body.  Non-test code is `honas_spark/`,
+`__spark_entry__.py`, `bench.py`, `tools/` and `perfbench/` (without
+`perfbench/tests`).  Comments, docstrings and strings are not code, and
+import lines and `__all__` hold no Name or Attribute reference to the
+names they re-export, so none of them counts as a caller.  Pure syntax
+scan: nothing is imported or run."""
 
 import ast
-import re
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -18,6 +19,9 @@ PACKAGE = ROOT / "honas_spark"
 ALLOWED = {
     "StreamingSketchBuilder": "the library analogue of the honas-gather daemon",
     "number_of_combinations": "the frozen golden test pins the reference's value",
+    "murmur64a": "the scalar reference the vectorized kernel's tests compare against",
+    "lsh_params": "four operators' invalid-(bands, rows) errors tell users to call it",
+    "ip6_aton": "the only parser from IPv6 text to cidr_longest_prefix_join6's input",
 }
 
 
@@ -32,30 +36,17 @@ def _non_test_files() -> list[Path]:
     return files
 
 
-def _reexport_lines(tree: ast.Module) -> set[int]:
-    """Line numbers of imports and `__all__` assignments at module level."""
-    lines: set[int] = set()
-    for node in tree.body:
-        is_all = isinstance(node, ast.Assign) and any(
-            isinstance(t, ast.Name) and t.id == "__all__" for t in node.targets
-        )
-        if isinstance(node, (ast.Import, ast.ImportFrom)) or is_all:
-            lines.update(range(node.lineno, node.end_lineno + 1))
-    return lines
-
-
 def _scan() -> tuple[list[str], set[str]]:
     """-> (unreferenced definitions as "path:line name", all names defined)."""
-    texts: dict[Path, list[str]] = {}
+    refs = []  # (name, path, line) of every Name / Attribute node
     definitions = []  # (name, path, first line, last line), 1-based
     for path in _non_test_files():
-        src = path.read_text()
-        tree = ast.parse(src)
-        lines = src.splitlines()
-        if path.name == "__init__.py":
-            for n in _reexport_lines(tree):
-                lines[n - 1] = ""
-        texts[path] = lines
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                refs.append((node.id, path, node.lineno))
+            elif isinstance(node, ast.Attribute):
+                refs.append((node.attr, path, node.lineno))
         if PACKAGE in path.parents:
             for node in tree.body:
                 if isinstance(
@@ -71,12 +62,9 @@ def _scan() -> tuple[list[str], set[str]]:
     for name, home, first, last in definitions:
         if name in ALLOWED:
             continue
-        word = re.compile(rf"\b{re.escape(name)}\b")
         used = any(
-            word.search(line)
-            for path, lines in texts.items()
-            for i, line in enumerate(lines, start=1)
-            if not (path == home and first <= i <= last)
+            ref == name and not (path == home and first <= line <= last)
+            for ref, path, line in refs
         )
         if not used:
             unused.append(f"{home.relative_to(ROOT)}:{first} {name}")

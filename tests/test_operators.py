@@ -1990,27 +1990,6 @@ def test_zorder_key_is_pure_projection(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_cluster_by_zorder_ranges_disjoint(spark):
-    from honas_spark.operators.zorder import cluster_by_zorder
-
-    df = spark.createDataFrame(
-        [(i % 37, (i * 7) % 53) for i in range(2000)], "x long, y long"
-    )
-    out = cluster_by_zorder(df, ["x", "y"], num_partitions=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "rangepartitioning" in plan.lower()
-    parts = out.select("zkey").rdd.glom().collect()
-    ranges = [(min(r["zkey"] for r in p), max(r["zkey"] for r in p))
-              for p in parts if p]
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # contiguous, non-overlapping key ranges
-    # within each partition rows are sorted by the key
-    for p in parts:
-        ks = [r["zkey"] for r in p]
-        assert ks == sorted(ks)
-
-
 def test_zorder_key_validation():
     import pytest as _pytest
     from honas_spark.operators.zorder import zorder_key

@@ -2,7 +2,8 @@
 (`kernels.bloom_bits_set_packed`, `kernels.hll_count_packed`,
 `SketchState.packed_stats`) equal the unpack-then-count reference on
 dense, sparse, empty and full Bloom rows, HLLs from 0 to 10^6 keys,
-registers of 40 and more, and the reference `.hs` fixture states."""
+registers of 40 and more, and the reference `.hs` fixture states; and
+the search result's per-filter block is built from them in one pass."""
 
 import numpy as np
 import pandas as pd
@@ -185,3 +186,100 @@ def test_probe_rows_match_unpacked_reference():
         assert masks[i].tolist() == m.tolist(), i
         assert (bits[i], est_c[i], est_i[i]) == (
             s["total_bits_set"], s["est_clients"], s["est_items"]), i
+
+
+def _sketch_table(spark, group_ddl, rows):
+    """A sketch DataFrame from (group values, SketchState) pairs."""
+    from honas_spark.operators.sketch_agg import (
+        SKETCH_VALUE_COLS, SKETCH_VALUE_FIELDS,
+    )
+
+    def value(v):
+        return v.to_pydatetime() if isinstance(v, pd.Timestamp) else v
+
+    return spark.createDataFrame(
+        [(*g, *(value(st.to_fields()[c]) for c in SKETCH_VALUE_COLS))
+         for g, st in rows],
+        f"{group_ddl}, {SKETCH_VALUE_FIELDS}",
+    )
+
+
+def _filters_of(st: SketchState) -> list:
+    """The reference's per-filter block from the unpacked state's stats."""
+    s = st.stats()
+    return [
+        {"number_of_bits_set": b, "estimated_number_of_host_names": e,
+         "actual_false_positive_rate": "%.10f" % fpr}
+        for b, e, fpr in zip(
+            s["bits_set"], s["est_items_per_filter"], s["actual_fpr"])
+    ]
+
+
+def _stats_jobs(spark, fn):
+    """-> (fn(), number of Spark jobs fn ran)."""
+    sc = spark.sparkContext
+    group = f"stats-jobs-{id(fn)}"
+    sc.setJobGroup(group, "count the jobs of one call")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("path", [
+    "tests/data/reference_golden.hs", "tests/data/reference_golden_multi.hs",
+])
+def test_general_information_filters_match_hs_reference(spark, path):
+    """One per-filter block: the sketch-table path (`general_information`)
+    and the .hs header path (`search_result_json_reference`) give the
+    same `filters` list, and both equal the unpacked state's stats."""
+    import datetime as dt
+    import json
+
+    from honas_spark.search import (
+        general_information, run_search, search_result_json_reference,
+    )
+
+    spec, st, h = import_hs_state(path)
+    table = _sketch_table(
+        spark, "window_start timestamp", [((dt.datetime(2018, 7, 1),), st)]
+    )
+    info, jobs = _stats_jobs(
+        spark, lambda: general_information(table, spec, ["window_start"])
+    )
+    assert jobs == 1
+    key_df, group_df = run_search(table, spec, {}, ["window_start"])
+    ref = json.loads(search_result_json_reference(key_df, group_df, spec, h))
+    assert [r["filters"] for r in info] == [ref["filters"]] == [
+        _filters_of(st)
+    ]
+
+
+def test_general_information_rows_keep_their_own_filters(spark):
+    """Two sketch rows whose group columns repeat one key: each row's
+    block holds exactly its own F filters, from one Spark job."""
+    import datetime as dt
+
+    from honas_spark.search import general_information
+
+    spec = SketchSpec(m_bits=1 << 12, k=3, num_filters=3, filters_per_user=1)
+    rng = np.random.default_rng(11)
+    states = []
+    for n in (10, 400):
+        st = SketchState(spec)
+        st.update([rng.bytes(32) for _ in range(n)],
+                  client_hashes=rng.integers(
+                      0, 2**63, n, dtype=np.int64).astype(np.uint64))
+        st.first_ts = st.last_ts = dt.datetime(2024, 1, 1)
+        states.append(st)
+    table = _sketch_table(spark, "g int", [((1,), st) for st in states])
+    info, jobs = _stats_jobs(
+        spark, lambda: general_information(table, spec, ["g"])
+    )
+    assert [r["g"] for r in info] == [1, 1]
+    for r in info:
+        assert len(r["filters"]) == spec.num_filters
+    by_rows = {r["number_of_requests"]: r["filters"] for r in info}
+    assert by_rows == {st.n_rows: _filters_of(st) for st in states}
+    assert jobs == 1

@@ -213,11 +213,14 @@ def test_checkpoint_failed_recommit_keeps_previous_version(
         real_rename(src, dst)
 
     # a different, two-row version of the window
-    both = spark.createDataFrame(before, table.schema)
+    both = spark.createDataFrame(before, table.schema).withColumn(
+        "window_start", F.lit(w)
+    )
+    fields = {"spec": SPEC.to_dict(), "input_fingerprint": "fp"}
     with monkeypatch.context() as m:
         m.setattr(os, "rename", failing_rename)
         with pytest.raises(OSError, match="simulated crash"):
-            CP.commit_window(root, w, both, SPEC, "fp", {}, run_id="b")
+            CP.write_windows(root, both, "window_start", fields, run_id="b")
     after = CP.read_checkpoint(spark, root).collect()
     assert sorted(r["window_start"] for r in after) == sorted(
         r["window_start"] for r in before

@@ -1,13 +1,13 @@
 """BM25 ranked retrieval: exact scores vs a local reference
-implementation, integer-exact selection, deterministic top-k, and the
-zero-shuffle scoring-projection plan."""
+implementation, integer-exact selection, and the zero-shuffle
+scoring-projection plan."""
 
 import math
 
 import pytest
 from pyspark.sql import functions as F
 
-from honas_spark.operators.retrieval import bm25_scores, bm25_topk
+from honas_spark.operators.retrieval import bm25_scores
 
 DOCS = [
     (1, "hash join hash join scan"),
@@ -72,16 +72,6 @@ def test_bm25_no_hit_docs_excluded_and_higher_tf_wins(spark):
     assert all(r["score"] > 0 for r in rows.values())
 
 
-def test_bm25_topk_deterministic_tiebreak(spark):
-    # two identical docs tie exactly -> id asc decides
-    df = spark.createDataFrame(
-        [(10, "hash scan"), (2, "hash scan"), (5, "other")],
-        ["doc_id", "text"],
-    )
-    top = bm25_topk(df, "doc_id", "text", ["hash"], k=1).collect()
-    assert [r["doc_id"] for r in top] == [2]
-
-
 def test_bm25_scoring_plan_has_no_exchange(spark):
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
     out = bm25_scores(df, "doc_id", "text", TERMS)
@@ -97,5 +87,3 @@ def test_bm25_validation(spark):
         bm25_scores(df, "doc_id", "text", ["a", "a"])
     with pytest.raises(ValueError):
         bm25_scores(df, "doc_id", "text", ["a"], b=1.5)
-    with pytest.raises(ValueError):
-        bm25_topk(df, "doc_id", "text", ["a"], k=0)
