@@ -53,6 +53,15 @@ def get_spark(
         # concurrent scan tasks on ~1 GB inputs to use every core
         .config("spark.sql.files.maxPartitionBytes", "33554432")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # throughput collector for the driver JVM (in local mode also the
+        # executor): with G1 and a few-GB heap, MB-sized sketch rows and
+        # Tungsten pages are humongous old-gen allocations, and a cached
+        # table near G1's marking threshold sends some runs into
+        # back-to-back concurrent marking that adds up to half again to
+        # their CPU time.
+        # defaultJavaOptions is prepended to, not replaced by,
+        # --driver-java-options / spark.driver.extraJavaOptions.
+        .config("spark.driver.defaultJavaOptions", "-XX:+UseParallelGC")
         # shuffle spill to tmpfs: this box has one virtual disk shared by
         # all cores, which serializes shuffle I/O; a real cluster has
         # NVMe per executor.  RAM-backed local dirs remove the artifact.
