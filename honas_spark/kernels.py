@@ -335,8 +335,10 @@ def bloom_build(filt: np.ndarray, offsets: np.ndarray) -> None:
         return
     m_bits = filt.size * 8
     if bits.size * 32 > m_bits:
-        # dense batch: histogram + packbits, O(m) fully vectorized
-        hist = np.bincount(bits, minlength=m_bits) > 0
+        # dense batch: bool scatter + packbits, O(m) fully vectorized;
+        # m_bits bytes of scratch (an int64 bincount took 8x that)
+        hist = np.zeros(m_bits, dtype=bool)
+        hist[bits] = True
         np.bitwise_or(filt, np.packbits(hist, bitorder="little"), out=filt)
     else:
         # sparse batch: unbuffered scatter-OR, O(bits) — avoids an O(m)

@@ -109,7 +109,13 @@ def group_segments(pdf: pd.DataFrame, group_cols: Sequence[str]):
     Positional segments instead of pandas sub-frames: groupby
     iteration, per-group frame slicing and per-group Series reductions
     cost ~50-150 us per group, which dominates at thousands of groups.
-    Needs at least one group column."""
+    Needs at least one group column.  A float64 key column is an
+    integral one widened by a NULL (group_fields_ddl rejects float
+    keys): a value at or above 2^53 in it may be rounded, so it raises."""
+    for c in group_cols:
+        if pdf[c].dtype.kind == "f" and (pdf[c].abs() >= 2.0 ** 53).any():
+            raise ValueError(f"group column {c!r} holds an integer >= 2^53"
+                             " that a NULL widened to float64 (inexact)")
     gb = pdf.groupby(list(group_cols), sort=False, dropna=False)
     gnum = gb.ngroup().to_numpy()
     order = np.argsort(gnum, kind="stable")

@@ -4,9 +4,11 @@
   (src/bloom.c:40-113): Python big-int multiply, entropy re-add on a
   32- or 64-bit lane 0, and the collision-shift insertion with its
   early exit.
+* bloom_build's dense branch vs the sparse branch's scatter-OR.
 * bloom_pack / hll_pack / cms_pack vs a plain np.flatnonzero sparse
   encoding, plus round-trips through the fold/unpack decoders.
-* hashes_to_limbs rejects digests that would misalign rows.
+* hashes_to_limbs, and the build's Arrow ingest, reject digests that
+  would misalign rows.
 """
 
 import struct
@@ -106,6 +108,25 @@ def test_bloom_offsets_across_chunk_boundary(n, n_limbs):
     assert np.array_equal(got, want)
     # offsets are distinct and sorted in every row
     assert (np.diff(got, axis=1) > 0).all()
+
+
+def test_bloom_build_dense_matches_scatter_or():
+    """At m = 2^21, 10^6 offsets take the dense branch (bool scatter +
+    packbits); it must set exactly the bits the sparse branch's
+    np.bitwise_or.at sets, duplicates and both end bits included."""
+    m = 1 << 21
+    rng = np.random.default_rng(21)
+    offs = rng.integers(0, m, 10**6, dtype=np.int64)
+    offs[:4] = [0, m - 1, 0, m - 1]
+    offs[4:1000] = offs[1000:1996]  # more duplicates
+    assert offs.size * 32 > m  # the dense branch
+    got = K.bloom_zero(m)
+    got[5] = 0xA5  # bits already set stay set
+    want = got.copy()
+    K.bloom_build(got, offs)
+    np.bitwise_or.at(want, offs >> 3, (1 << (offs & 7)).astype(np.uint8))
+    assert np.array_equal(got, want)
+    assert got[0] & 1 and got[-1] & 0x80
 
 
 # ---------------------------------------------------------------------------
@@ -262,4 +283,17 @@ def test_build_sketches_null_key_sha_is_a_clear_error(spark):
         "g int, key_sha binary",
     )
     with pytest.raises(Exception, match="NULL key_sha"):
+        build_sketches(df, spec, ["g"]).collect()
+
+
+def test_build_sketches_short_key_sha_is_a_clear_error(spark):
+    from honas_spark import SketchSpec
+    from honas_spark.operators import build_sketches
+
+    spec = SketchSpec(m_bits=1 << 12, k=4, cms_width=64, kll_k=32)
+    df = spark.createDataFrame(
+        [(1, bytes(32)), (1, bytes(31)), (2, bytes(range(32)))],
+        "g int, key_sha binary",
+    )
+    with pytest.raises(Exception, match="fewer than hash_len=32"):
         build_sketches(df, spec, ["g"]).collect()
