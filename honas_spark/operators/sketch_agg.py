@@ -5,7 +5,7 @@ Re-expresses honas's single-process streaming aggregation
 as a two-phase Spark aggregation designed for 100 TB inputs:
 
   Phase 1 (map-side combine, NO shuffle of raw keys):
-      df.mapInArrow(build_partials) — each input partition folds all its
+      df.mapInPandas(build_partials) — each input partition folds all its
       rows into one partial SketchState per (window, group) it sees, and
       emits only those partial rows.  Shuffle volume drops from O(keys) to
       O(partitions x groups x sketch_bytes).  This also makes key-skew a
@@ -40,8 +40,6 @@ from typing import Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from .. import kernels as K
@@ -55,11 +53,6 @@ SKETCH_VALUE_FIELDS = (
 )
 SKETCH_VALUE_COLS = tuple(
     f.split()[0] for f in SKETCH_VALUE_FIELDS.split(",")
-)
-# their Arrow types out of the build (Spark reads µs timestamps as UTC)
-_VALUE_SCHEMA = pa.schema(
-    [(c, pa.binary()) for c in SKETCH_VALUE_COLS[:5]] + [("n_rows", pa.int64())]
-    + [(c, pa.timestamp("us", "UTC")) for c in SKETCH_VALUE_COLS[6:]]
 )
 
 # cap on the build's grouped-scatter scratch (HLL + CMS matrices of one
@@ -231,16 +224,15 @@ def build_sketches(
     )
     scatter_groups = max(1, _SCATTER_MAX_BYTES // max(1, group_scratch))
 
-    def build_partials(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # buffer WHOLE Arrow batches and group once per bulk flush:
         # the per-batch pandas groupby chop paid a per-group
         # frame-slice cost that scaled with rows x batches (it was
         # the largest worker-profile item at the 5M-row build shape),
-        # where one grouping pass over the buffered rows is a
+        # where one group_segments pass over the buffered rows is a
         # few vectorized calls total.
         states: dict[tuple, SketchState] = {}
-        key_rows: list[pa.Table] = []  # group columns of `states`, in order
-        pending: list[pa.RecordBatch] = []
+        pending: list[pd.DataFrame] = []
         pending_rows = 0
 
         def flush_all_bulk() -> None:
@@ -250,7 +242,7 @@ def build_sketches(
             numpy-loop setup) once per (group, filter) — ruinous when
             a partition holds tens of thousands of tiny groups (the
             high-group-cardinality shape).  Here the grouping
-            (dictionary codes), the hash limbs, the filter-subset
+            (group_segments), the hash limbs, the filter-subset
             selectors and ONE bloom_offsets call per filter cover all
             groups at once (rows are independent, so per-row results
             are bit-identical); HLL/CMS scatter in a few chunks of
@@ -262,57 +254,58 @@ def build_sketches(
             nonlocal pending, pending_rows
             if not pending:
                 return
-            big = pa.Table.from_batches(pending).combine_chunks()
-            pending, pending_rows = [], 0
-            col = {c: big.column(c).chunk(0) for c in big.column_names}
-            # groups numbered in first-appearance order; a NULL key is a
-            # group of its own and long keys stay exact (no float64)
-            gnum = np.zeros(big.num_rows, dtype=np.int64)
-            for c in group_cols:
-                enc = pc.dictionary_encode(col[c], null_encoding="encode")
-                gnum = gnum * len(enc.dictionary) + enc.indices.to_numpy()
-                gnum = pc.dictionary_encode(gnum).indices.to_numpy().astype(np.int64)
-            G = int(gnum.max()) + 1
-            order = np.argsort(gnum, kind="stable")
-            codes = gnum[order]
-            seg = np.searchsorted(codes, np.arange(G + 1))
-            heads = big.select(group_cols).take(order[seg[:-1]])
-            sts, new = [], []
-            for gi, gk in enumerate(zip(*heads.to_pydict().values())):
+            big = (
+                pending[0]
+                if len(pending) == 1
+                else pd.concat(pending, ignore_index=True)
+            )
+            pending = []
+            pending_rows = 0
+            gb, keys, order, seg = group_segments(big, group_cols)
+            G = len(keys)
+            codes = np.repeat(np.arange(G), np.diff(seg))
+            sts = []
+            for gk in keys:
                 st = states.get(gk)
                 if st is None:
                     st = states[gk] = SketchState(spec)
-                    new.append(gi)
                 sts.append(st)
-            key_rows.append(heads.take(np.array(new, dtype=np.int64)))
             limbs = item_h64 = None
             if comp & {"bloom", "hll", "cms"}:
-                limbs = _key_limbs(col[key_sha_col], spec.hash_len)[order]
+                limbs = K.hashes_to_limbs(
+                    list(big[key_sha_col].to_numpy()[order]),
+                    spec.hash_len,
+                )
                 item_h64 = limbs[:, :2].copy().view("<u8").reshape(-1)
             if client_hash_col:
-                ch = col[client_hash_col].to_numpy()[order].view(np.uint64)
-            elif client_col:  # each distinct client once, NULL as "None"
-                enc = pc.dictionary_encode(col[client_col], null_encoding="encode")
-                uniq = np.array(enc.dictionary.to_pylist(), dtype=object)
-                ch = K.murmur64a_series(uniq)[enc.indices.to_numpy()[order]]
+                ch = big[client_hash_col].to_numpy(
+                    dtype=np.int64
+                )[order].view(np.uint64)
+            elif client_col:
+                ch = K.murmur64a_series(
+                    big[client_col].to_numpy()[order]
+                )
             else:
-                ch = np.zeros(big.num_rows, dtype=np.uint64)
+                ch = np.zeros(len(big), dtype=np.uint64)
             vals = (
-                pc.cast(col[value_col], pa.float64(), safe=False)
-                .to_numpy(zero_copy_only=False)[order]  # NULL -> NaN
+                big[value_col].to_numpy(dtype=np.float64)[order]
                 if value_col and "kll" in comp
                 else None
             )
-            firsts = lasts = [None] * G
-            if ts_col:  # int64 microseconds; NULL skipped, None if all
-                us, ext = col[ts_col].cast(pa.int64()), []
-                for red, fill in ((np.minimum, 2**63 - 1), (np.maximum, -2**63)):
-                    v = red.reduceat(pc.fill_null(us, fill).to_numpy()[order], seg[:-1])
-                    ext.append(np.where(v == fill, None, v))
-                firsts, lasts = ext
+            firsts = lasts = None
+            if ts_col:
+                # one vectorized skipna min/max per flush (agg row g
+                # is group g, see group_segments)
+                tstats = gb.agg(
+                    _f=(ts_col, "min"), _l=(ts_col, "max")
+                )
+                firsts = tstats["_f"].to_numpy()
+                lasts = tstats["_l"].to_numpy()
             for gi, st in enumerate(sts):
                 st.fold_counters(
-                    seg[gi + 1] - seg[gi], firsts[gi], lasts[gi]
+                    seg[gi + 1] - seg[gi],
+                    None if firsts is None else firsts[gi],
+                    None if lasts is None else lasts[gi],
                 )
                 if vals is not None:
                     st.kll.add(vals[seg[gi]: seg[gi + 1]])
@@ -366,18 +359,18 @@ def build_sketches(
                                 st.filters[fi], offs[lows[gi]: highs[gi]]
                             )
 
-        for batch in batches:
-            if batch.num_rows == 0:
+        for pdf in batches:
+            if pdf.empty:
                 continue
-            pending.append(batch)
-            pending_rows += batch.num_rows
+            pending.append(pdf)
+            pending_rows += len(pdf)
             if pending_rows >= bulk_flush_rows:
                 flush_all_bulk()
         flush_all_bulk()
-        if states:  # empty partitions yield nothing
-            yield _states_to_batch(states, pa.concat_tables(key_rows))
+        if states:  # empty partitions yield nothing (Arrow needs typed cols)
+            yield _states_to_pdf(states, group_cols)
 
-    partials = slim.mapInArrow(build_partials, schema=out_schema)
+    partials = slim.mapInPandas(build_partials, schema=out_schema)
 
     if mode == "shuffle_keys" and not fanout:
         # the pre-repartition guarantees each group lives in exactly
@@ -533,31 +526,6 @@ def _merge_by_group(spec: SketchSpec, group_cols: list):
 
 def _states_to_pdf(states: dict, group_cols: list) -> pd.DataFrame:
     return states_frame(states, group_cols, SketchState.to_fields)
-
-
-def _states_to_batch(states: dict, keys: pa.Table) -> pa.RecordBatch:
-    """One typed row per state: its group columns (row i of `keys`
-    belongs to the i-th state), then SKETCH_VALUE_FIELDS."""
-    vals = pa.Table.from_pylist(
-        [st.to_fields() for st in states.values()], schema=_VALUE_SCHEMA
-    )
-    return pa.Table.from_arrays(
-        keys.columns + vals.columns, keys.column_names + vals.column_names
-    ).combine_chunks().to_batches()[0]
-
-
-def _key_limbs(digests: pa.Array, hash_len: int) -> np.ndarray:
-    """(N, hash_len//4) uint32 limbs of a binary digest column: a
-    zero-copy view of its data buffer when every digest is hash_len
-    bytes, else K.hashes_to_limbs (which keeps the first hash_len bytes
-    of longer digests and raises on NULL or shorter ones)."""
-    n = len(digests)
-    offs = np.frombuffer(digests.buffers()[1], np.int32, n + 1, 4 * digests.offset)
-    if digests.null_count or (np.diff(offs) != hash_len).any():
-        return K.hashes_to_limbs(digests.to_pylist(), hash_len)
-    return np.frombuffer(
-        digests.buffers()[2], "<u4", n * hash_len // 4, int(offs[0])
-    ).reshape(n, hash_len // 4)
 
 
 def rollup_hierarchy(

@@ -1,9 +1,11 @@
-"""The sketch build's Arrow ingest (`mapInArrow` build_partials) on the
-inputs where Arrow and pandas conversions part ways: NULL string and
-timestamp group keys, a NULL client, a NULL event time, NaN and NULL
-values, a non-UTC session zone, and long group keys beyond 2^53 next to
-a NULL.  Each build runs with Spark's default Arrow batches and with one
-row per batch."""
+"""The sketch build's ingest at the Arrow boundary into the Python
+workers, on the inputs where Arrow and pandas conversions part ways:
+NULL string and timestamp group keys, a NULL client, a NULL event time
+(as TIMESTAMP and as TIMESTAMP_NTZ), NaN and NULL values, a non-UTC
+session zone, and long group keys beyond 2^53 next to a NULL.  Each
+build runs with Spark's default Arrow batches and with one row per
+batch; the pinned digests hold any change of the build's data
+conversion to the rows it builds now."""
 
 import hashlib
 from contextlib import contextmanager
@@ -23,7 +25,7 @@ DAY = 86_400_000_000
 SKETCH_COLS = ("filters", "hll_clients", "hll_items", "cms", "n_rows")
 OUT_COLS = ("s", "t") + SKETCH_COLS + ("kll", "first_ts", "last_ts")
 # SHA-256 (first 16 hex digits) of each column of the shuffle_keys rows,
-# sorted by group, as the pandas ingest built them
+# sorted by group, as the mapInPandas build makes them
 PINNED = {
     "s": "ae4fe6ae299dba69",
     "t": "4f90db47025b8571",
@@ -91,14 +93,14 @@ def _reference(rows) -> dict:
     return out
 
 
-def _build_rows(spark, mode: str) -> list:
+def _build_rows(spark, mode: str, ts_type: str) -> list:
     df = spark.createDataFrame(
         _rows(),
         "s string, t long, key string, client string, ts long, v double",
     ).select(
         "s", F.timestamp_micros("t").alias("t"),
         F.unhex(F.sha2("key", 256)).alias("key_sha"), "client",
-        F.timestamp_micros("ts").alias("ts"), "v",
+        F.timestamp_micros("ts").cast(ts_type).alias("ts"), "v",
     )
     sk = build_sketches(df, SPEC, ["s", "t"], client_col="client",
                         ts_col="ts", value_col="v", mode=mode)
@@ -117,14 +119,18 @@ def _build_rows(spark, mode: str) -> list:
     ))
 
 
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
 @pytest.mark.parametrize("batch", [None, "1"])
 @pytest.mark.parametrize("mode", ["map_combine", "shuffle_keys"])
-def test_arrow_ingest_matches_driver_state(spark, mode, batch):
+def test_arrow_ingest_matches_driver_state(spark, mode, batch, ts_type):
+    """A TIMESTAMP_NTZ event time holds the session zone's wall clock
+    (here the cast of the TIMESTAMP column), and first_ts / last_ts read
+    it in that zone: both columns give the same instants."""
     settings = {"spark.sql.session.timeZone": "America/Los_Angeles"}
     if batch:
         settings["spark.sql.execution.arrow.maxRecordsPerBatch"] = batch
     with _conf(spark, settings):
-        rows = _build_rows(spark, mode)
+        rows = _build_rows(spark, mode, ts_type)
     want = _reference(_rows())
     assert sorted(want, key=str) == sorted(
         ((r["s"], r["t"]) for r in rows), key=str
@@ -146,8 +152,7 @@ def test_arrow_ingest_matches_driver_state(spark, mode, batch):
 BIG = 1 << 53
 
 
-def _long_keyed(spark):
-    keys = [BIG + 1, BIG + 2, BIG + 3, None, BIG]
+def _long_keyed(spark, keys):
     df = spark.createDataFrame(
         [(g, f"k{i}", T0) for i, g in enumerate(keys)],
         "g long, key string, t long",
@@ -158,26 +163,37 @@ def _long_keyed(spark):
     )
 
 
-def test_build_keeps_long_group_keys_exact(spark):
+def test_build_rejects_inexact_long_group_keys(spark):
     """One shuffle partition puts the NULL key in the same Arrow batch as
     the keys above 2^53, which a pandas worker receives as float64:
-    2^53 + 1 rounded onto 2^53 and the two groups merged."""
+    2^53 + 1 would round onto 2^53 and the two groups merge, so the
+    build raises a ValueError naming the column.  Without the NULL the
+    keys stay int64 and exact."""
+    keys = [BIG + 1, BIG + 2, BIG + 3, BIG]
     with _conf(spark, {"spark.sql.shuffle.partitions": "1"}):
+        with pytest.raises(Exception, match="group column 'g' holds an"):
+            build_sketches(_long_keyed(spark, keys + [None]), SPEC, ["g"],
+                           mode="shuffle_keys").collect()
         out = build_sketches(
-            _long_keyed(spark), SPEC, ["g"], mode="shuffle_keys"
+            _long_keyed(spark, keys), SPEC, ["g"], mode="shuffle_keys"
         ).select("g", "n_rows").collect()
-    assert sorted((r.g is not None, r.g or 0, r.n_rows) for r in out) == [
-        (False, 0, 1), (True, BIG, 1), (True, BIG + 1, 1),
-        (True, BIG + 2, 1), (True, BIG + 3, 1),
+    assert sorted((r.g, r.n_rows) for r in out) == [
+        (BIG, 1), (BIG + 1, 1), (BIG + 2, 1), (BIG + 3, 1),
     ]
 
 
 def test_merge_rejects_inexact_long_group_keys(spark):
-    """The merge phase still runs in pandas workers: a long key above
-    2^53 beside a NULL raises a ValueError naming the column instead of
+    """Two builds that each keep their keys exact (one without a NULL,
+    one of only the NULL key) meet in one rollup merge batch, where the
+    long column turns float64: a ValueError names the column instead of
     merging rounded keys."""
     with _conf(spark, {"spark.sql.shuffle.partitions": "1"}):
-        sk = build_sketches(_long_keyed(spark), SPEC, ["window_start", "g"],
-                            mode="shuffle_keys")
+        sk = [
+            build_sketches(_long_keyed(spark, keys), SPEC,
+                           ["window_start", "g"], mode="shuffle_keys")
+            for keys in ([BIG + 1, BIG + 2, BIG], [None])
+        ]
+        assert sk[0].count() == 3 and sk[1].count() == 1
         with pytest.raises(Exception, match="group column 'g' holds an"):
-            rollup_sketches(sk, SPEC, "window_start", "1 day", ["g"]).collect()
+            rollup_sketches(sk[0].unionByName(sk[1]), SPEC, "window_start",
+                            "1 day", ["g"]).collect()

@@ -7,7 +7,7 @@
 * bloom_build's dense branch vs the sparse branch's scatter-OR.
 * bloom_pack / hll_pack / cms_pack vs a plain np.flatnonzero sparse
   encoding, plus round-trips through the fold/unpack decoders.
-* hashes_to_limbs, and the build's Arrow ingest, reject digests that
+* hashes_to_limbs, and build_sketches through it, reject digests that
   would misalign rows.
 """
 

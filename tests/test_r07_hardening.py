@@ -419,7 +419,7 @@ def test_multi_flush_states_own_their_arrays(spark, monkeypatch, cap_groups):
     SketchState.update — also when the scatter cap splits every flush
     into chunks of `cap_groups` groups."""
     import numpy as np
-    import pyarrow as pa
+    import pandas as pd
 
     from honas_spark import SketchSpec, SketchState
     from honas_spark import kernels as K
@@ -441,18 +441,18 @@ def test_multi_flush_states_own_their_arrays(spark, monkeypatch, cap_groups):
     schema = "g int, key_sha binary, ch long"
     tiny = spark.createDataFrame([(0, b"\0" * 32, 0)], schema)
     fns = []
-    orig_map = type(tiny).mapInArrow
+    orig_map = type(tiny).mapInPandas
 
     def spy(self, fn, *a, **kw):
         fns.append(fn)
         return orig_map(self, fn, *a, **kw)
 
-    monkeypatch.setattr(type(tiny), "mapInArrow", spy)
+    monkeypatch.setattr(type(tiny), "mapInPandas", spy)
     seen = []
-    orig_batch = sa._states_to_batch
+    orig_pdf = sa._states_to_pdf
     monkeypatch.setattr(
-        sa, "_states_to_batch",
-        lambda states, keys: seen.append(states) or orig_batch(states, keys),
+        sa, "_states_to_pdf",
+        lambda states, gc: seen.append(states) or orig_pdf(states, gc),
     )
     sa.build_sketches(tiny, spec, ["g"], client_hash_col="ch")
     build_partials = fns[0]
@@ -468,12 +468,9 @@ def test_multi_flush_states_own_their_arrays(spark, monkeypatch, cap_groups):
     raw = rng.bytes(32 * n)
     keys = [raw[i:i + 32] for i in range(0, 32 * n, 32)]
     ch = rng.integers(0, 1 << 62, 50)[rng.integers(0, 50, n)]
-    rb = pa.RecordBatch.from_pydict({
-        "g": pa.array(g), "key_sha": pa.array(keys, pa.binary()),
-        "ch": pa.array(ch, pa.int64()),
-    })
-    batches = [rb.slice(i, 50_000) for i in range(0, n, 50_000)]
-    out = pa.Table.from_batches(build_partials(iter(batches))).to_pandas()
+    pdf = pd.DataFrame({"g": g, "key_sha": keys, "ch": ch})
+    batches = [pdf.iloc[i:i + 50_000] for i in range(0, n, 50_000)]
+    out = pd.concat(list(build_partials(iter(batches))), ignore_index=True)
 
     # flush groups: 30 (groups 0-29), then 40, then 40
     if cap_groups:
